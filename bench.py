@@ -706,8 +706,9 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
 
         def gate_sq8():
             _noop(
-                similarity.incremental_semantic_dedup_sq8(
-                    g_batch, emb5, g_cents, g_idx, g_bounds,
+                similarity.semantic_dedup_gate(
+                    g_batch, emb5, g_cents, g_idx, gate_kind="sq8",
+                    sq8_bounds=g_bounds,
                     threshold=0.95, n_probe=2, impl="blas",
                 )
             )

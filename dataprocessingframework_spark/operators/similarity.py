@@ -17,6 +17,9 @@ in the hot loop.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import Any, NamedTuple
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1344,7 +1347,7 @@ def _sq8_dequant_dot(
 def sq8_gate_margin(
     mins: list, maxs: list, min_vnorm: float
 ) -> float:
-    """A SOUND stage-1 margin for :func:`incremental_semantic_dedup_sq8`:
+    """A SOUND stage-1 margin for the SQ8 rung of :func:`semantic_dedup_gate`:
     with ``margin >= sq8_gate_margin(...)`` the two-stage compressed
     gate provably equals the exact gate.
 
@@ -1715,7 +1718,7 @@ def materialize_pq_index(
             norm(recon).alias("vnorm"),
             # per-row reconstruction residual ||v - v̂||: the sound
             # per-vector margin input for the compressed PQ gate
-            # (8 B/row; see incremental_semantic_dedup_pq)
+            # (8 B/row; see semantic_dedup_gate's pq rung)
             norm(
                 F.zip_with(
                     F.col("embedding"), recon, lambda a, b: a - b
@@ -2257,7 +2260,7 @@ def materialize_ivf_index(
     query carries a FULL DuckDB oracle.
 
     ``clamp_stats`` (sq8 only, r12 — the runtime signal for the
-    append-drift caveat in :func:`incremental_semantic_dedup_sq8`):
+    append-drift caveat in :func:`semantic_dedup_gate`):
     pass a dict and it is filled with ``n_rows`` (encoded rows),
     ``rows_clamped`` (rows with >= 1 dimension outside the stored
     bounds — those dims clamp to the code rails and their dequant
@@ -2276,7 +2279,7 @@ def materialize_ivf_index(
     ||v[d_p:]||, ``vnorm``) — a dim/d_p payload cut with NO training,
     codebooks, or quantization grid. The point is the per-pair
     Cauchy-Schwarz bound cos(b,v) <= (<b_p,v_p> + ||b_r||·||v_r||) /
-    (||b||·||v||), which :func:`incremental_semantic_dedup_prefix`
+    (||b||·||v||), which the prefix rung of :func:`semantic_dedup_gate`
     uses as a SOUND stage-1 margin (tighter than SQ8's global bound:
     it adapts per pair, and is exact when either remainder is zero).
     Matryoshka-trained embeddings concentrate mass in the prefix, so
@@ -3000,7 +3003,6 @@ def incremental_semantic_dedup(
     threshold: float = 0.95,
     n_probe: int = 2,
     impl: str = "jvm",
-    broadcast_batch: bool = True,
     corpus_cells: DataFrame | None = None,
     max_cell_rows: int | None = 100_000,
 ) -> DataFrame:
@@ -3032,14 +3034,10 @@ def incremental_semantic_dedup(
     are always kept. Within-batch duplicates are kept (the
     incremental contract). Returns surviving batch rows, all columns.
 
-    ``broadcast_batch=True`` (default — the batch is by contract the
-    small arriving side) broadcasts the probe side, so the cell join
-    never shuffles the corpus. This matters doubly here because the
-    join key has only n_cells distinct values: a shuffle join on it
-    would concentrate each cell's corpus rows in one task. If a bulk
-    backfill makes the batch genuinely large, pass False and size
-    ``n_cells`` in the thousands so the shuffle join has key
-    cardinality to spread.
+    The jvm path broadcasts the probe side (the batch is by contract
+    the small arriving side), so the cell join never shuffles the
+    corpus: its key has only n_cells distinct values, and a shuffle
+    join on it would concentrate each cell's corpus rows in one task.
 
     ``max_cell_rows`` (blas path, default ON) hard-bounds per-task
     memory against quantizer skew: corpus cells above the cap are
@@ -3144,9 +3142,8 @@ def incremental_semantic_dedup(
             .distinct()
         )
     else:
-        b_side = F.broadcast(b) if broadcast_batch else b
         dup_ids = (
-            c.join(b_side, on="cell")
+            c.join(F.broadcast(b), on="cell")
             .filter(F.col("c_id") != F.col("b_id"))
             .filter(
                 dot(F.col("b_vec"), F.col("c_vec"))
@@ -3157,211 +3154,6 @@ def incremental_semantic_dedup(
             .distinct()
         )
     return batch.join(dup_ids, on=id_col, how="left_anti")
-
-
-def incremental_semantic_dedup_sq8(
-    batch: DataFrame,
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    index: DataFrame,
-    sq8_bounds: tuple[list, list],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    margin: float | None = None,
-    n_probe: int = 2,
-    impl: str = "jvm",
-    pushdown_candidate_ids: bool = False,
-    max_cell_rows: int | None = 100_000,
-    gate_stats: dict | None = None,
-) -> DataFrame:
-    """The semantic dedup gate over an SQ8-COMPRESSED corpus index —
-    :func:`incremental_semantic_dedup` re-shaped for the deployment
-    where the corpus index lives on object storage at 100 TB scale
-    and scanning float vectors per arriving batch is the dominant
-    cost. Two stages, with the exact gate's semantics provably
-    preserved:
-
-    1. **Compressed shortlist**: batch rows fan to their ``n_probe``
-       nearest cells and score against the index's packed SQ8 codes
-       (the ~3.6-7.7x smaller payload is all that's read); pairs with
-       approx cosine >= ``threshold - margin`` become candidates.
-    2. **Exact recheck**: ONLY the candidate corpus ids' float
-       vectors are fetched (broadcast semi-lookup — the float corpus
-       is touched through candidate ids, never scanned) and the drop
-       decision is made on the EXACT cosine >= ``threshold``.
-
-    With ``margin=None`` (default) a SOUND margin is derived from the
-    stored bounds and the index's minimum vnorm via
-    :func:`sq8_gate_margin`, making the output IDENTICAL to the
-    exact gate (pinned in tests): stage 1 can only over-approximate
-    the candidate set, and stage 2 is exact. Pass a smaller measured
-    margin to trade a bounded false-negative rate for a shorter
-    shortlist when the sound bound is too loose for the corpus
-    (report the rate with the ``emb_gate_recall`` audit pattern).
-    Same-id pairs never count (replay contract), zero-norm batch
-    rows are always kept, within-batch duplicates are kept — all as
-    in the exact gate. ``index`` is a
-    ``materialize_ivf_index(sq8=True)`` table built with the SAME
-    ``centroids``; ``corpus`` is the accepted float corpus used only
-    for the recheck.
-
-    Soundness caveat for APPENDED indexes: the margin bound assumes
-    every stored vector lies within the persisted bounds (true by
-    construction for a fresh build — bounds are the corpus min/max).
-    ``materialize_ivf_index(mode='append')`` clamps out-of-range
-    batch values to the stored code rails, and a clamped dimension's
-    dequant error can exceed step/2, so a heavily drifted appended
-    vector may evade stage 1 — the failure direction is a MISSED
-    duplicate (row kept that the exact gate would drop), never a
-    false drop. Under distribution drift, widen ``margin`` or
-    rebuild the index so the bounds re-cover the corpus.
-
-    ``pushdown_candidate_ids`` (opt-in, same tradeoff as the LSH
-    probe-key pushdown): collect the distinct candidate corpus ids
-    and push them into the float corpus scan as an IN filter, so a
-    corpus laid out sorted/bucketed on ``id_col`` prunes row groups
-    instead of scanning id+vector columns end to end — the knob that
-    keeps the recheck's IO candidate-sized at 100 TB. Costs one
-    driver round-trip holding the distinct id list (candidate-set
-    bounded: ~|batch| x per-row shortlist); leave off for bulk
-    backfill batches.
-
-    ``impl``: 'jvm' scores stage 1 with the unrolled codegen fold —
-    bit-portable, the oracle-exact path. 'blas' cogroups per cell and
-    decodes+scores each cell as one vectorized shift/mask + matmul
-    (``max_cell_rows`` salting bounds group size, as in the float
-    gate) — the production default for big batches; numpy summation
-    order can move an ulp-borderline CANDIDATE, which the margin
-    slack absorbs — the kept set is still decided by the exact
-    stage 2 and equals the jvm path's."""
-    mins, maxs = sq8_bounds
-    if "codes" not in index.columns:
-        raise ValueError(
-            "index has no 'codes' column — build it with"
-            " materialize_ivf_index(sq8=True)"
-        )
-    if margin is None:
-        row = index.filter(F.col("vnorm") > 0).agg(
-            F.min("vnorm")
-        ).collect()[0]
-        if row[0] is None:
-            # no scoreable rows: stage 1 yields nothing, but any
-            # degenerate (vnorm<=0) rows still route to the exact
-            # recheck via _degenerate_recon_candidates below
-            margin = 0.0
-        else:
-            margin = sq8_gate_margin(mins, maxs, float(row[0]))
-    b = assign_cells(
-        batch.select(
-            F.col(id_col).alias("b_id"),
-            F.col(vec_col).alias("b_vec"),
-            norm(F.col(vec_col)).alias("b_norm"),
-        ).filter(F.col("b_norm") > 0),
-        centroids,
-        "b_id",
-        "b_vec",
-        n_probe=n_probe,
-        impl=impl,
-    )
-    c = index.filter(F.col("vnorm") > 0).select(
-        "cell",
-        F.col("vec_id").alias("c_id"),
-        "codes",
-        F.col("vnorm").alias("c_norm"),
-    )
-    if impl == "blas":
-        # cogrouped per-cell stage 1 (production default shape, like
-        # the float gate's blas path): decode the packed codes with
-        # ONE vectorized shift/mask per cell group and score as one
-        # matmul — the per-pair codegen fold below is the oracle-
-        # exact path but pays dim multiply-adds per candidate pair
-        # interpreted per row. Same max_cell_rows salting contract as
-        # incremental_semantic_dedup; numpy summation order can move
-        # a borderline candidate by an ulp, which the margin slack
-        # absorbs (stage 2 decides exactly either way).
-        import numpy as np
-        import pandas as pd
-
-        mins_a = np.array(mins, dtype=np.float64)
-        steps_a = (
-            np.array(maxs, dtype=np.float64) - mins_a
-        ) / float(SQ8_LEVELS)
-        dim = len(mins)
-        w_idx = np.arange(dim) // _SQ8_PER_WORD
-        shifts = (np.arange(dim) % _SQ8_PER_WORD) * 8
-        thr = threshold - margin
-        c_g, b_g, keys = _salt_cell_blocks(
-            c, b, "c_id", "cell", max_cell_rows
-        )
-
-        def stage1(cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "b_id": pd.Series([], dtype="int64"),
-                    "c_id": pd.Series([], dtype="int64"),
-                }
-            )
-            if len(cpdf) == 0 or len(bpdf) == 0:
-                return empty
-            words = np.stack(
-                [np.asarray(x, dtype=np.int64) for x in cpdf["codes"]]
-            )
-            codes = (words[:, w_idx] >> shifts) & 255
-            recon = mins_a + (codes.astype(np.float64) + 0.5) * steps_a
-            cn = cpdf["c_norm"].values.astype(np.float64)
-            cids = cpdf["c_id"].values
-            bids_all = bpdf["b_id"].values
-            outs = []
-            step = max(1, (1 << 24) // max(len(cpdf), 1))
-            for lo in range(0, len(bpdf), step):
-                bm = np.stack(
-                    bpdf["b_vec"].values[lo : lo + step]
-                ).astype(np.float64)
-                bn = bpdf["b_norm"].values[lo : lo + step].astype(
-                    np.float64
-                )
-                bids = bids_all[lo : lo + step]
-                sims = (bm @ recon.T) / np.outer(bn, cn)
-                mask = (sims >= thr) & (
-                    bids[:, None] != cids[None, :]
-                )
-                bi, ci = np.nonzero(mask)
-                if len(bi):
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "b_id": bids[bi].astype("int64"),
-                                "c_id": cids[ci].astype("int64"),
-                            }
-                        )
-                    )
-            return pd.concat(outs) if outs else empty
-
-        cand = (
-            c_g.groupby(*keys)
-            .cogroup(b_g.groupby(*keys))
-            .applyInPandas(stage1, schema="b_id long, c_id long")
-            .distinct()
-        )
-    else:
-        approx_cos = _sq8_dequant_dot("b_vec", "codes", mins, maxs) / (
-            F.col("b_norm") * F.col("c_norm")
-        )
-        # skinny (b_id, c_id) candidate pairs; distinct also collapses
-        # a crash-replayed append's duplicate index rows
-        cand = (
-            c.join(F.broadcast(b), on="cell")
-            .filter(F.col("c_id") != F.col("b_id"))
-            .filter(approx_cos >= F.lit(threshold - margin))
-            .select("b_id", "c_id")
-            .distinct()
-        )
-    cand = _degenerate_recon_candidates(index, b, cand)
-    return _exact_gate_recheck(
-        batch, corpus, cand, id_col, vec_col, threshold,
-        pushdown_candidate_ids, gate_stats=gate_stats,
-    )
 
 
 def _exact_gate_recheck(
@@ -3377,8 +3169,8 @@ def _exact_gate_recheck(
     """Stage 2 of the compressed gates: fetch ONLY the shortlisted
     (b_id, c_id) pairs' corpus float vectors (broadcast semi-lookup,
     optional candidate-id scan pushdown) and drop batch rows with an
-    exact cosine >= threshold witness. Shared by the SQ8 and PQ
-    gates — the exactness of this stage is what makes their stage-1
+    exact cosine >= threshold witness. Shared by every compressed
+    rung — the exactness of this stage is what makes their stage-1
     margins a superset filter rather than a verdict.
 
     ``gate_stats`` (opt-in): filled with ``stage1_candidates`` (the
@@ -3434,345 +3226,6 @@ def _exact_gate_recheck(
     return batch.join(dup_ids, on=id_col, how="left_anti")
 
 
-def incremental_semantic_dedup_prefix(
-    batch: DataFrame,
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    index: DataFrame,
-    prefix_dims: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    margin: float = 0.0,
-    n_probe: int = 2,
-    impl: str = "jvm",
-    pushdown_candidate_ids: bool = False,
-    max_cell_rows: int | None = 100_000,
-    gate_stats: dict | None = None,
-) -> DataFrame:
-    """The semantic dedup gate over a PREFIX-compressed corpus index
-    (r13) — the dim/d_p rung of the compression ladder, between the
-    float gate and SQ8. The index stores each vector's first
-    ``prefix_dims`` coordinates plus the scalar norm of the REMAINDER
-    (``materialize_ivf_index(prefix_dims=...)``); stage 1 scores the
-    per-pair Cauchy-Schwarz upper bound
-
-        cos(b, v) = (<b_p, v_p> + <b_r, v_r>) / (||b||·||v||)
-                 <= (<b_p, v_p> + ||b_r||·||v_r||) / (||b||·||v||)
-
-    and shortlists pairs whose BOUND reaches ``threshold - margin``;
-    stage 2 (shared :func:`_exact_gate_recheck`) fetches only the
-    shortlisted float vectors and decides exactly. Because the bound
-    can only over-estimate the true cosine, ``margin=0.0`` is already
-    SOUND — the kept set equals the exact gate's with no derived
-    global slack at all (contrast SQ8's corpus-wide
-    :func:`sq8_gate_margin`): the bound is PER PAIR, exact whenever
-    either remainder is zero, and tightens as the embedding
-    concentrates mass in the prefix (matryoshka-trained embeddings
-    are the design target; for generic embeddings the
-    ``emb_gate_prefix_report`` registry query sizes the rest-mass
-    distribution before committing to a d_p). A positive ``margin``
-    only WIDENS the shortlist (audit headroom); narrowing below 0 is
-    rejected — it would trade soundness silently.
-
-    Same contracts as the sibling rungs: same-id pairs never count,
-    zero-norm batch rows are always kept, within-batch duplicates are
-    kept, degenerate stored rows (vnorm <= 0) route unconditionally
-    to the exact recheck, 'jvm' stage 1 is the bit-portable
-    oracle-exact fold and 'blas' cogroups per cell into one matmul
-    with ``max_cell_rows`` salting."""
-    if margin < 0:
-        raise ValueError(
-            "prefix gate margin must be >= 0 — the Cauchy-Schwarz"
-            " bound is already sound at 0; a negative margin would"
-            " silently trade missed duplicates"
-        )
-    for col in ("prefix", "rest_norm"):
-        if col not in index.columns:
-            raise ValueError(
-                f"index has no {col!r} column — build it with"
-                " materialize_ivf_index(prefix_dims=...)"
-            )
-    dp = int(prefix_dims)
-    # geometry guard: the jvm bound's zip_with dot would evaluate to
-    # NULL on mismatched prefix lengths, silently emptying stage 1
-    # and KEEPING every duplicate — probe one stored row and fail
-    # loudly instead (the dispatcher loads dp from the companion
-    # table, but this public API can be called with a bare int)
-    stored = index.select(F.size("prefix")).first()
-    if stored is not None and int(stored[0]) != dp:
-        raise ValueError(
-            f"prefix_dims {dp} != the index's stored prefix length"
-            f" {int(stored[0])} — the stored geometry is"
-            " authoritative (load_prefix_dims)"
-        )
-    b = assign_cells(
-        batch.select(
-            F.col(id_col).alias("b_id"),
-            F.col(vec_col).alias("b_vec"),
-            norm(F.col(vec_col)).alias("b_norm"),
-        ).filter(F.col("b_norm") > 0),
-        centroids,
-        "b_id",
-        "b_vec",
-        n_probe=n_probe,
-        impl=impl,
-    ).select(
-        "cell",
-        "b_id",
-        F.expr(f"slice(b_vec, 1, {dp})").alias("b_prefix"),
-        norm(
-            F.expr(f"slice(b_vec, {dp + 1}, size(b_vec))")
-        ).alias("b_rest"),
-        "b_norm",
-    )
-    c = index.filter(F.col("vnorm") > 0).select(
-        "cell",
-        F.col("vec_id").alias("c_id"),
-        F.col("prefix").alias("c_prefix"),
-        F.col("rest_norm").alias("c_rest"),
-        F.col("vnorm").alias("c_norm"),
-    )
-    thr = threshold - margin
-    if impl == "blas":
-        import numpy as np
-        import pandas as pd
-
-        c_g, b_g, keys = _salt_cell_blocks(
-            c, b, "c_id", "cell", max_cell_rows
-        )
-
-        def stage1(cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "b_id": pd.Series([], dtype="int64"),
-                    "c_id": pd.Series([], dtype="int64"),
-                }
-            )
-            if len(cpdf) == 0 or len(bpdf) == 0:
-                return empty
-            cp = np.stack(cpdf["c_prefix"].values).astype(np.float64)
-            cr = cpdf["c_rest"].values.astype(np.float64)
-            cn = cpdf["c_norm"].values.astype(np.float64)
-            cids = cpdf["c_id"].values
-            bp = np.stack(bpdf["b_prefix"].values).astype(np.float64)
-            br = bpdf["b_rest"].values.astype(np.float64)
-            bn = bpdf["b_norm"].values.astype(np.float64)
-            bids = bpdf["b_id"].values
-            bound = (bp @ cp.T + np.outer(br, cr)) / np.outer(bn, cn)
-            mask = (bound >= thr) & (bids[:, None] != cids[None, :])
-            bi, ci = np.nonzero(mask)
-            if not len(bi):
-                return empty
-            return pd.DataFrame(
-                {
-                    "b_id": bids[bi].astype("int64"),
-                    "c_id": cids[ci].astype("int64"),
-                }
-            )
-
-        cand = (
-            c_g.groupby(*keys)
-            .cogroup(b_g.groupby(*keys))
-            .applyInPandas(stage1, schema="b_id long, c_id long")
-            .distinct()
-        )
-    else:
-        bound = (
-            dot(F.col("b_prefix"), F.col("c_prefix"))
-            + F.col("b_rest") * F.col("c_rest")
-        ) / (F.col("b_norm") * F.col("c_norm"))
-        cand = (
-            c.join(F.broadcast(b), on="cell")
-            .filter(F.col("c_id") != F.col("b_id"))
-            .filter(bound >= F.lit(thr))
-            .select("b_id", "c_id")
-            .distinct()
-        )
-    cand = _degenerate_recon_candidates(
-        index, b.select("cell", "b_id"), cand
-    )
-    return _exact_gate_recheck(
-        batch, corpus, cand, id_col, vec_col, threshold,
-        pushdown_candidate_ids, gate_stats=gate_stats,
-    )
-
-
-def incremental_semantic_dedup_pq(
-    batch: DataFrame,
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    index: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    extra_margin: float = 0.0,
-    n_probe: int = 2,
-    impl: str = "jvm",
-    pushdown_candidate_ids: bool = False,
-    max_cell_rows: int | None = 100_000,
-    gate_stats: dict | None = None,
-) -> DataFrame:
-    """The semantic dedup gate over an IVF-PQ corpus index — the
-    16 B/vector rung made gate-capable by a PER-ROW sound margin.
-    PQ's codebook error is unbounded corpus-wide (unlike SQ8's
-    bounds-derived step/2), but the index stores each row's actual
-    reconstruction residual ``resid = ‖v − v̂‖`` (8 B/row, computed
-    at encode time), and the same perturbation inequality as
-    :func:`sq8_gate_margin` gives a per-row bound
-    |cos(q,v) − cos(q,v̂)| ≤ 2·resid/‖v̂‖ — so stage 1 keeps pairs
-    with approx cosine ≥ threshold − 2·resid_c/vnorm_c and is a
-    provable candidate superset, and stage 2
-    (:func:`_exact_gate_recheck`) decides on exact cosines: the kept
-    set EQUALS the exact gate's (pinned in tests). Per-row margins
-    stay sound under ``mode='append'`` — PQ encoding never clamps,
-    and each appended row's resid is computed against the stored
-    codebooks — so unlike the SQ8 gate there is no drift caveat.
-    ``extra_margin`` widens stage 1 uniformly (diagnostics /
-    belt-and-suspenders; 0.0 is already sound).
-
-    ``impl='jvm'``: stage-1 scoring is the probe's codebook-lookup
-    reconstruction fold — bit-portable, the FULL-oracle path
-    (``emb_gate_pq``). ``impl='blas'``: cogrouped per-cell numpy —
-    codes gather per subspace + one matmul, ``max_cell_rows``
-    salting — the production default; ulp drift only moves
-    candidates, never verdicts. Same contracts as the other gates:
-    same-id pairs ignored (replay), zero-norm batch rows kept,
-    within-batch dups kept."""
-    m = len(codebooks)
-    sd = len(codebooks[0][0])
-    if "resid" not in index.columns:
-        raise ValueError(
-            "index has no 'resid' column — rebuild it with this"
-            " version's materialize_pq_index (the per-row residual"
-            " is what makes the PQ gate's margin sound)"
-        )
-    b = assign_cells(
-        batch.select(
-            F.col(id_col).alias("b_id"),
-            F.col(vec_col).alias("b_vec"),
-            norm(F.col(vec_col)).alias("b_norm"),
-        ).filter(F.col("b_norm") > 0),
-        centroids,
-        "b_id",
-        "b_vec",
-        n_probe=n_probe,
-        impl=impl,
-    )
-    c = index.filter(F.col("vnorm") > 0).select(
-        "cell",
-        F.col("vec_id").alias("c_id"),
-        "codes",
-        F.col("vnorm").alias("c_norm"),
-        "resid",
-    )
-    if impl == "blas":
-        import numpy as np
-        import pandas as pd
-
-        b_books = [
-            np.array(codebooks[s], dtype=np.float64) for s in range(m)
-        ]
-        thr_base = threshold - extra_margin
-        c_g, b_g, keys = _salt_cell_blocks(
-            c, b, "c_id", "cell", max_cell_rows
-        )
-
-        def stage1(cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "b_id": pd.Series([], dtype="int64"),
-                    "c_id": pd.Series([], dtype="int64"),
-                }
-            )
-            if len(cpdf) == 0 or len(bpdf) == 0:
-                return empty
-            words = np.stack(
-                [np.asarray(x, dtype=np.int64) for x in cpdf["codes"]]
-            )
-            recon = np.empty((len(cpdf), m * sd), dtype=np.float64)
-            for s in range(m):
-                cs = (
-                    words[:, s // _SQ8_PER_WORD]
-                    >> (8 * (s % _SQ8_PER_WORD))
-                ) & 255
-                recon[:, s * sd : (s + 1) * sd] = b_books[s][cs]
-            cn = cpdf["c_norm"].values.astype(np.float64)
-            thr_row = thr_base - 2.0 * cpdf["resid"].values.astype(
-                np.float64
-            ) / cn
-            cids = cpdf["c_id"].values
-            bids_all = bpdf["b_id"].values
-            outs = []
-            step = max(1, (1 << 24) // max(len(cpdf), 1))
-            for lo in range(0, len(bpdf), step):
-                bm = np.stack(
-                    bpdf["b_vec"].values[lo : lo + step]
-                ).astype(np.float64)
-                bn = bpdf["b_norm"].values[lo : lo + step].astype(
-                    np.float64
-                )
-                bids = bids_all[lo : lo + step]
-                sims = (bm @ recon.T) / np.outer(bn, cn)
-                mask = (sims >= thr_row[None, :]) & (
-                    bids[:, None] != cids[None, :]
-                )
-                bi, ci = np.nonzero(mask)
-                if len(bi):
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "b_id": bids[bi].astype("int64"),
-                                "c_id": cids[ci].astype("int64"),
-                            }
-                        )
-                    )
-            return pd.concat(outs) if outs else empty
-
-        cand = (
-            c_g.groupby(*keys)
-            .cogroup(b_g.groupby(*keys))
-            .applyInPandas(stage1, schema="b_id long, c_id long")
-            .distinct()
-        )
-    else:
-        recon = F.concat(
-            *[
-                F.element_at(
-                    _nested_array_lit(codebooks[s]),
-                    (
-                        F.shiftright(
-                            F.col("codes")[s // _SQ8_PER_WORD],
-                            8 * (s % _SQ8_PER_WORD),
-                        ).bitwiseAND(F.lit(255))
-                        + 1
-                    ).cast("int"),
-                )
-                for s in range(m)
-            ]
-        )
-        approx_cos = dot(F.col("b_vec"), recon) / (
-            F.col("b_norm") * F.col("c_norm")
-        )
-        row_thr = (
-            F.lit(threshold - extra_margin)
-            - F.lit(2.0) * F.col("resid") / F.col("c_norm")
-        )
-        cand = (
-            c.join(F.broadcast(b), on="cell")
-            .filter(F.col("c_id") != F.col("b_id"))
-            .filter(approx_cos >= row_thr)
-            .select("b_id", "c_id")
-            .distinct()
-        )
-    cand = _degenerate_recon_candidates(index, b, cand)
-    return _exact_gate_recheck(
-        batch, corpus, cand, id_col, vec_col, threshold,
-        pushdown_candidate_ids, gate_stats=gate_stats,
-    )
-
-
 def _degenerate_recon_candidates(
     index: DataFrame, b: DataFrame, cand: DataFrame
 ) -> DataFrame:
@@ -3796,6 +3249,232 @@ def _degenerate_recon_candidates(
     return cand.unionByName(extra).distinct()
 
 
+def _rows(pdf: Any, cols: tuple[str, ...]) -> Any:
+    """A pandas group's array and scalar columns side by side as one
+    float64 matrix, one row per group row."""
+    import numpy as np
+
+    return np.column_stack(
+        [np.stack(pdf[c].values) if pdf[c].dtype == object else pdf[c].values for c in cols]
+    ).astype(np.float64)
+
+
+def _code_words(cpdf: Any) -> Any:
+    """A pandas group's packed ``codes`` words as one int64 matrix."""
+    import numpy as np
+
+    return np.stack([np.asarray(x, dtype=np.int64) for x in cpdf["codes"]])
+
+
+def _sq8_margin(index: DataFrame, bounds: tuple[list, list], margin: float | None) -> float:
+    if margin is not None:
+        return margin
+    row = index.filter(F.col("vnorm") > 0).agg(F.min("vnorm")).collect()[0]
+    # no scoreable rows: stage 1 yields nothing, but any degenerate
+    # (vnorm<=0) rows still route to the exact recheck
+    return 0.0 if row[0] is None else sq8_gate_margin(*bounds, float(row[0]))
+
+
+def _sq8_decode(bounds: tuple[list, list], thr: float) -> Any:
+    import numpy as np
+
+    mins, maxs = (np.array(x, dtype=np.float64) for x in bounds)
+    steps = (maxs - mins) / float(SQ8_LEVELS)
+    dims = np.arange(len(mins))
+    word, shift = dims // _SQ8_PER_WORD, (dims % _SQ8_PER_WORD) * 8
+
+    def decode(cpdf: Any) -> tuple[Any, Any]:
+        codes = (_code_words(cpdf)[:, word] >> shift) & 255
+        return mins + (codes.astype(np.float64) + 0.5) * steps, thr
+
+    return decode
+
+
+def _prefix_margin(index: DataFrame, dp: int, margin: float | None) -> float:
+    margin = 0.0 if margin is None else margin
+    if margin < 0:
+        raise ValueError(
+            "prefix gate margin must be >= 0 — the Cauchy-Schwarz bound is"
+            " already sound at 0; a negative margin would silently trade"
+            " missed duplicates"
+        )
+    # geometry guard: the jvm bound's zip_with dot evaluates to NULL on
+    # mismatched prefix lengths, silently emptying stage 1 and KEEPING
+    # every duplicate — probe one stored row and fail loudly instead
+    stored = index.select(F.size("prefix")).first()
+    if stored is not None and int(stored[0]) != int(dp):
+        raise ValueError(
+            f"prefix_dims {int(dp)} != the index's stored prefix length"
+            f" {int(stored[0])} — the stored geometry is authoritative"
+            " (load_prefix_dims)"
+        )
+    return margin
+
+
+def _prefix_batch(b: DataFrame, dp: int) -> DataFrame:
+    return b.select(
+        "cell", "b_id", F.expr(f"slice(b_vec, 1, {int(dp)})").alias("b_prefix"),
+        norm(F.expr(f"slice(b_vec, {int(dp) + 1}, size(b_vec))")).alias("b_rest"), "b_norm",
+    )
+
+
+def _pq_bound(books: list[list[list[float]]], thr: float) -> Column:
+    def code(s: int) -> Column:
+        word = F.col("codes")[s // _SQ8_PER_WORD]
+        return F.shiftright(word, 8 * (s % _SQ8_PER_WORD)).bitwiseAND(F.lit(255))
+
+    recon = F.concat(
+        *[
+            F.element_at(_nested_array_lit(bk), (code(s) + 1).cast("int"))
+            for s, bk in enumerate(books)
+        ]
+    )
+    approx_cos = dot(F.col("b_vec"), recon) / (F.col("b_norm") * F.col("c_norm"))
+    return approx_cos >= F.lit(thr) - F.lit(2.0) * F.col("resid") / F.col("c_norm")
+
+
+def _pq_decode(books: list[list[list[float]]], thr: float) -> Any:
+    import numpy as np
+
+    arrs = [np.array(bk, dtype=np.float64) for bk in books]
+    at = [(s // _SQ8_PER_WORD, 8 * (s % _SQ8_PER_WORD)) for s in range(len(books))]
+
+    def decode(cpdf: Any) -> tuple[Any, Any]:
+        words = _code_words(cpdf)
+        recon = np.hstack([a[(words[:, w] >> sh) & 255] for a, (w, sh) in zip(arrs, at)])
+        cn = cpdf["c_norm"].values.astype(np.float64)
+        return recon, thr - 2.0 * cpdf["resid"].values.astype(np.float64) / cn
+
+    return decode
+
+
+class _GateRung(NamedTuple):
+    """What differs between the compressed rungs of the semantic
+    dedup gate; :func:`_two_stage_gate` is everything they share."""
+
+    cols: tuple[str, ...]  # index columns stage 1 reads; cols[0] marks the rung
+    sidecar: str  # the semantic_dedup_gate keyword carrying it
+    load: Callable[[SparkSession, str], Any]  # sidecar from index_table
+    margin: Callable[[DataFrame, Any, float | None], float]
+    batch: Callable[[DataFrame, Any], DataFrame]
+    bcols: tuple[str, ...]  # batch columns forming the numpy matrix B
+    bound: Callable[[Any, float], Column]  # jvm stage-1 predicate
+    decode: Callable[[Any, float], Any]  # cpdf -> (R, thr_row)
+
+
+# in auto-detection order: a PQ index also carries 'codes'
+_GATE_RUNGS: dict[str, _GateRung] = {
+    "pq": _GateRung(
+        cols=("resid", "codes"), sidecar="codebooks", load=load_pq_codebooks,
+        margin=lambda index, books, margin: 0.0 if margin is None else margin,
+        batch=lambda b, books: b, bcols=("b_vec",),
+        bound=_pq_bound, decode=_pq_decode,
+    ),
+    "sq8": _GateRung(
+        cols=("codes",), sidecar="sq8_bounds", load=load_sq8_bounds,
+        margin=_sq8_margin, batch=lambda b, bounds: b, bcols=("b_vec",),
+        bound=lambda bounds, thr: _sq8_dequant_dot("b_vec", "codes", *bounds)
+        / (F.col("b_norm") * F.col("c_norm")) >= F.lit(thr),
+        decode=_sq8_decode,
+    ),
+    "prefix": _GateRung(
+        cols=("rest_norm", "prefix"), sidecar="prefix_dims",
+        load=lambda spark, table: load_prefix_dims(spark, table)[0],
+        margin=_prefix_margin, batch=_prefix_batch, bcols=("b_prefix", "b_rest"),
+        bound=lambda dp, thr: (
+            dot(F.col("b_prefix"), F.col("prefix")) + F.col("b_rest") * F.col("rest_norm")
+        ) / (F.col("b_norm") * F.col("c_norm")) >= F.lit(thr),
+        decode=lambda dp, thr: lambda cpdf: (_rows(cpdf, ("prefix", "rest_norm")), thr),
+    ),
+}
+
+
+def detect_gate_rung(index_columns: list[str]) -> str:
+    """The gate rung an index's columns encode: the first of 'pq',
+    'sq8', 'prefix' whose marker column ('resid', 'codes',
+    'rest_norm') is present, else 'float'."""
+    return next((k for k, r in _GATE_RUNGS.items() if r.cols[0] in index_columns), "float")
+
+
+def _two_stage_gate(
+    rung: _GateRung, sidecar: Any, batch: DataFrame, corpus: DataFrame,
+    centroids: list[list[float]], index: DataFrame, id_col: str, vec_col: str,
+    threshold: float, margin: float | None, n_probe: int, impl: str,
+    pushdown_candidate_ids: bool, max_cell_rows: int | None, gate_stats: dict | None,
+) -> DataFrame:
+    """A compressed rung of :func:`semantic_dedup_gate`: prune by a
+    sound bound, then verify exactly. Stage 1 shortlists (b_id, c_id)
+    pairs in the batch rows' probed cells whose compressed score
+    reaches ``threshold - margin`` (a superset of the exact matches
+    at the rung's default margin); stored rows with vnorm <= 0 join
+    unconditionally; stage 2 decides on exact cosines. 'jvm' scores
+    with the rung's codegen fold (oracle-exact); 'blas' cogroups
+    salted cells with their probe rows, decodes each group into R and
+    per-row thresholds, and keeps ``(B @ R.T) / outer(b_norm, c_norm)
+    >= thr_row`` over batch chunks of at most 2^24 result doubles."""
+    thr = threshold - rung.margin(index, sidecar, margin)
+    b = assign_cells(
+        batch.select(
+            F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_vec"),
+            norm(F.col(vec_col)).alias("b_norm"),
+        ).filter(F.col("b_norm") > 0),
+        centroids, "b_id", "b_vec", n_probe=n_probe, impl=impl,
+    )
+    b = rung.batch(b, sidecar)
+    c = index.filter(F.col("vnorm") > 0).select(
+        "cell", F.col("vec_id").alias("c_id"), F.col("vnorm").alias("c_norm"), *rung.cols
+    )
+    if impl == "blas":
+        import numpy as np
+        import pandas as pd
+
+        decode = rung.decode(sidecar, thr)
+
+        def stage1(cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
+            bi, ci = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
+            if len(cpdf) and len(bpdf):
+                recon, thr_row = decode(cpdf)
+                cn = cpdf["c_norm"].values.astype(np.float64)
+                cids = cpdf["c_id"].values
+                step = max(1, (1 << 24) // len(cpdf))
+                for lo in range(0, len(bpdf), step):
+                    chunk = bpdf.iloc[lo : lo + step]
+                    bids = chunk["b_id"].values
+                    bn = chunk["b_norm"].values.astype(np.float64)
+                    sims = (_rows(chunk, rung.bcols) @ recon.T) / np.outer(bn, cn)
+                    hit = (sims >= thr_row) & (bids[:, None] != cids[None, :])
+                    rows, cols = np.nonzero(hit)
+                    bi.append(bids[rows])
+                    ci.append(cids[cols])
+            return pd.DataFrame(
+                {"b_id": np.concatenate(bi).astype("int64"),
+                 "c_id": np.concatenate(ci).astype("int64")}
+            )
+
+        c_g, b_g, keys = _salt_cell_blocks(c, b, "c_id", "cell", max_cell_rows)
+        cand = (
+            c_g.groupby(*keys)
+            .cogroup(b_g.groupby(*keys))
+            .applyInPandas(stage1, schema="b_id long, c_id long")
+            .distinct()
+        )
+    else:
+        # skinny (b_id, c_id) candidate pairs; distinct also collapses
+        # a crash-replayed append's duplicate index rows
+        cand = (
+            c.join(F.broadcast(b), on="cell")
+            .filter(F.col("c_id") != F.col("b_id"))
+            .filter(rung.bound(sidecar, thr))
+            .select("b_id", "c_id")
+            .distinct()
+        )
+    cand = _degenerate_recon_candidates(index, b, cand)
+    return _exact_gate_recheck(
+        batch, corpus, cand, id_col, vec_col, threshold,
+        pushdown_candidate_ids, gate_stats=gate_stats,
+    )
+
+
 def semantic_dedup_gate(
     batch: DataFrame,
     corpus: DataFrame | None,
@@ -3809,6 +3488,7 @@ def semantic_dedup_gate(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
+    margin: float | None = None,
     n_probe: int = 2,
     impl: str = "jvm",
     pushdown_candidate_ids: bool = False,
@@ -3816,65 +3496,76 @@ def semantic_dedup_gate(
     gate_stats: dict | None = None,
     recommend_stats: dict | None = None,
 ) -> DataFrame:
-    """ONE entry point for the semantic dedup gate across the whole
-    compression ladder (r12 — VERDICT r11 item 4). The four rungs —
-    :func:`incremental_semantic_dedup` (float),
-    :func:`incremental_semantic_dedup_prefix` (dim/d_p prefix +
-    Cauchy-Schwarz remainder bound, r13),
-    :func:`incremental_semantic_dedup_sq8` (7.7x codes) and
-    :func:`incremental_semantic_dedup_pq` (16 B/vector) — share one
-    contract (same kept set, proven per rung); this dispatcher picks
-    the rung from the index you hand it, so pipeline code does not
-    change when an index is re-materialized at a different rung.
+    """The semantic dedup gate across the whole compression ladder:
+    drop batch rows with cosine >= ``threshold`` to some different-id
+    corpus vector in one of their ``n_probe`` nearest IVF cells. Every
+    rung keeps exactly the float gate's rows (proven per rung, pinned
+    in tests), so pipelines do not change when an index is rebuilt at
+    another rung. Same-id pairs never count (replay contract);
+    zero-norm and within-batch-duplicate batch rows are kept.
 
-    ``gate_kind='auto'`` (default) detects from the index's columns:
-    no index → the float gate over ``corpus``; ``resid`` column →
-    PQ; ``codes`` column → SQ8; ``rest_norm`` column → prefix; a
-    float :func:`materialize_ivf_index` table → the float gate with
-    ``corpus_cells`` (cells reused, corpus never re-assigned).
-    Passing an explicit kind that contradicts the index's columns
-    raises instead of silently gating with the wrong arithmetic.
+    'float' is :func:`incremental_semantic_dedup` over ``corpus``, or
+    over a float :func:`materialize_ivf_index` table as
+    ``corpus_cells`` (then ``corpus`` is unread; pass None). The
+    compressed rungs are two-stage (:func:`_two_stage_gate`) and read
+    the FLOAT ``corpus`` only to recheck their shortlist exactly:
 
-    Sidecars (SQ8 bounds / PQ codebooks) are taken from
-    ``sq8_bounds``/``codebooks`` if given, else loaded from
-    ``index_table``'s companion tables; ``index_table`` alone also
-    suffices for the index itself. ``corpus`` is the accepted FLOAT
-    corpus — the compressed rungs touch it only for the exact
-    recheck of stage-1 candidates; the float-index rung never reads
-    it (pass None there). ``pushdown_candidate_ids`` applies to the
-    compressed rungs only (stage 2's IN-pushdown knob), as does
-    ``gate_stats`` (opt-in dict filled with stage1_candidates /
-    distinct_corpus_ids — the runtime flood signal whose offline
-    predictors are the sizing reports; ignored on the float rungs,
-    which have no compressed stage 1). Rung choice guidance lives in
-    docs/llm_operators.md; size the compressed rungs first with
-    ``emb_gate_margin_report`` (SQ8) /
-    ``emb_gate_pq_margin_report`` (PQ).
+    ====== =============== =================== =========================
+    rung   marker (+ cols) sidecar (loader)    ``margin=None`` means
+    ====== =============== =================== =========================
+    pq     resid (+ codes) codebooks           0, plus 2·resid/vnorm per
+                           (load_pq_codebooks) row
+    sq8    codes           sq8_bounds          :func:`sq8_gate_margin`
+                           (load_sq8_bounds)   at the index's min vnorm
+    prefix rest_norm       prefix_dims         0 (Cauchy-Schwarz bound);
+           (+ prefix)      (load_prefix_dims)  must be >= 0
+    ====== =============== =================== =========================
 
-    ``recommend_stats`` (r14, opt-in): pass a dict and it is filled
-    with ``{'signals', 'decision', 'rung', 'active_rung'}`` from
+    ``gate_kind='auto'`` picks the first rung whose marker column the
+    index carries (pq, sq8, prefix), else 'float'; an explicit kind
+    that contradicts it raises. A sidecar not passed is loaded from
+    ``index_table``'s companion table (which alone also supplies the
+    index). ``margin``: stage-1 slack below ``threshold``; a smaller
+    SQ8 margin trades a bounded false-negative rate for a shorter
+    shortlist (audit with the ``emb_gate_recall`` pattern). SQ8
+    caveat: appends clamp drifted values to the stored code rails,
+    which the derived margin no longer covers — MISSED duplicates,
+    never false drops; widen ``margin`` or rebuild. PQ and prefix stay
+    sound under append. ``pushdown_candidate_ids`` pushes the
+    candidate ids into the recheck's corpus scan as an IN filter (one
+    driver round-trip); ``gate_stats``: see :func:`_exact_gate_recheck`
+    (the runtime twin of the ``emb_gate_margin_report`` /
+    ``emb_gate_pq_margin_report`` sizing reports). ``impl`` /
+    ``max_cell_rows``: as in :func:`incremental_semantic_dedup`.
+    Rung choice guidance: docs/llm_operators.md.
+
+    ``recommend_stats`` (opt-in dict): filled with ``signals``,
+    ``decision``, ``rung`` and ``active_rung`` from
     :func:`gate_rung_signals` + :func:`recommend_gate_rung` over the
-    FLOAT ``corpus`` (requires it; ``prefix_dims`` defaults to dim/4
-    when not given) — the "you are gating on rung X, the picker
-    recommends Y" instrument. Telemetry only: the dispatch is always
-    decided by the index actually handed in (a recommendation cannot
-    re-materialize it); pay one extra two-aggregation corpus pass
-    only when you ask."""
+    FLOAT ``corpus`` (``prefix_dims`` defaults to dim/4) — telemetry
+    only, one two-aggregation corpus pass."""
     spark = batch.sparkSession
     if index is None and index_table is not None:
         index = spark.table(index_table)
+    detected = detect_gate_rung([] if index is None else index.columns)
     if gate_kind == "auto":
-        if index is None:
-            gate_kind = "float"
-        elif "resid" in index.columns:
-            gate_kind = "pq"
-        elif "codes" in index.columns:
-            gate_kind = "sq8"
-        elif "rest_norm" in index.columns:
-            gate_kind = "prefix"
-        else:
-            gate_kind = "float"
-    if gate_kind in ("sq8", "pq", "prefix") and corpus is None:
+        gate_kind = detected
+    if gate_kind != "float" and gate_kind not in _GATE_RUNGS:
+        raise ValueError(
+            f"unknown gate_kind {gate_kind!r}: expected 'auto'|'float'|'sq8'|'pq'|'prefix'"
+        )
+    if gate_kind != detected:
+        need = (
+            "an uncompressed index" if gate_kind == "float"
+            else f"an index with {'+'.join(_GATE_RUNGS[gate_kind].cols)} columns"
+        )
+        got = "no index" if index is None else f"a {detected!r} index"
+        raise ValueError(
+            f"gate_kind={gate_kind!r} needs {need}, got {got} — scoring a"
+            " compressed index with the wrong arithmetic would gate silently"
+            " wrong; use gate_kind='auto'"
+        )
+    if gate_kind != "float" and corpus is None:
         raise ValueError(
             f"gate_kind={gate_kind!r} needs the accepted FLOAT corpus"
             " for the exact stage-2 recheck — corpus=None is only"
@@ -3895,108 +3586,37 @@ def semantic_dedup_gate(
             sq8_margin=signals["sq8_margin"],
         )
         recommend_stats.update(
-            signals=signals,
-            decision=decision,
-            rung=decision["rung"],
-            active_rung=gate_kind,
+            signals=signals, decision=decision, rung=decision["rung"], active_rung=gate_kind
         )
-    if gate_kind == "pq":
-        if index is None or "resid" not in index.columns:
+    if gate_kind == "float":
+        cells = None
+        if index is not None:
+            cells = index.withColumnsRenamed({"vec_id": id_col, "embedding": vec_col})
+        elif corpus is None:
             raise ValueError(
-                "gate_kind='pq' needs a materialize_pq_index table"
-                " (codes + resid columns)"
+                "the float gate needs corpus= (or a float index /"
+                " index_table to gate against)"
             )
-        if codebooks is None:
-            if index_table is None:
-                raise ValueError(
-                    "gate_kind='pq' needs codebooks= or index_table="
-                    " (to load the persisted codebooks)"
-                )
-            codebooks = load_pq_codebooks(spark, index_table)
-        return incremental_semantic_dedup_pq(
-            batch, corpus, centroids, index, codebooks,
+        return incremental_semantic_dedup(
+            batch, corpus, centroids,
             id_col=id_col, vec_col=vec_col, threshold=threshold,
-            n_probe=n_probe, impl=impl,
-            pushdown_candidate_ids=pushdown_candidate_ids,
-            max_cell_rows=max_cell_rows, gate_stats=gate_stats,
+            n_probe=n_probe, impl=impl, corpus_cells=cells,
+            max_cell_rows=max_cell_rows,
         )
-    if gate_kind == "sq8":
-        if index is None or "codes" not in index.columns:
+    rung = _GATE_RUNGS[gate_kind]
+    sidecar = {"sq8": sq8_bounds, "pq": codebooks, "prefix": prefix_dims}[gate_kind]
+    if sidecar is None:
+        if index_table is None:
             raise ValueError(
-                "gate_kind='sq8' needs a"
-                " materialize_ivf_index(sq8=True) table (codes column)"
+                f"gate_kind={gate_kind!r} needs {rung.sidecar}= or index_table="
+                f" (to load the persisted {rung.sidecar})"
             )
-        if "resid" in index.columns:
-            raise ValueError(
-                "index has a resid column — that is a PQ index; use"
-                " gate_kind='pq' (SQ8 dequant arithmetic would read"
-                " its packed words wrong)"
-            )
-        if sq8_bounds is None:
-            if index_table is None:
-                raise ValueError(
-                    "gate_kind='sq8' needs sq8_bounds= or index_table="
-                    " (to load the persisted bounds)"
-                )
-            sq8_bounds = load_sq8_bounds(spark, index_table)
-        return incremental_semantic_dedup_sq8(
-            batch, corpus, centroids, index, sq8_bounds,
-            id_col=id_col, vec_col=vec_col, threshold=threshold,
-            n_probe=n_probe, impl=impl,
-            pushdown_candidate_ids=pushdown_candidate_ids,
-            max_cell_rows=max_cell_rows, gate_stats=gate_stats,
-        )
-    if gate_kind == "prefix":
-        if index is None or "rest_norm" not in index.columns:
-            raise ValueError(
-                "gate_kind='prefix' needs a"
-                " materialize_ivf_index(prefix_dims=...) table"
-                " (prefix + rest_norm columns)"
-            )
-        if prefix_dims is None:
-            if index_table is None:
-                raise ValueError(
-                    "gate_kind='prefix' needs prefix_dims= or"
-                    " index_table= (to load the persisted geometry)"
-                )
-            prefix_dims, _ = load_prefix_dims(spark, index_table)
-        return incremental_semantic_dedup_prefix(
-            batch, corpus, centroids, index, prefix_dims,
-            id_col=id_col, vec_col=vec_col, threshold=threshold,
-            n_probe=n_probe, impl=impl,
-            pushdown_candidate_ids=pushdown_candidate_ids,
-            max_cell_rows=max_cell_rows, gate_stats=gate_stats,
-        )
-    if gate_kind != "float":
-        raise ValueError(
-            f"unknown gate_kind {gate_kind!r}:"
-            " expected 'auto'|'float'|'sq8'|'pq'|'prefix'"
-        )
-    if index is not None and (
-        "codes" in index.columns
-        or "resid" in index.columns
-        or "rest_norm" in index.columns
-    ):
-        raise ValueError(
-            "gate_kind='float' got a compressed index (codes/resid"
-            " columns) — its float cosine arithmetic cannot score"
-            " packed codes; use gate_kind='auto'"
-        )
-    cells = None
-    if index is not None:
-        cells = index.withColumnRenamed(
-            "vec_id", id_col
-        ).withColumnRenamed("embedding", vec_col)
-    elif corpus is None:
-        raise ValueError(
-            "the float gate needs corpus= (or a float index /"
-            " index_table to gate against)"
-        )
-    return incremental_semantic_dedup(
-        batch, corpus, centroids,
-        id_col=id_col, vec_col=vec_col, threshold=threshold,
-        n_probe=n_probe, impl=impl, corpus_cells=cells,
-        max_cell_rows=max_cell_rows,
+        sidecar = rung.load(spark, index_table)
+    assert corpus is not None and index is not None
+    return _two_stage_gate(
+        rung, sidecar, batch, corpus, centroids, index, id_col, vec_col,
+        threshold, margin, n_probe, impl, pushdown_candidate_ids,
+        max_cell_rows, gate_stats,
     )
 
 
@@ -4172,7 +3792,7 @@ def pq_gate_margin_report(
 ) -> DataFrame:
     """One-row sizing report for the PQ-compressed gate — the go/no-go
     instrument BEFORE switching a production gate to the 16 B rung
-    (:func:`incremental_semantic_dedup_pq`). Unlike the SQ8 gate's
+    (the pq rung of :func:`semantic_dedup_gate`). Unlike the SQ8 gate's
     single global margin (2Δ/min‖v‖ — ``emb_gate_margin_report``),
     the PQ gate's stage-1 margin is PER-ROW (2·resid/‖v̂‖) and
     collapses exactly when the codebooks reconstruct the corpus
@@ -4200,7 +3820,7 @@ def pq_gate_margin_report(
 
     Reference parity: the reference has no compression tier; this
     instruments the repo's beyond-ref PQ gate
-    (`similarity.py` incremental_semantic_dedup_pq)."""
+    (`similarity.py` semantic_dedup_gate, pq rung)."""
     if "resid" not in index.columns:
         raise ValueError(
             "index has no 'resid' column — build it with"

@@ -3352,10 +3352,10 @@ def q_emb_gate_sq8(spark, sf_dir):
 
     from dataprocessingframework_spark.operators.similarity import (
         _ivf_centroids,
-        incremental_semantic_dedup_sq8,
         load_ivf_centroids,
         load_sq8_bounds,
         materialize_ivf_index,
+        semantic_dedup_gate,
     )
 
     emb = T(spark, sf_dir, "embeddings")
@@ -3374,12 +3374,13 @@ def q_emb_gate_sq8(spark, sf_dir):
         centroids=cents, num_buckets=16, path=path, sq8=True,
     )
     kept = (
-        incremental_semantic_dedup_sq8(
+        semantic_dedup_gate(
             batch,
             corpus,
             load_ivf_centroids(spark, table),
             idx,
-            load_sq8_bounds(spark, table),
+            gate_kind="sq8",
+            sq8_bounds=load_sq8_bounds(spark, table),
             threshold=0.95,
             n_probe=2,
         )
@@ -3508,10 +3509,10 @@ def q_emb_gate_sq8_stats(spark, sf_dir):
 
     from dataprocessingframework_spark.operators.similarity import (
         _ivf_centroids,
-        incremental_semantic_dedup_sq8,
         load_ivf_centroids,
         load_sq8_bounds,
         materialize_ivf_index,
+        semantic_dedup_gate,
     )
 
     emb = T(spark, sf_dir, "embeddings")
@@ -3530,12 +3531,13 @@ def q_emb_gate_sq8_stats(spark, sf_dir):
         centroids=cents, num_buckets=16, path=path, sq8=True,
     )
     st: dict = {}
-    kept = incremental_semantic_dedup_sq8(
+    kept = semantic_dedup_gate(
         batch,
         corpus,
         load_ivf_centroids(spark, table),
         idx,
-        load_sq8_bounds(spark, table),
+        gate_kind="sq8",
+        sq8_bounds=load_sq8_bounds(spark, table),
         threshold=0.95,
         n_probe=2,
         gate_stats=st,
@@ -3576,10 +3578,10 @@ def q_emb_gate_prefix(spark, sf_dir):
 
     from dataprocessingframework_spark.operators.similarity import (
         _ivf_centroids,
-        incremental_semantic_dedup_prefix,
         load_ivf_centroids,
         load_prefix_dims,
         materialize_ivf_index,
+        semantic_dedup_gate,
     )
 
     emb = T(spark, sf_dir, "embeddings")
@@ -3599,12 +3601,13 @@ def q_emb_gate_prefix(spark, sf_dir):
     )
     dp, _full = load_prefix_dims(spark, table)
     kept = (
-        incremental_semantic_dedup_prefix(
+        semantic_dedup_gate(
             batch,
             corpus,
             load_ivf_centroids(spark, table),
             idx,
-            dp,
+            gate_kind="prefix",
+            prefix_dims=dp,
             threshold=0.95,
             n_probe=2,
         )
@@ -3698,8 +3701,8 @@ def q_emb_gate_prefix_report(spark, sf_dir):
 
     from dataprocessingframework_spark.operators.similarity import (
         _ivf_centroids,
-        incremental_semantic_dedup_prefix,
         materialize_ivf_index,
+        semantic_dedup_gate,
     )
 
     emb = T(spark, sf_dir, "embeddings")
@@ -3718,8 +3721,8 @@ def q_emb_gate_prefix_report(spark, sf_dir):
         centroids=cents, num_buckets=16, path=path, prefix_dims=16,
     )
     st: dict = {}
-    kept = incremental_semantic_dedup_prefix(
-        batch, corpus, cents, idx, 16,
+    kept = semantic_dedup_gate(
+        batch, corpus, cents, idx, gate_kind="prefix", prefix_dims=16,
         threshold=0.95, n_probe=2, gate_stats=st,
     ).count()
     mass = idx.filter(F.col("vnorm") > 0).select(
@@ -3788,10 +3791,10 @@ def q_emb_gate_pq(spark, sf_dir):
 
     from dataprocessingframework_spark.operators.similarity import (
         _ivf_centroids,
-        incremental_semantic_dedup_pq,
         load_ivf_centroids,
         load_pq_codebooks,
         materialize_pq_index,
+        semantic_dedup_gate,
     )
 
     emb = T(spark, sf_dir, "embeddings")
@@ -3810,12 +3813,13 @@ def q_emb_gate_pq(spark, sf_dir):
         centroids=cents, num_buckets=16, path=path,
     )
     kept = (
-        incremental_semantic_dedup_pq(
+        semantic_dedup_gate(
             batch,
             corpus,
             load_ivf_centroids(spark, table),
             idx,
-            load_pq_codebooks(spark, table),
+            gate_kind="pq",
+            codebooks=load_pq_codebooks(spark, table),
             threshold=0.95,
             n_probe=2,
         )
@@ -11600,306 +11604,6 @@ REGISTRY: dict[str, tuple[SparkQuery, str | None]] = {
     "emb_kcenter_batched": (q_emb_kcenter_batched, _kcenter_sql(8)),
     "emb_centroid_prune": (q_emb_centroid_prune, SQL_EMB_CENTROID_PRUNE),
 }
-
-# r7 WINDOW (rotation per VERDICT r6 item 2): the driver checks the
-# FIRST 50 entries per round — EXACTLY 50 here (the r6 window listed
-# 52, silently dropping f8_json/f9_least_greatest off the end; both
-# lead this round's stale cohort instead). Positions 1-5 are the
-# queries changed or added in r7: emb_ann_recall (column renamed
-# mlsh_beats_lsh -> mlsh_ge_lsh, pin relaxed to the superset-implied
-# >=), the three LSH ANN paths that gained zero-norm filters, and the
-# new non-empty EXCEPT ALL variant. Positions 6-21 are the ENTIRE
-# 16-query cohort last driver-checked in round 2 (incl. d3_sample,
-# rows-only by design). Positions 22-50 are 29 of the 50 queries last
-# checked in round 3, prioritizing ones with no independent local
-# re-verification in the r6 judge session; the remaining 21
-# r3-checked queries are re-verified locally this round via
-# tools/check_correctness.py (outcomes in COVERAGE.md — rotation
-# history table there too).
-_R7_WINDOW = [
-    "emb_ann_recall", "emb_lsh_topk", "emb_lsh_multi_topk",
-    "emb_lsh_index_topk", "set_except_nonempty",
-    "w4_update_columns", "w5_rename_columns", "w6_delete_columns",
-    "stream_tumbling_window", "v2_key_unique", "v3_referential",
-    "w1_roundtrip_shards", "f8_json", "f9_least_greatest",
-    "f_date_trunc", "f_time_bucket", "tx_token_stats",
-    "tx_fingerprint", "tx_langid", "tx_quality", "d3_sample",
-    "a1_quartiles", "a_cube", "a_grouping_sets", "dd_clusters",
-    "dd_clusters_lsh", "dd_jaccard_lsh", "dd_jaccard_ngram",
-    "emb_near_dup", "f_date_extract", "f_explode_wordcount",
-    "f_histogram", "h1_pricing_summary", "h3_top_orders",
-    "h5_region_revenue", "h6_forecast_revenue", "h7_nation_volume",
-    "h13_count_distribution", "h14_promo_revenue", "h15_top_supplier",
-    "h18_large_orders", "h19_disjunctive", "h22_idle_customers",
-    "j_asof_nulls", "j_range", "pipeline_curation", "pipeline_stages",
-    "profile_table", "stream_sliding_window", "tx_pii_scrub",
-]
-
-# r10 WINDOW (r9 was cut short before the driver check ran, so this
-# window rotates off the r8 state): positions 1-4 are the NEW
-# queries — emb_gate_recall (FULL-oracled false-negative audit of
-# the semantic dedup gate at n_probe 1/2/4; VERDICT r8 item 3),
-# emb_gate_blas_parity (driver coverage for the blas production
-# path incl. the r9 max_cell_rows salting; VERDICT r8 item 5), and
-# emb_ivf_sq8_topk (NEW: SQ8-compressed IVF index probe, FULL
-# oracle over the packed-code arithmetic), and emb_ivf_pq_topk
-# (NEW: IVF-PQ index probe — seeded codebooks, FULL oracle).
-# Positions 5-27 are the ENTIRE 23-query cohort last driver-checked
-# in r4 (all re-verified locally by the r8 judge, 22 pass + 1
-# rows-only-by-design). Positions 28-50 are the oldest 23 of the
-# 50-query r5-stale cohort in registry order (emb_code_dedup and
-# a_sketch_intersection, next in that order, lead the r11
-# rotation). Post-r10 staleness: nothing older than r5. Rotation
-# history in COVERAGE.md. ALL 50 verified locally this round via
-# tools/check_correctness.py at sf0.01 (PLANS.md "r10 local
-# full-registry verification").
-_R10_WINDOW = [
-    "emb_gate_recall", "emb_gate_blas_parity", "emb_ivf_sq8_topk",
-    "emb_ivf_pq_topk",
-    # the ENTIRE r4-stale cohort (23)
-    "a_mode_per_group", "a_top_docs_per_source", "d_split_assign",
-    "emb_ivf_topk", "emb_kmeans", "ev_anomaly_days",
-    "ev_attribution", "ev_quartiles_by_type", "ev_retention",
-    "ev_sessionize", "ev_top_paths", "f_ngram_profile",
-    "j_full_outer", "stream_enriched_agg", "tx_dup_passages",
-    "tx_filter_funnel", "tx_keyword_search", "tx_lang_mix",
-    "tx_nll_buckets", "tx_pack_sequences", "w_bucketed_join",
-    "w_merge_upsert", "w_rolling_revenue",
-    # oldest 23 of the r5-stale cohort (registry order)
-    "tx_bloom_decontaminate", "tx_chunk_windows", "d_weighted_sample",
-    "w_snapshot_diff", "dd_cluster_representatives", "j_nearest",
-    "tx_remove_dup_passages", "a_winsorize", "a_group_zscore",
-    "w_schema_evolution", "w_compact_small_files", "a_ks_drift",
-    "a_psi_drift", "tx_bigram_nll", "emb_quantize",
-    "stream_psi_monitor", "a_benford", "a_gini", "w_scd2",
-    "ev_ab_metrics", "tx_remove_dup_spans", "dd_containment",
-    "f_lag_features",
-]
-assert len(_R10_WINDOW) == 50, len(_R10_WINDOW)
-
-# r11 WINDOW: positions 1-6 are the never-driver-checked queries —
-# emb_ivf_pq_rerank (the production-recommended two-stage PQ serving
-# path, added after the r10 window froze), emb_kcenter_batched
-# (NEW r11: pooled-batch k-center with pool covering the corpus =
-# exact greedy trajectory, FULL oracle), emb_ivf_cell_stats
-# (NEW r11: one-row IVF cell-balance report on the seeded
-# quantizer, FULL oracle), emb_gate_sq8 (NEW r11: two-stage
-# SQ8-compressed semantic gate with the sound derived margin —
-# provably equal to the exact gate, FULL oracle), emb_gate_pq
-# (NEW r11: the PQ twin — per-row 2·resid/vnorm margins from the
-# stored reconstruction residuals, FULL oracle), and
-# emb_gate_margin_report (NEW r11: one-row sizing report for the
-# compressed gate — Δ, min/mean vnorm, derived margin, stage-1
-# headroom; FULL oracle). Positions 7-33 are the ENTIRE 27-query
-# r5-stale cohort in registry order (all re-verified locally by the
-# r10 judge, 27/27 green — confirmation, not risk). Positions 34-50
-# are the oldest 17 of the 47-query r6 cohort in registry order
-# (dd_incremental_clusters .. j_semi; the remaining 30 r6 queries,
-# j_anti first, lead the r12 rotation). Post-r11 staleness: nothing
-# never-checked, nothing older than r6. Rotation history in
-# COVERAGE.md.
-_R11_WINDOW = [
-    "emb_ivf_pq_rerank", "emb_kcenter_batched", "emb_ivf_cell_stats",
-    "emb_gate_sq8", "emb_gate_pq", "emb_gate_margin_report",
-    "emb_code_dedup",
-    "a_sketch_intersection", "w_time_travel", "w_incremental_read",
-    "emb_ivf_topk_seeded", "j_interval_overlap", "ev_ordered_funnel",
-    "pipeline_curation_v2", "a_mad_outliers", "f_gap_fill",
-    "ev_stickiness", "tx_hapax_ratio", "ev_props_json",
-    "tx_ngram_entropy", "f_regex_extract_all", "a_skew_report",
-    "ev_transition_latency", "dd_source_overlap", "stream_sessionize",
-    "w_zorder_layout", "graph_pagerank", "a_sketch_union",
-    "j_fuzzy_match", "w_distribution_ranks", "tx_dup_family_sizes",
-    "ev_rolling_distinct_users", "ev_dominant_users",
-    "dd_incremental_clusters",
-    "h2_min_cost_supplier", "h9_product_profit", "h11_important_stock",
-    "h16_supplier_relationship", "h20_promotion_suppliers",
-    "s1_files_scan",
-    "s2_provenance", "s4_inmemory", "p1_filter",
-    "p2_df_filter", "p3_projection", "p4_column_expr",
-    "p6_notnull", "j1_filter_merge", "j3_inner_join",
-    "j_semi",
-]
-assert len(_R11_WINDOW) == 50, len(_R11_WINDOW)
-
-# r12 driver window: positions 1-4 are the round's new/changed
-# queries (emb_ivf_balance — NEW r12: hot-cell quantizer splitting,
-# FULL oracle over the seed/reassign arithmetic;
-# emb_gate_pq_margin_report — NEW r12: one-row FULL-oracled sizing
-# report for the PQ gate's per-row margins, the 16 B rung's
-# go/no-go instrument; emb_gate_sq8 — oracle CHANGED r12: degenerate
-# dn<=0 corpus rows now modeled as unconditional candidates, ADVICE
-# r11; emb_gate_sq8_stats — NEW r12: the gate_stats runtime
-# telemetry itself FULL-oracled, the jvm stage-1 shortlist size is
-# bit-portable). Positions 5-34 are the ENTIRE 30-query r6-stale
-# cohort in registry order (the oldest driver checks remaining; all
-# 30 re-verified green locally by the r11 judge — confirmation, not
-# risk). Positions 35-50 are the oldest 16 of the 49-query r7 cohort
-# in registry order (emb_ann_recall .. a_grouping_sets).
-# Post-r12 staleness: nothing never-checked, nothing older than r7.
-# Rotation history in COVERAGE.md.
-_R12_WINDOW = [
-    "emb_ivf_balance", "emb_gate_pq_margin_report", "emb_gate_sq8",
-    "emb_gate_sq8_stats",
-    "j_anti", "a1_summary_stats", "a3_group_agg", "a4_count_distinct",
-    "a5_dup_detect", "a_rollup", "d1_distinct", "d1_keep_first",
-    "d2_shuffle", "d4_union", "d5_topk", "d7_limit_offset",
-    "set_intersect", "set_except", "w_window_topn", "w_window_running",
-    "f1_basename", "f2_substring", "f3_concat", "f4_suffix",
-    "f5_regex_clean", "f6_lower_trim", "f7_arith",
-    "tx_quality_classifier", "dd_minhash_calibration",
-    "dd_semantic_vs_lexical", "stream_quality_gate",
-    "ev_engagement_profile", "stream_near_dup_ingest",
-    "emb_centroid_prune",
-    "emb_ann_recall", "emb_lsh_topk", "emb_lsh_multi_topk",
-    "dd_jaccard_ngram", "dd_jaccard_lsh", "dd_clusters",
-    "dd_clusters_lsh", "j_asof_nulls", "j_range", "emb_near_dup",
-    "pipeline_stages", "pipeline_curation", "profile_table",
-    "a1_quartiles", "a_cube", "a_grouping_sets",
-]
-assert len(_R12_WINDOW) == 50, len(_R12_WINDOW)
-
-# r13 driver window (rotation per VERDICT r12 item 1): positions 1-4
-# are this round's new/changed queries (emb_rebalance_policy — NEW
-# r13: the auto-rebalance trigger's deterministic decision arithmetic
-# FULL-oracled, VERDICT r12 item 4; d3_sample — oracle NEW r13: was
-# the last perpetual no-oracle row, now a partial verdict-boolean
-# oracle (subset anti-join + seeded-binomial count bounds + seed
-# determinism), VERDICT r12 item 2; emb_ivf_topk — oracle NEW r13:
-# recall@k-vs-exact >= threshold boolean, VERDICT r12 item 2;
-# stream_semantic_ingest — code path CHANGED r13: curation.py now
-# hosts the opt-in auto-rebalance policy, off by default but the
-# ingest loop was re-plumbed, so re-verify under the driver).
-# w_shards_native_roundtrip — NEW r13: the DSv2 shards WRITE path
-# (commit-protocol writer) round-tripped through the DSv2 reader,
-# FULL oracle incl. the shard-rolling arithmetic;
-# stream_shards_sink — NEW r13: the STREAMING shard sink, oracle pins
-# the exactly-once rerun (n_after_rerun == n_first == count);
-# w_shards_compact — NEW r13: two-phase manifest-committed shard
-# compaction, oracle pins the whole retire/rewrite arithmetic;
-# emb_gate_prefix — NEW r13: the training-free PREFIX rung of the
-# gate compression ladder (per-pair Cauchy-Schwarz bound, sound at
-# margin=0), FULL kept-set oracle; emb_gate_prefix_report — NEW r13:
-# its one-row rest-mass sizing report + gate telemetry, FULL oracle.
-# Positions 10-41 are the ENTIRE remaining 32-query r7-stale cohort
-# in registry order (d3_sample, the 33rd, already leads) — after
-# r13 nothing in the registry is staler than r8. Positions 42-50
-# are the oldest 9 of the 50-query r8 cohort in registry order
-# (d_hash_sample .. emb_label_centroids; stream_semantic_ingest,
-# also r8, is in position 4). Rotation history in COVERAGE.md.
-_R13_WINDOW = [
-    "emb_rebalance_policy", "d3_sample", "emb_ivf_topk",
-    "stream_semantic_ingest", "w_shards_native_roundtrip",
-    "stream_shards_sink", "w_shards_compact", "emb_gate_prefix",
-    "emb_gate_prefix_report",
-    "f_explode_wordcount", "f_date_extract", "f_histogram",
-    "h1_pricing_summary", "h3_top_orders", "h5_region_revenue",
-    "h6_forecast_revenue", "h7_nation_volume", "h13_count_distribution",
-    "h14_promo_revenue", "h15_top_supplier", "h18_large_orders",
-    "h19_disjunctive", "h22_idle_customers", "stream_sliding_window",
-    "tx_pii_scrub", "set_except_nonempty", "f8_json",
-    "f9_least_greatest", "f_date_trunc", "f_time_bucket",
-    "stream_tumbling_window", "v2_key_unique", "v3_referential",
-    "w1_roundtrip_shards", "w4_update_columns", "w5_rename_columns",
-    "w6_delete_columns", "tx_token_stats", "tx_quality", "tx_langid",
-    "tx_fingerprint",
-    "d_hash_sample", "w_jsonl_roundtrip", "h4_priority_exists",
-    "h10_returned_items", "h12_priority_by_status",
-    "h21_waiting_suppliers", "tx_tfidf", "tx_zipf",
-    "emb_label_centroids",
-]
-assert len(_R13_WINDOW) == 50, len(_R13_WINDOW)
-
-# r14 driver window (rotation per VERDICT r13 item 1): positions 1-3
-# are this round's NEW queries (w_shards_objectstore_roundtrip — the
-# dpf_shards lifecycle over the fakeobj:// object-store backend,
-# FULL oracle incl. a split_name-pruned leg, VERDICT r13 item 2;
-# w_shardedfiles_native_roundtrip — the sharded-files layout
-# (N.csv + loose-file folder) through the DSv2 commit protocol with
-# the member bytes decoded back to text, FULL oracle, VERDICT r13
-# item 3; emb_gate_rung_policy — the gate-rung auto-picker's decision
-# arithmetic on raw + matryoshka-transformed corpora, FULL oracle,
-# VERDICT r13 item 4/5). Positions 4-10 are CHANGED-code re-verifies:
-# w_shards_native_roundtrip / stream_shards_sink / w_shards_compact
-# (shards_source rewired through the shard_fs seam + the four ADVICE
-# r13 fixes + the write-path shave), w1_roundtrip_shards and
-# s2_provenance (the _shards_v2 schema-inference pass now parses the
-# RFC4180 dialect with multiLine + doublequote escape),
-# stream_semantic_ingest and emb_rebalance_policy (the ingest loop
-# re-plumbed for the auto_rung rung state; w_update_metadata_native —
-# NEW late-r14: the commit-protocol W4 write-back, FULL oracle;
-# w_shards_parquet_meta_roundtrip — NEW late-r14: parquet metadata
-# shards (the reference's configurable datafiles_ext) through the
-# DSv2 lifecycle incl. nested metadata, FULL oracle).
-# w_shard_stats (NEW latest-r14: the per-shard census, FULL oracle)
-# stays BELOW the fold — the window is full; it was verified locally
-# at sf0.01 AND sf0.1 this round and leads the r15 new cohort.
-# Positions 11-50 are the
-# ENTIRE remaining 40-query r8-stale cohort in registry order
-# (stream_interval_join .. emb_kcenter) — after r14 nothing in the
-# registry is staler than r10. Rotation history in COVERAGE.md.
-_R14_WINDOW = [
-    "w_shards_objectstore_roundtrip", "w_shardedfiles_native_roundtrip",
-    "emb_gate_rung_policy", "w_update_metadata_native",
-    "w_shards_parquet_meta_roundtrip",
-    "w_shards_native_roundtrip", "stream_shards_sink", "w_shards_compact",
-    # (w1_roundtrip_shards, r13-checked, yields its slot to the new
-    # parquet-meta query; its changed inference path is covered under
-    # the driver by s2_provenance)
-    "s2_provenance", "stream_semantic_ingest",
-    # (emb_rebalance_policy, r13-checked, yields its slot to the new
-    # w_update_metadata_native; its changed lines — rung-state
-    # plumbing in the rebalance rebuild — are exercised under the
-    # driver by stream_semantic_ingest and locally by the
-    # auto-rung x rebalance interaction test)
-    # the ENTIRE remaining r8-stale cohort (40, registry order)
-    "stream_interval_join", "w_convert_formats", "a_approx_sketches",
-    "ev_funnel", "a_pivot", "f_unpivot", "stream_curation",
-    "d_temperature_sample", "d_per_group_sample",
-    "dd_incremental_near_dup", "tx_unigram_nll", "a_corr_matrix",
-    "w_hive_partitioned", "tx_budget_mix", "d_stratified_sample",
-    "dd_incremental", "emb_lsh_index_topk", "emb_ivf_index_topk",
-    "dd_exact_text", "dd_minhash", "dd_simhash", "dd_jaccard",
-    "dd_hamming", "dd_lsh_candidates", "k2_phash", "u1_column_filter",
-    "u2_data_filter", "j_asof", "j_salted", "emb_topk_cosine",
-    "a_median_exact", "w_analytics", "sql_surface_q10",
-    "h8_market_share", "h17_small_quantity", "stream_session_window",
-    "stream_dedup", "tx_repetition", "tx_decontaminate", "emb_kcenter",
-]
-assert len(_R14_WINDOW) == 50, len(_R14_WINDOW)
-
-# r15 driver window (rotation per VERDICT r14 item 1): position 1 is
-# w_shard_stats — the per-shard census over the DSv2 metadata
-# (FULL oracle), added after the r14 window froze and therefore the
-# only registry query never driver-checked (verified locally at
-# sf0.01 AND sf0.1 in r14). Positions 2-50 are the ENTIRE 49-query
-# r10-stale cohort in r10-window order (keys(CORRECTNESS_r10) minus
-# every later CORRECTNESS file; emb_ivf_topk, also r10-checked, was
-# re-verified in r13 and is excluded). After r15 nothing in the
-# registry is staler than r11 and nothing is never-checked.
-# Rotation history in COVERAGE.md.
-_R15_WINDOW = [
-    "w_shard_stats",
-    # the ENTIRE r10-stale cohort (49, r10-window order)
-    "emb_gate_recall", "emb_gate_blas_parity", "emb_ivf_sq8_topk",
-    "emb_ivf_pq_topk", "a_mode_per_group", "a_top_docs_per_source",
-    "d_split_assign", "emb_kmeans", "ev_anomaly_days",
-    "ev_attribution", "ev_quartiles_by_type", "ev_retention",
-    "ev_sessionize", "ev_top_paths", "f_ngram_profile",
-    "j_full_outer", "stream_enriched_agg", "tx_dup_passages",
-    "tx_filter_funnel", "tx_keyword_search", "tx_lang_mix",
-    "tx_nll_buckets", "tx_pack_sequences", "w_bucketed_join",
-    "w_merge_upsert", "w_rolling_revenue", "tx_bloom_decontaminate",
-    "tx_chunk_windows", "d_weighted_sample", "w_snapshot_diff",
-    "dd_cluster_representatives", "j_nearest",
-    "tx_remove_dup_passages", "a_winsorize", "a_group_zscore",
-    "w_schema_evolution", "w_compact_small_files", "a_ks_drift",
-    "a_psi_drift", "tx_bigram_nll", "emb_quantize",
-    "stream_psi_monitor", "a_benford", "a_gini", "w_scd2",
-    "ev_ab_metrics", "tx_remove_dup_spans", "dd_containment",
-    "f_lag_features",
-]
-assert len(_R15_WINDOW) == 50, len(_R15_WINDOW)
 
 # r16 driver window (rotation per VERDICT r15 item 1): positions 1-2
 # are the round's new/changed slots — w_shards_meta_jvm (NEW: the

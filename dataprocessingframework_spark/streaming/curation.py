@@ -364,8 +364,8 @@ def incremental_semantic_ingest(
     ``sources.compact.compact_bucketed_index``).
 
     ``index_sq8`` (requires ``index_table``): maintain the index
-    SQ8-COMPRESSED and gate through
-    ``incremental_semantic_dedup_sq8`` — per batch, the corpus is
+    SQ8-COMPRESSED and gate through the sq8 rung of
+    ``similarity.semantic_dedup_gate`` — per batch, the corpus is
     read only as packed codes (the ~3.6-7.7x smaller payload); the
     handful of shortlisted candidates are exactly re-checked against
     the batch-dir float corpus with the sound derived margin, so the
@@ -377,12 +377,12 @@ def incremental_semantic_ingest(
     derived margin is no longer sound — the failure direction is a
     missed duplicate, never a false drop; under real drift, rebuild
     the index periodically so the bounds re-cover the corpus (see
-    ``incremental_semantic_dedup_sq8``).
+    ``semantic_dedup_gate``).
 
     ``index_pq`` (requires ``index_table``, exclusive with
     ``index_sq8``): the 16 B/vector rung — the maintained index
     stores PQ codes + per-row reconstruction residuals and gates via
-    ``incremental_semantic_dedup_pq`` (per-row 2·resid/vnorm sound
+    the pq rung of ``semantic_dedup_gate`` (per-row 2·resid/vnorm sound
     margins + exact recheck ⇒ accepted set identical to the float
     path, pinned in tests). Unlike SQ8 there is NO append drift
     caveat: PQ encoding never clamps and each appended row's resid
@@ -393,7 +393,7 @@ def incremental_semantic_ingest(
     ``index_sq8``/``index_pq``, r13): the training-free prefix rung —
     the maintained index stores each vector's first d_p coordinates
     plus the remainder norm and gates via
-    ``incremental_semantic_dedup_prefix`` (per-pair Cauchy-Schwarz
+    the prefix rung of ``semantic_dedup_gate`` (per-pair Cauchy-Schwarz
     bound, sound at margin=0 ⇒ accepted set identical to the float
     path). No append caveat (no bounds, no codebooks); appends
     validate the batch against the stored geometry. Right for
@@ -537,8 +537,13 @@ def incremental_semantic_ingest(
         # record — re-deciding from a fresh signal pass could pick a
         # different rung than the table actually stores and score
         # packed words with the wrong arithmetic
-        existing_cols = spark.table(index_table).columns
-        if "resid" in existing_cols:
+        from dataprocessingframework_spark.operators.similarity import (
+            detect_gate_rung,
+            load_prefix_dims,
+        )
+
+        state["rung"] = detect_gate_rung(spark.table(index_table).columns)
+        if state["rung"] == "pq":
             # auto_rung never picks PQ (its signal needs trained
             # codebooks), so a PQ table here means the caller switched
             # management modes — appending float rows into it would
@@ -548,17 +553,8 @@ def incremental_semantic_ingest(
                 f" {index_table!r} — PQ is user-managed; pass"
                 " index_pq=True (without auto_rung) to keep it"
             )
-        if "rest_norm" in existing_cols:
-            from dataprocessingframework_spark.operators.similarity import (
-                load_prefix_dims,
-            )
-
-            state["rung"] = "prefix"
+        if state["rung"] == "prefix":
             state["prefix_dims"] = load_prefix_dims(spark, index_table)[0]
-        elif "codes" in existing_cols:
-            state["rung"] = "sq8"
-        else:
-            state["rung"] = "float"
         auto_rung["rung"] = state["rung"]
     if rebalance_on_imbalance is not None and spark.catalog.tableExists(
         f"{index_table}_centroids"

@@ -1148,9 +1148,9 @@ def test_sq8_compressed_gate_equals_exact_gate(spark, sf_dir, tmp_path):
     from dataprocessingframework_spark.operators.similarity import (
         _ivf_centroids,
         incremental_semantic_dedup,
-        incremental_semantic_dedup_sq8,
         load_sq8_bounds,
         materialize_ivf_index,
+        semantic_dedup_gate,
     )
     from dataprocessingframework_spark.queries import (
         _perturbed_gate_batch,
@@ -1181,8 +1181,8 @@ def test_sq8_compressed_gate_equals_exact_gate(spark, sf_dir, tmp_path):
         )
         comp = sorted(
             r.vec_id
-            for r in incremental_semantic_dedup_sq8(
-                batch, corpus, cents, idx, bounds,
+            for r in semantic_dedup_gate(
+                batch, corpus, cents, idx, gate_kind="sq8", sq8_bounds=bounds,
                 threshold=0.95, n_probe=2,
             ).collect()
         )
@@ -1194,8 +1194,8 @@ def test_sq8_compressed_gate_equals_exact_gate(spark, sf_dir, tmp_path):
         # set must be a SUPERSET of the sound-margin result
         loose = {
             r.vec_id
-            for r in incremental_semantic_dedup_sq8(
-                batch, corpus, cents, idx, bounds,
+            for r in semantic_dedup_gate(
+                batch, corpus, cents, idx, gate_kind="sq8", sq8_bounds=bounds,
                 threshold=0.95, margin=0.0, n_probe=2,
             ).collect()
         }
@@ -1218,8 +1218,8 @@ def test_pq_compressed_gate_equals_exact_gate(spark, sf_dir, tmp_path):
     from dataprocessingframework_spark.operators.similarity import (
         _ivf_centroids,
         incremental_semantic_dedup,
-        incremental_semantic_dedup_pq,
         materialize_pq_index,
+        semantic_dedup_gate,
     )
     from dataprocessingframework_spark.queries import (
         _perturbed_gate_batch,
@@ -1255,8 +1255,8 @@ def test_pq_compressed_gate_equals_exact_gate(spark, sf_dir, tmp_path):
         ):
             comp = sorted(
                 r.vec_id
-                for r in incremental_semantic_dedup_pq(
-                    batch, corpus, cents, idx, books,
+                for r in semantic_dedup_gate(
+                    batch, corpus, cents, idx, gate_kind="pq", codebooks=books,
                     threshold=0.95, n_probe=2, **kw,
                 ).collect()
             )
@@ -1656,7 +1656,6 @@ def test_prefix_compressed_gate_equals_exact_gate(spark, sf_dir, tmp_path):
     from dataprocessingframework_spark.operators.similarity import (
         _ivf_centroids,
         incremental_semantic_dedup,
-        incremental_semantic_dedup_prefix,
         load_prefix_dims,
         materialize_ivf_index,
         semantic_dedup_gate,
@@ -1694,8 +1693,8 @@ def test_prefix_compressed_gate_equals_exact_gate(spark, sf_dir, tmp_path):
         for impl in ("jvm", "blas"):
             comp = sorted(
                 r.vec_id
-                for r in incremental_semantic_dedup_prefix(
-                    batch, corpus, cents, idx, 16,
+                for r in semantic_dedup_gate(
+                    batch, corpus, cents, idx, gate_kind="prefix", prefix_dims=16,
                     threshold=0.95, n_probe=2, impl=impl,
                 ).collect()
             )
@@ -1704,21 +1703,22 @@ def test_prefix_compressed_gate_equals_exact_gate(spark, sf_dir, tmp_path):
         # widened margin: still the exact kept set (stage 2 decides)
         wide = sorted(
             r.vec_id
-            for r in incremental_semantic_dedup_prefix(
-                batch, corpus, cents, idx, 16,
+            for r in semantic_dedup_gate(
+                batch, corpus, cents, idx, gate_kind="prefix", prefix_dims=16,
                 threshold=0.95, margin=0.1, n_probe=2,
             ).collect()
         )
         assert wide == exact
         with pytest.raises(ValueError, match="margin must be >= 0"):
-            incremental_semantic_dedup_prefix(
-                batch, corpus, cents, idx, 16, margin=-0.01
+            semantic_dedup_gate(
+                batch, corpus, cents, idx, gate_kind="prefix", prefix_dims=16,
+                margin=-0.01,
             )
         # mismatched geometry fails loudly (the jvm zip_with dot
         # would otherwise NULL out and silently keep every dup)
         with pytest.raises(ValueError, match="stored prefix length"):
-            incremental_semantic_dedup_prefix(
-                batch, corpus, cents, idx, 8
+            semantic_dedup_gate(
+                batch, corpus, cents, idx, gate_kind="prefix", prefix_dims=8
             )
         # dispatcher auto-detects the rung from rest_norm and loads
         # the persisted geometry from the companion table
@@ -1763,6 +1763,87 @@ def test_prefix_compressed_gate_equals_exact_gate(spark, sf_dir, tmp_path):
         for t in ("t_gate_pfx", "t_gate_pfx_centroids",
                   "t_gate_pfx_prefix"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+@pytest.mark.parametrize("rung", ["sq8", "prefix", "pq"])
+def test_compressed_gate_routes_degenerate_index_rows(
+    spark, sf_dir, tmp_path, rung
+):
+    """A stored index row whose vnorm is <= 0 (its reconstruction
+    collapsed) cannot be scored by stage 1 on any compressed rung; the
+    gate must still hand it to the exact recheck, so a batch row that
+    truly duplicates it is dropped on both stage-1 impls and the kept
+    set equals the float gate's."""
+    import numpy as np
+
+    from dataprocessingframework_spark.operators.similarity import (
+        _ivf_centroids,
+        incremental_semantic_dedup,
+        load_sq8_bounds,
+        materialize_ivf_index,
+        materialize_pq_index,
+        semantic_dedup_gate,
+    )
+
+    corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("embedding"),
+    )
+    rows = corpus.orderBy("vec_id").limit(2).collect()
+    deg_id = rows[0].vec_id
+    rng = np.random.RandomState(7)
+    batch = spark.createDataFrame(
+        # exact copies of the degenerate and of a healthy stored row,
+        # plus fresh vectors the gate must keep
+        [(900_000, list(rows[0].embedding)), (900_001, list(rows[1].embedding))]
+        + [(900_002 + j, [float(x) for x in rng.randn(64)]) for j in range(4)],
+        schema="vec_id long, embedding array<double>",
+    )
+    cents = _ivf_centroids(corpus, "vec_id", "embedding", 8, iters=0)
+    table = f"t_deg_{rung}"
+    build = dict(
+        n_cells=8, iters=0, impl="jvm", centroids=cents, num_buckets=8,
+        path=str(tmp_path / table),
+    )
+    try:
+        if rung == "pq":
+            idx, _, books = materialize_pq_index(corpus, table, **build)
+            sidecar = dict(codebooks=books)
+        elif rung == "sq8":
+            idx, _ = materialize_ivf_index(corpus, table, sq8=True, **build)
+            sidecar = dict(sq8_bounds=load_sq8_bounds(spark, table))
+        else:
+            idx, _ = materialize_ivf_index(
+                corpus, table, prefix_dims=16, **build
+            )
+            sidecar = dict(prefix_dims=16)
+        deg = idx.withColumn(
+            "vnorm",
+            F.when(F.col("vec_id") == deg_id, F.lit(0.0)).otherwise(
+                F.col("vnorm")
+            ),
+        )
+        assert deg.filter(~(F.col("vnorm") > 0)).count() == 1
+        exact = sorted(
+            r.vec_id
+            for r in incremental_semantic_dedup(
+                batch, corpus, cents, threshold=0.95, n_probe=2
+            ).collect()
+        )
+        assert 900_000 not in exact and 900_001 not in exact
+        assert len(exact) == 4
+        for impl in ("jvm", "blas"):
+            got = sorted(
+                r.vec_id
+                for r in semantic_dedup_gate(
+                    batch, corpus, cents, index=deg, gate_kind=rung,
+                    threshold=0.95, n_probe=2, impl=impl, **sidecar,
+                ).collect()
+            )
+            assert got == exact, (rung, impl, got, exact)
+    finally:
+        for sfx in ("", "_centroids", "_sq8", "_pq", "_prefix"):
+            spark.sql(f"DROP TABLE IF EXISTS {table}{sfx}")
 
 
 

@@ -1,0 +1,52 @@
+"""The semantic-gate family of the query registry, checked against its
+DuckDB oracles in the regular test run.
+
+Each case runs one registered query and its oracle SQL at sf0.001 with
+the same comparison ``tools/check_correctness.py`` applies to the whole
+registry (row count, column names, order-insensitive rounded value
+hash) and fails on any mismatch."""
+
+from __future__ import annotations
+
+import os
+import sys
+
+import pytest
+
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
+
+from check_correctness import check_query, oracle_connection  # noqa: E402
+
+GATE_ORACLES = [
+    "emb_gate_recall",
+    "emb_gate_sq8",
+    "emb_gate_sq8_stats",
+    "emb_gate_prefix",
+    "emb_gate_prefix_report",
+    "emb_gate_pq",
+    "emb_gate_margin_report",
+    "emb_gate_pq_margin_report",
+    "emb_gate_blas_parity",
+    "emb_gate_rung_policy",
+    "stream_semantic_ingest",
+    "dd_semantic_vs_lexical",
+]
+
+
+@pytest.fixture(scope="module")
+def oracle_con(sf_dir):
+    con = oracle_connection(sf_dir)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", GATE_ORACLES)
+def test_gate_query_matches_oracle(spark, sf_dir, oracle_con, name):
+    from dataprocessingframework_spark.queries import REGISTRY
+
+    fn, sql = REGISTRY[name]
+    assert sql is not None, f"{name} has no oracle"
+    status, detail, _ = check_query(spark, oracle_con, sf_dir, fn, sql)
+    assert status == "ok", (name, status, detail)

@@ -805,9 +805,9 @@ def test_sq8_gate_pushdown_candidate_ids_equivalent(spark):
 
     from dataprocessingframework_spark.operators.similarity import (
         _ivf_centroids,
-        incremental_semantic_dedup_sq8,
         load_sq8_bounds,
         materialize_ivf_index,
+        semantic_dedup_gate,
     )
 
     rng = np.random.RandomState(5)
@@ -834,15 +834,15 @@ def test_sq8_gate_pushdown_candidate_ids_equivalent(spark):
         bounds = load_sq8_bounds(spark, "t_pd_sq8")
         plain = sorted(
             r.vec_id
-            for r in incremental_semantic_dedup_sq8(
-                batch, corpus, cents, idx, bounds,
+            for r in semantic_dedup_gate(
+                batch, corpus, cents, idx, gate_kind="sq8", sq8_bounds=bounds,
                 threshold=0.9, n_probe=2,
             ).collect()
         )
         pushed = sorted(
             r.vec_id
-            for r in incremental_semantic_dedup_sq8(
-                batch, corpus, cents, idx, bounds,
+            for r in semantic_dedup_gate(
+                batch, corpus, cents, idx, gate_kind="sq8", sq8_bounds=bounds,
                 threshold=0.9, n_probe=2,
                 pushdown_candidate_ids=True,
             ).collect()
@@ -854,8 +854,8 @@ def test_sq8_gate_pushdown_candidate_ids_equivalent(spark):
         # forced so every cell splits
         blas = sorted(
             r.vec_id
-            for r in incremental_semantic_dedup_sq8(
-                batch, corpus, cents, idx, bounds,
+            for r in semantic_dedup_gate(
+                batch, corpus, cents, idx, gate_kind="sq8", sq8_bounds=bounds,
                 threshold=0.9, n_probe=2, impl="blas",
                 max_cell_rows=7,
             ).collect()
@@ -863,8 +863,8 @@ def test_sq8_gate_pushdown_candidate_ids_equivalent(spark):
         assert blas == plain
         # threshold nothing can reach -> empty candidate set ->
         # early return keeps everything
-        all_kept = incremental_semantic_dedup_sq8(
-            batch, corpus, cents, idx, bounds,
+        all_kept = semantic_dedup_gate(
+            batch, corpus, cents, idx, gate_kind="sq8", sq8_bounds=bounds,
             threshold=1.5, margin=0.0, n_probe=2,
             pushdown_candidate_ids=True,
         )

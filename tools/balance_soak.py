@@ -15,7 +15,7 @@ JVM so codegen warm-up doesn't bias the later variant):
   * recall@10 of that probe vs exact cosine top-10 (brute force) —
     the honest check that evening out cells does not silently cost
     neighbor quality at fixed n_probe;
-  * one incremental_semantic_dedup_sq8 batch (shortlist mass follows
+  * one semantic_dedup_gate(gate_kind='sq8') batch (shortlist mass follows
     probed-cell mass).
 
 Results recorded in PLANS.md ("r12 balance soak"). Not a CI test.
@@ -39,11 +39,11 @@ from dataprocessingframework_spark.operators.similarity import (  # noqa: E402
     assign_cells,
     balance_centroids,
     cosine_topk,
-    incremental_semantic_dedup_sq8,
     ivf_topk_from_index,
     load_sq8_bounds,
     materialize_ivf_index,
     norm,
+    semantic_dedup_gate,
 )
 from dataprocessingframework_spark.session import get_spark  # noqa: E402
 
@@ -175,8 +175,8 @@ def main():
             ).write.format("noop").mode("overwrite").save()
         )
         gate = min2(
-            lambda: incremental_semantic_dedup_sq8(
-                batch, df, cents, idx, bounds,
+            lambda: semantic_dedup_gate(
+                batch, df, cents, idx, gate_kind="sq8", sq8_bounds=bounds,
                 threshold=0.95, n_probe=4, impl="blas",
             ).write.format("noop").mode("overwrite").save()
         )

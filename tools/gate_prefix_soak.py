@@ -137,8 +137,8 @@ def main() -> None:
             "sq8": (
                 "s",
                 None,
-                lambda st: similarity.incremental_semantic_dedup_sq8(
-                    batch, corpus, cents, sidx, bounds,
+                lambda st: similarity.semantic_dedup_gate(
+                    batch, corpus, cents, sidx, gate_kind="sq8", sq8_bounds=bounds,
                     threshold=0.95, n_probe=2, impl="blas",
                     gate_stats=st,
                 ),
@@ -146,8 +146,8 @@ def main() -> None:
             "prefix": (
                 "x",
                 None,
-                lambda st: similarity.incremental_semantic_dedup_prefix(
-                    batch, corpus, cents, xidx, dp,
+                lambda st: similarity.semantic_dedup_gate(
+                    batch, corpus, cents, xidx, gate_kind="prefix", prefix_dims=dp,
                     threshold=0.95, n_probe=2, impl="blas",
                     gate_stats=st,
                 ),

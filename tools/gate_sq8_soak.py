@@ -118,14 +118,14 @@ def main() -> None:
             corpus_cells=fidx,
         ),
         "sq8_two_stage_gate": lambda: (
-            similarity.incremental_semantic_dedup_sq8(
-                batch, corpus, cents, idx, bounds,
+            similarity.semantic_dedup_gate(
+                batch, corpus, cents, idx, gate_kind="sq8", sq8_bounds=bounds,
                 threshold=0.95, n_probe=2, impl="blas",
             )
         ),
         "pq_two_stage_gate": lambda: (
-            similarity.incremental_semantic_dedup_pq(
-                batch, corpus, cents, pidx, books,
+            similarity.semantic_dedup_gate(
+                batch, corpus, cents, pidx, gate_kind="pq", codebooks=books,
                 threshold=0.95, n_probe=2, impl="blas",
             )
         ),
