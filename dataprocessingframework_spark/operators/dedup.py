@@ -65,13 +65,16 @@ def tokenize_char_ngrams(
     explode, no extra shuffle shape.
     """
     # NB: Spark's sequence(1, 0) counts DOWN ([1,0]) rather than being
-    # empty, so docs shorter than n need the explicit length guard
-    grams = F.expr(
-        f"CASE WHEN length({text_col}) >= {n} THEN"
-        f" transform(sequence(1, length({text_col}) - {n - 1}),"
-        f" i -> substring({text_col}, i, {n}))"
-        f" ELSE array() END"
-    )
+    # empty, so docs shorter than n need the explicit length guard.
+    # Column API, not an F.expr string: any column name resolves
+    text = F.col(text_col)
+    grams = F.when(
+        F.length(text) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.length(text) - (n - 1)),
+            lambda i: text.substr(i, F.lit(n)),
+        ),
+    ).otherwise(F.array())
     return (
         df.select(F.col(id_col), F.explode(grams).alias("word"))
         .distinct()
@@ -200,6 +203,28 @@ def minhash_signatures(
     return h.groupBy(id_col).agg(*aggs)
 
 
+def _band_buckets(num_hashes: int, bands: int) -> list[Column]:
+    """One bucket string per LSH band over a ``minhash_signatures``
+    relation: md5 of the band's minhash values joined by ``,``. The
+    single band-bucket encoding — :func:`minhash_lsh_candidates` keys
+    on its 60-bit prefix, :func:`lsh_index` (and so every
+    ``materialize_lsh_index`` table) stores it whole, and
+    ``queries._lsh_band_sql`` builds the same bytes in DuckDB."""
+    if num_hashes % bands != 0:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
+        )
+    rpb = num_hashes // bands
+    return [
+        F.md5(
+            F.concat_ws(
+                ",", *[F.col(f"mh{b * rpb + j}").cast("string") for j in range(rpb)]
+            )
+        )
+        for b in range(bands)
+    ]
+
+
 # Pair generation emits at most _PAIR_BLOCK**2 pairs per block-pair row,
 # bounding per-task work independent of bucket size.
 _PAIR_BLOCK = 512
@@ -212,7 +237,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 16,
     bands: int = 4,
     max_bucket_size: int | None = 1000,
-    bucket_key: str = "prefix64",
     bucket_stats: dict | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs via LSH banding: (id_a, id_b) with
@@ -226,23 +250,19 @@ def minhash_lsh_candidates(
     (that volume in oversized buckets only — the guard refused
     ``pairs_oversized - (oversized_members - n_oversized)`` pairs,
     keeping the s-1 star pairs per bucket) — the diagnostic
-    counterpart of connected_components_star's ``round_stats``
+    counterpart of connected_components' ``round_stats``
     (tools/lexical_soak.py). Costs one extra aggregate job over the
     bucket pre-count; leave None in pipelines.
 
-    ``bucket_key`` picks the band-bucket key representation:
-    ``"prefix64"`` (default) keys every bucket shuffle/join on the
-    60-bit long prefix of the band md5 — 8-byte fixed-width keys
-    instead of 32-char strings, which roughly halves the bucket-
-    exchange bytes and removes per-row string hashing/comparison and
-    the GC pressure it feeds (the r4 bench showed the string-keyed
-    uncapped run degrading 8.5x across trials in one JVM).
-    ``"md5"`` keys on the full md5 string — bit-portable to the
-    DuckDB oracle, used by the oracle-checked registry variants.
-    The pair sets differ only if two distinct band signatures collide
-    in their 60-bit prefix (~n^2/2^60; and the first-colliding-band
-    dedup below ALREADY compares prefixes in both modes, so prefix64
-    is also the more internally consistent criterion).
+    Band buckets are keyed on the 60-bit long prefix of the band md5
+    (:func:`_band_buckets`) — 8-byte fixed-width keys instead of
+    32-char strings, which roughly halves the bucket-exchange bytes
+    and removes per-row string hashing/comparison and the GC pressure
+    it feeds (the r4 bench showed the string-keyed uncapped run
+    degrading 8.5x across trials in one JVM). The pair set equals the
+    full-md5 bucketing the DuckDB oracles use unless two distinct band
+    signatures collide in their 60-bit prefix (~n^2/2^60); the
+    dd_lsh_candidates family of registry oracles pins that equality.
 
     Cost model at scale: signatures (1 shuffle) -> band explode (x bands,
     narrow) -> groupBy band bucket (1 shuffle) -> blocked pair
@@ -292,49 +312,28 @@ def minhash_lsh_candidates(
     full pair set (the oracle-checkable shape, memory ∝ largest
     bucket).
     """
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
-        )
-    if bucket_key not in ("prefix64", "md5"):
-        raise ValueError("bucket_key must be 'prefix64' or 'md5'")
-    rows_per_band = num_hashes // bands
+    band_strs = _band_buckets(num_hashes, bands)
     sig = minhash_signatures(df, text_col, id_col, num_hashes)
-    band_strs = []
-    for b in range(bands):
-        members = [F.col(f"mh{b * rows_per_band + j}") for j in range(rows_per_band)]
-        band_strs.append(
-            F.md5(F.concat_ws(",", *[m.cast("string") for m in members]))
-        )
-    # one row per (doc, band): the full md5 string is the bucket key
-    # (oracle-identical); its 60-bit prefix rides along per band as
-    # h0..h{bands-1} for the first-colliding-band check at pair time
     with_buckets = sig.select(
         F.col(id_col), *[band_strs[b].alias(f"_bs{b}") for b in range(bands)]
     )
+    # one row per (doc, band): the bucket key is the band md5's 60-bit
+    # prefix, which also rides along per band as h0..h{bands-1} for the
+    # first-colliding-band check at pair time
     prefix = [
-        F.conv(F.substring(F.col(f"_bs{b}"), 1, 15), 16, 10)
-        .cast("long")
-        .alias(f"h{b}")
+        F.conv(F.substring(F.col(f"_bs{b}"), 1, 15), 16, 10).cast("long")
         for b in range(bands)
     ]
-    member = F.struct(F.col(id_col).alias("id"), *prefix)
-    # prefix64: the bucket key IS the carried 60-bit prefix (a long);
-    # md5: the full 32-char string (oracle-portable)
-    if bucket_key == "prefix64":
-        bucket_for = [
-            F.conv(F.substring(F.col(f"_bs{b}"), 1, 15), 16, 10).cast("long")
-            for b in range(bands)
-        ]
-    else:
-        bucket_for = [F.col(f"_bs{b}") for b in range(bands)]
+    member = F.struct(
+        F.col(id_col).alias("id"), *[p.alias(f"h{b}") for b, p in enumerate(prefix)]
+    )
     buckets = with_buckets.select(
         member.alias("_m"),
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(b).alias("band"), bucket_for[b].alias("bucket")
+                        F.lit(b).alias("band"), prefix[b].alias("bucket")
                     )
                     for b in range(bands)
                 ]
@@ -586,7 +585,7 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 25,
-    algorithm: str = "star",
+    round_stats: list | None = None,
 ) -> DataFrame:
     """Group near-dup candidate pairs into clusters: (node, cluster)
     where cluster = min node id reachable through the pair graph.
@@ -594,85 +593,9 @@ def connected_components(
     This is the step that turns pairwise similarity into dedup
     decisions (keep one representative per cluster) — absent from the
     reference, essential at 100 TB where transitive duplicates are the
-    norm. ``algorithm="star"`` (default) delegates to
-    :func:`connected_components_star` — O(log n) rounds on any graph
-    shape, same output, measured on par or faster on the sf0.1
-    near-dup graph (r6 A/B: 5.3-6.5s vs 5.9-10.4s over 2.97M edges).
-    ``algorithm="label_prop"`` keeps the original min-label
-    propagation: each round is one shuffle (neighbor-min groupBy);
-    fine for the small-diameter graphs near-dup families form, but
-    Θ(diameter) rounds on chains. localCheckpoint truncates the
-    lineage each round so plans stay bounded.
-
-    Convergence check (label_prop): labels only ever DECREASE under
-    min-propagation, so the label sum is monotone non-increasing and
-    unchanged iff no node moved — one cheap aggregate per round
-    instead of a new-vs-old join+count (which would double the
-    per-round shuffles). Decimal(38) accumulation cannot overflow on
-    64-bit ids.
-    """
-    if algorithm == "star":
-        return connected_components_star(
-            pairs, all_nodes, id_a, id_b, max_iterations
-        )
-    if algorithm != "label_prop":
-        raise ValueError(
-            f"algorithm must be 'star' or 'label_prop', got {algorithm!r}"
-        )
-    fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    bidir = fwd.union(
-        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    ).localCheckpoint(eager=False)  # edges are consumed once per round:
-    # without this the (possibly quadratic) pair-generation lineage
-    # re-executes every iteration. Lazy: the first round's label_sum
-    # action materializes it — one fused job (see the star variant)
-    nodes = (
-        all_nodes.select(F.col(all_nodes.columns[0]).alias("node"))
-        if all_nodes is not None
-        else bidir.select(F.col("src").alias("node")).distinct()
-    )
-    labels = nodes.withColumn("cluster", F.col("node")).localCheckpoint(
-        eager=False
-    )
-
-    def label_sum(df: DataFrame):
-        return df.agg(
-            F.sum(F.col("cluster").cast("decimal(38,0)")).alias("s")
-        ).collect()[0].s
-
-    prev_sum = label_sum(labels)
-    for _ in range(max_iterations):
-        msgs = (
-            bidir.join(labels, bidir["src"] == labels["node"])
-            .select(F.col("dst").alias("node"), "cluster")
-        )
-        new_labels = (
-            labels.select("node", "cluster")
-            .union(msgs)
-            .groupBy("node")
-            .agg(F.min("cluster").alias("cluster"))
-            .localCheckpoint(eager=False)
-        )
-        new_sum = label_sum(new_labels)
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return labels
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    all_nodes: DataFrame | None = None,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iterations: int = 25,
-    round_stats: list | None = None,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014 — public algorithm). Same (node, cluster =
-    min reachable id) contract as :func:`connected_components`.
+    norm. Computed by alternating large-star / small-star rounds
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC 2014 — public algorithm).
 
     ``round_stats``: pass a list to receive one
     ``(round, n_edges_after, seconds)`` tuple per contraction round —
@@ -680,14 +603,13 @@ def connected_components_star(
     the convergence digest the round already computes, so the hook
     adds no extra jobs.
 
-    Why a second algorithm: min-label propagation needs O(diameter)
-    rounds and ships every edge's CURRENT label each round; star
-    contraction converges in O(log n) rounds on ANY graph shape by
-    rewriting the edge set itself toward disjoint stars. On near-dup
-    graphs (small diameter) both are a handful of rounds; on
-    adversarial chains (transitive near-dup runs, crawl rings) the
-    label propagation does Θ(n) rounds while this stays logarithmic —
-    the planted-chain test in tests/test_operators.py pins that.
+    Star contraction converges in O(log n) rounds on ANY graph shape
+    by rewriting the edge set itself toward disjoint stars; min-label
+    propagation would need O(diameter) rounds and ship every edge's
+    CURRENT label each round. On adversarial chains (transitive
+    near-dup runs, crawl rings) that is Θ(n) rounds versus
+    logarithmic here — the planted-chain test in
+    tests/test_clustering.py pins that.
 
     Scale shape per round: one groupBy(node) min (map-side combine —
     a hot node's edges partial-aggregate before the shuffle) and one
@@ -804,7 +726,7 @@ def connected_components_star(
         # stars (the contraction fixed point); an unconverged edge set
         # would silently emit inconsistent clusters, so fail loudly
         raise RuntimeError(
-            "connected_components_star: edge digest did not reach a "
+            "connected_components: edge digest did not reach a "
             f"fixed point within max_iterations={max_iterations}; "
             "labels would be inconsistent. Raise max_iterations "
             "(rounds needed grow O(log n) in component size)."
@@ -850,7 +772,7 @@ def incremental_connected_components(
 
     The existing assignment IS a star edge set (node -> cluster), and
     stars are the fixed point of large/small-star contraction — so
-    seeding :func:`connected_components_star` with those star edges
+    seeding :func:`connected_components` with those star edges
     plus the new pairs converges in O(log(affected component size))
     rounds: components the batch never touches pass through the first
     round unchanged, and only merge chains do real work. The output
@@ -878,7 +800,7 @@ def incremental_connected_components(
         .union(new_pairs.select(F.col(id_b).alias("node")))
         .distinct()
     )
-    return connected_components_star(
+    return connected_components(
         seed, all_nodes=all_nodes, id_a=id_a, id_b=id_b,
         max_iterations=max_iterations,
     )
@@ -901,15 +823,16 @@ def _canonical_pairs(candidates: DataFrame) -> DataFrame:
     )
 
 
-def jaccard_pairs(
+def _overlap_counts(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    threshold: float = 0.5,
-    candidates: DataFrame | None = None,
-    ngram: int | None = None,
+    candidates: DataFrame | None,
+    ngram: int | None,
 ) -> DataFrame:
-    """Exact token-set Jaccard similarity for pairs above ``threshold``.
+    """(id_a, id_b, i, na, nb) with id_a < id_b: the token-set
+    intersection size ``i`` of each pair that shares a token and the
+    two set sizes — the relation every overlap score is a function of.
     Tokens are words, or character ``ngram``-shingles when set.
 
     Without ``candidates`` this is the quadratic verification path
@@ -925,7 +848,6 @@ def jaccard_pairs(
     classic stopword blow-up this path exists to avoid. The candidate
     set is unbounded on a duplicate-heavy corpus, so it is never
     broadcast (plain shuffled hash joins, AQE skew-splittable).
-    Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
     if ngram is not None:
         words = tokenize_char_ngrams(df, text_col, id_col, n=ngram)
@@ -983,9 +905,25 @@ def jaccard_pairs(
         )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("nb"))
-    out = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+    return inter.join(sa, "id_a").join(sb, "id_b")
+
+
+def jaccard_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    threshold: float = 0.5,
+    candidates: DataFrame | None = None,
+    ngram: int | None = None,
+) -> DataFrame:
+    """Exact token-set Jaccard similarity for pairs above ``threshold``:
+    |A∩B| / |A∪B| over the pairs :func:`_overlap_counts` builds (words,
+    or character ``ngram``-shingles when set; restricted to
+    ``candidates`` when given, pair-driven and linear in their count).
+    Returns (id_a, id_b, jaccard) with id_a < id_b.
+    """
+    return (
+        _overlap_counts(df, text_col, id_col, candidates, ngram)
         .withColumn(
             "jaccard",
             F.col("i") / (F.col("na") + F.col("nb") - F.col("i")),
@@ -993,7 +931,6 @@ def jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
     )
-    return out
 
 
 def containment_pairs(
@@ -1008,63 +945,16 @@ def containment_pairs(
     ``threshold`` — catches "doc B is doc A plus a header" and
     quote-heavy subsets that symmetric Jaccard misses (a 30-token doc
     fully inside a 300-token doc has Jaccard 0.1 but containment 1.0).
-    Same candidate restriction and scale posture as
-    :func:`jaccard_pairs`: with ``candidates`` the intersection is
-    pair-driven (linear in the candidate count — no hot-token n²);
-    without, the quadratic inverted-index self-join is reserved for
-    verification slices. (Use LSH candidates at scale — one-sided
-    containment also collides in MinHash buckets when the smaller
-    side dominates a band.)
+    Same tokens, candidate restriction and scale posture as
+    :func:`jaccard_pairs` (both score :func:`_overlap_counts`). (Use
+    LSH candidates at scale — one-sided containment also collides in
+    MinHash buckets when the smaller side dominates a band.)
 
     Returns (id_a, id_b, containment) with id_a < id_b; the score is
     the containment of the SMALLER token set in the larger.
     """
-    if ngram is not None:
-        words = tokenize_char_ngrams(df, text_col, id_col, n=ngram)
-    else:
-        words = tokenize_words(df, text_col, id_col)
-    if candidates is not None:
-        # one canonicalization, two consumers — same rationale and
-        # same output-equivalence argument as jaccard_pairs (r16)
-        cand = _canonical_pairs(candidates)
-        cand_ids = (
-            cand.select(F.explode(F.array("id_a", "id_b")).alias(id_col))
-            .distinct()
-        )
-        words = words.join(cand_ids, on=id_col, how="left_semi")
-    sizes = words.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    if candidates is not None:
-        wa = words.select(F.col(id_col).alias("id_a"), "word")
-        wb = words.select(F.col(id_col).alias("id_b"), "word")
-        inter = (
-            cand
-            .join(wa, "id_a")
-            .join(wb, ["id_b", "word"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("i"))
-        )
-    else:
-        a = words.alias("a")
-        b = words.alias("b")
-        inter = (
-            a.join(
-                b,
-                on=[
-                    F.col("a.word") == F.col("b.word"),
-                    F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-                ],
-            )
-            .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("i"))
-        )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("nb"))
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _overlap_counts(df, text_col, id_col, candidates, ngram)
         .withColumn(
             "containment", F.col("i") / F.least(F.col("na"), F.col("nb"))
         )
@@ -1087,25 +977,14 @@ def lsh_index(
     this table is written to parquet once per corpus and APPENDED per
     accepted batch, so each new batch probes the corpus in one
     equi-join instead of re-hashing 100 TB of history. Bucket ids are
-    the same md5-portable band hashes as minhash_lsh_candidates
+    the full md5-portable :func:`_band_buckets` strings
     (oracle-identical)."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
-        )
-    rpb = num_hashes // bands
+    buckets = _band_buckets(num_hashes, bands)
     sig = minhash_signatures(df, text_col, id_col, num_hashes)
-    entries = []
-    for b in range(bands):
-        members = [F.col(f"mh{b * rpb + j}") for j in range(rpb)]
-        entries.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(",", *[m.cast("string") for m in members])
-                ).alias("bucket"),
-            )
-        )
+    entries = [
+        F.struct(F.lit(b).alias("band"), bucket.alias("bucket"))
+        for b, bucket in enumerate(buckets)
+    ]
     return sig.select(
         F.col(id_col), F.explode(F.array(*entries)).alias("bb")
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
@@ -1192,9 +1071,9 @@ def incremental_near_dup(
     removed here — run minhash_lsh_candidates on the batch for that.
 
     PRECONDITION: batch and corpus id spaces must be disjoint (the
-    normal case for ingest ids). A shared id would orient to a
-    degenerate (x, x) pair that the verifier's ``id_a < id_b`` join
-    silently skips — so it is checked, not assumed.
+    normal case for ingest ids). A shared id would form a degenerate
+    (x, x) pair that the verifier's canonicalization silently drops —
+    so it is checked, not assumed.
     """
     overlap = batch.select(id_col).join(
         corpus.select(id_col), on=id_col, how="left_semi"
@@ -1208,16 +1087,13 @@ def incremental_near_dup(
     if corpus_index is None:
         corpus_index = lsh_index(corpus, text_col, id_col, num_hashes, bands)
     bidx = lsh_index(batch, text_col, id_col, num_hashes, bands)
-    bid = F.col(f"b.{id_col}")
-    cid = F.col(f"c.{id_col}")
+    # raw (batch, corpus) pairs: jaccard_pairs orders and dedups them
     cand = (
         bidx.alias("b")
         .join(corpus_index.alias("c"), ["band", "bucket"])
         .select(
-            F.least(bid, cid).alias("id_a"),
-            F.greatest(bid, cid).alias("id_b"),
+            F.col(f"b.{id_col}").alias("id_a"), F.col(f"c.{id_col}").alias("id_b")
         )
-        .distinct()
     )
     docs = batch.select(F.col(id_col), F.col(text_col)).unionByName(
         corpus.select(F.col(id_col), F.col(text_col))

@@ -2645,7 +2645,7 @@ def q_dd_clusters_lsh(spark, sf_dir):
     approximate pipeline is hash-checkable."""
     docs = T(spark, sf_dir, "documents")
     edges = dedup.minhash_lsh_candidates(
-        docs, "text", "doc_id", num_hashes=8, bands=4, bucket_key="md5"
+        docs, "text", "doc_id", num_hashes=8, bands=4
     )
     cc = dedup.connected_components(
         edges, all_nodes=docs.select("doc_id"), id_a="id_a", id_b="id_b"
@@ -2656,6 +2656,7 @@ def q_dd_clusters_lsh(spark, sf_dir):
 
 
 def _lsh_band_sql(num_hashes: int, bands: int) -> str:
+    # the same bucket bytes as dedup._band_buckets
     rpb = num_hashes // bands
     parts = []
     for b in range(bands):
@@ -2709,14 +2710,14 @@ def q_dd_incremental_clusters(spark, sf_dir):
     corpus = docs.filter(F.col("doc_id") < cut)
     wave1 = dedup.minhash_lsh_candidates(
         corpus, "text", "doc_id", num_hashes=8, bands=4,
-        bucket_key="md5", max_bucket_size=None,
+        max_bucket_size=None,
     )
-    labels1 = dedup.connected_components_star(
+    labels1 = dedup.connected_components(
         wave1, all_nodes=corpus.select("doc_id")
     )
     full_pairs = dedup.minhash_lsh_candidates(
         docs, "text", "doc_id", num_hashes=8, bands=4,
-        bucket_key="md5", max_bucket_size=None,
+        max_bucket_size=None,
     )
     wave2 = full_pairs.filter(
         (F.col("id_a") >= cut) | (F.col("id_b") >= cut)
@@ -2815,10 +2816,11 @@ FROM documents
 def q_dd_lsh_candidates(spark, sf_dir):
     """MinHash-LSH candidate pairs (scale path of near-dup dedup).
     Oracle-checkable because the signatures are md5-portable: DuckDB
-    builds the identical band buckets and the identical pair set."""
+    buckets on the full band md5, Spark on its 60-bit prefix, and the
+    pair sets agree unless two band signatures collide in 60 bits."""
     return dedup.minhash_lsh_candidates(
         T(spark, sf_dir, "documents"), "text", "doc_id",
-        num_hashes=16, bands=4, max_bucket_size=None, bucket_key="md5",
+        num_hashes=16, bands=4, max_bucket_size=None,
     ).orderBy("id_a", "id_b")
 
 
@@ -2843,7 +2845,6 @@ def q_dd_jaccard_lsh(spark, sf_dir):
     docs = T(spark, sf_dir, "documents")
     cand = dedup.minhash_lsh_candidates(
         docs, "text", "doc_id", num_hashes=8, bands=4, max_bucket_size=None,
-        bucket_key="md5",
     )
     return dedup.jaccard_pairs(
         docs, "text", "doc_id", threshold=0.5, candidates=cand
@@ -11127,7 +11128,6 @@ def q_dd_minhash_calibration(spark, sf_dir):
     sig = dedup.minhash_signatures(docs, "text", "doc_id", num_hashes=k)
     cand = dedup.minhash_lsh_candidates(
         docs, "text", "doc_id", num_hashes=8, bands=4, max_bucket_size=None,
-        bucket_key="md5",
     )
     jac = dedup.jaccard_pairs(
         docs, "text", "doc_id", threshold=0.0, candidates=cand

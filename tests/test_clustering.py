@@ -1,5 +1,7 @@
 """Connected-components clustering + profiling operator."""
 
+import itertools
+
 from pyspark.sql import functions as F
 
 from dataprocessingframework_spark.operators.dedup import connected_components
@@ -204,7 +206,6 @@ def test_hamming_near_dup_exact_vs_bruteforce(spark):
     """Pigeonhole exactness: banded candidate generation + verify ==
     quadratic scan, on random 64-bit fingerprints with planted
     near-dups."""
-    import itertools
     import random
 
     from dataprocessingframework_spark.operators.dedup import hamming_near_dup
@@ -234,27 +235,6 @@ def test_hamming_near_dup_exact_vs_bruteforce(spark):
             a, b = sorted((ia, ib))
             want.add((a, b, d))
     assert got == want
-
-
-def test_lsh_bucket_key_prefix64_matches_md5(spark, sf_dir):
-    """The production 64-bit-prefix bucket keys must produce the same
-    candidate pair set as the oracle-portable md5-string keys (they
-    can only differ on a 60-bit prefix collision between distinct
-    band signatures)."""
-    from dataprocessingframework_spark.operators.dedup import (
-        minhash_lsh_candidates,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p64 = minhash_lsh_candidates(
-        docs, "text", "doc_id", num_hashes=8, bands=4, bucket_key="prefix64"
-    )
-    md5 = minhash_lsh_candidates(
-        docs, "text", "doc_id", num_hashes=8, bands=4, bucket_key="md5"
-    )
-    assert {(r.id_a, r.id_b) for r in p64.collect()} == {
-        (r.id_a, r.id_b) for r in md5.collect()
-    }
 
 
 def test_pair_driven_verification_matches_inverted_index(spark, sf_dir):
@@ -287,84 +267,80 @@ def test_pair_driven_verification_matches_inverted_index(spark, sf_dir):
         assert {(r.id_a, r.id_b, r[2]) for r in got.collect()} == expect
 
 
-def test_star_cc_matches_label_propagation(spark):
-    """large/small-star must produce byte-identical (node, cluster)
-    labels to min-label propagation on a mixed graph: transitive
-    chain, two merged families, isolated pair, singleton."""
+def test_ngram_verifiers_accept_any_text_column_name(spark):
+    """The character n-gram path resolves the text column by name, as
+    the word path does: a name that is not a bare SQL identifier
+    ("body text") scores the same pairs as a pure-Python shingle
+    Jaccard / containment, including a doc shorter than n."""
     from dataprocessingframework_spark.operators.dedup import (
-        connected_components_star,
+        containment_pairs,
+        jaccard_pairs,
     )
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20), (3, 20)],
-        schema="id_a long, id_b long",
-    )
-    nodes = spark.createDataFrame(
-        [(i,) for i in [1, 2, 3, 10, 11, 20, 21, 22, 99]],
-        schema="doc_id long",
-    )
-    a = {
-        r.node: r.cluster
-        for r in connected_components(pairs, all_nodes=nodes).collect()
-    }
-    b = {
-        r.node: r.cluster
-        for r in connected_components_star(pairs, all_nodes=nodes).collect()
-    }
-    assert a == b
-    assert b[99] == 99 and b[10] == 10 and b[22] == 1
+    rows = [
+        (1, "the quick brown fox"),
+        (2, "the quick brown fox!"),
+        (3, "quick brown"),
+        (4, "abc"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, `body text` string")
+
+    def grams(t):
+        return {t[i : i + 4] for i in range(len(t) - 3)}
+
+    for fn, score in (
+        (jaccard_pairs, lambda a, b: len(a & b) / len(a | b)),
+        (containment_pairs, lambda a, b: len(a & b) / min(len(a), len(b))),
+    ):
+        expect = set()
+        for (ia, ta), (ib, tb) in itertools.combinations(rows, 2):
+            ga, gb = grams(ta), grams(tb)
+            if ga & gb and score(ga, gb) >= 0.3:
+                expect.add((ia, ib, round(score(ga, gb), 4)))
+        got = fn(df, "body text", "doc_id", threshold=0.3, ngram=4)
+        assert {tuple(r) for r in got.collect()} == expect
+        assert expect
 
 
 def test_star_cc_logarithmic_on_planted_chain(spark):
     """A 64-node path needs ~63 label-propagation rounds; star
-    contraction must finish (and be CORRECT) within O(log n) rounds.
-    8 rounds on a 64-chain pins the logarithmic behavior — label
-    propagation capped at the same 8 rounds provably cannot have
-    delivered min labels to the far end."""
-    from dataprocessingframework_spark.operators.dedup import (
-        connected_components_star,
-    )
-
+    contraction must finish (and be CORRECT) within O(log n) rounds —
+    8 rounds on a 64-chain pins the logarithmic behavior."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], schema="id_a long, id_b long"
     )
-    out = connected_components_star(pairs, max_iterations=8).collect()
+    out = connected_components(pairs, max_iterations=8).collect()
     assert len(out) == 64
     assert {r.cluster for r in out} == {0}
-    # sanity: propagation under the same budget has NOT converged
-    prop = connected_components(
-        pairs, max_iterations=8, algorithm="label_prop"
-    ).collect()
-    assert {r.cluster for r in prop} != {0}
 
 
 def test_star_cc_reversed_and_duplicate_edges(spark):
     """Orientation and multiplicity must not matter."""
-    from dataprocessingframework_spark.operators.dedup import (
-        connected_components_star,
-    )
-
     pairs = spark.createDataFrame(
         [(5, 4), (4, 5), (4, 3), (3, 4), (5, 3)],
         schema="id_a long, id_b long",
     )
     out = {
-        r.node: r.cluster for r in connected_components_star(pairs).collect()
+        r.node: r.cluster for r in connected_components(pairs).collect()
     }
     assert out == {3: 3, 4: 3, 5: 3}
 
 
 def test_star_cc_random_graphs_vs_union_find(spark):
     """Star contraction vs an independent pure-Python union-find on a
-    battery of deterministic pseudo-random graphs (varied density,
-    multiple components, isolated nodes) — catches any systematic
-    bias a single hand-built fixture would miss."""
+    hand-built mixed graph (transitive chain, two merged families,
+    isolated pair, singleton) plus a battery of deterministic
+    pseudo-random graphs (varied density, multiple components,
+    isolated nodes) — catches any systematic bias a single hand-built
+    fixture would miss."""
     import random
 
-    from dataprocessingframework_spark.operators.dedup import (
-        connected_components_star,
-    )
-
+    graphs = [
+        (
+            [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20), (3, 20)],
+            [1, 2, 3, 10, 11, 20, 21, 22, 99],
+        )
+    ]
     for seed in range(6):
         rng = random.Random(seed)
         n = rng.randint(5, 40)
@@ -372,7 +348,10 @@ def test_star_cc_random_graphs_vs_union_find(spark):
         edges = [
             (rng.randrange(n), rng.randrange(n)) for _ in range(m)
         ] or [(0, 0)]
-        parent = list(range(n))
+        graphs.append((edges, list(range(n))))
+
+    for edges, node_ids in graphs:
+        parent = {x: x for x in node_ids}
 
         def find(x):
             while parent[x] != x:
@@ -384,21 +363,21 @@ def test_star_cc_random_graphs_vs_union_find(spark):
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
-        expect = {x: find(x) for x in range(n)}
+        expect = {x: find(x) for x in node_ids}
 
         pairs = spark.createDataFrame(
             edges, schema="id_a long, id_b long"
         )
         nodes = spark.createDataFrame(
-            [(i,) for i in range(n)], schema="node long"
+            [(i,) for i in node_ids], schema="node long"
         )
         got = {
             r.node: r.cluster
-            for r in connected_components_star(
+            for r in connected_components(
                 pairs, all_nodes=nodes
             ).collect()
         }
-        assert got == expect, (seed, n, m)
+        assert got == expect, (edges, node_ids)
 
 
 def test_incremental_cc_equals_full_recompute(spark):
@@ -407,7 +386,6 @@ def test_incremental_cc_equals_full_recompute(spark):
     relabeling when a new edge bridges two old clusters, new nodes
     forming their own clusters, and untouched components."""
     from dataprocessingframework_spark.operators.dedup import (
-        connected_components_star,
         incremental_connected_components,
     )
 
@@ -419,7 +397,7 @@ def test_incremental_cc_equals_full_recompute(spark):
         [(i,) for i in [1, 2, 3, 10, 11, 20, 21, 99]],
         schema="node long",
     )
-    labels1 = connected_components_star(wave1, all_nodes=nodes1)
+    labels1 = connected_components(wave1, all_nodes=nodes1)
     # wave 2: bridge clusters {10,11} and {20,21}; extend {1,2,3};
     # brand-new pair (30,31); node 99 untouched
     wave2 = spark.createDataFrame(
@@ -436,7 +414,7 @@ def test_incremental_cc_equals_full_recompute(spark):
     )
     full = {
         r.node: r.cluster
-        for r in connected_components_star(
+        for r in connected_components(
             full_edges, all_nodes=all_nodes
         ).collect()
     }
@@ -450,7 +428,6 @@ def test_incremental_cc_random_waves(spark):
     import random
 
     from dataprocessingframework_spark.operators.dedup import (
-        connected_components_star,
         incremental_connected_components,
     )
 
@@ -464,7 +441,7 @@ def test_incremental_cc_random_waves(spark):
         )
         w1 = spark.createDataFrame(e1, schema="id_a long, id_b long")
         w2 = spark.createDataFrame(e2, schema="id_a long, id_b long")
-        labels1 = connected_components_star(w1, all_nodes=nodes)
+        labels1 = connected_components(w1, all_nodes=nodes)
         inc = {
             r.node: r.cluster
             for r in incremental_connected_components(
@@ -473,7 +450,7 @@ def test_incremental_cc_random_waves(spark):
         }
         full = {
             r.node: r.cluster
-            for r in connected_components_star(
+            for r in connected_components(
                 w1.union(w2), all_nodes=nodes
             ).collect()
         }

@@ -1474,9 +1474,9 @@ def test_cc_star_raises_on_unconverged(spark):
         [(i, i + 1) for i in range(12)], schema="id_a long, id_b long"
     )
     with _pytest.raises(RuntimeError, match="fixed point"):
-        dedup.connected_components_star(edges, max_iterations=0)
+        dedup.connected_components(edges, max_iterations=0)
     # and with enough rounds the same input converges fine
-    labels = dedup.connected_components_star(edges, max_iterations=25)
+    labels = dedup.connected_components(edges, max_iterations=25)
     assert labels.select("cluster").distinct().count() == 1
 
 

@@ -1,5 +1,5 @@
-"""The semantic-gate family of the query registry, checked against its
-DuckDB oracles in the regular test run.
+"""The semantic-gate and lexical near-dup families of the query
+registry, checked against their DuckDB oracles in the regular test run.
 
 Each case runs one registered query and its oracle SQL at sf0.001 with
 the same comparison ``tools/check_correctness.py`` applies to the whole
@@ -34,6 +34,23 @@ GATE_ORACLES = [
     "dd_semantic_vs_lexical",
 ]
 
+# MinHash -> LSH candidates -> exact verification -> connected
+# components, and the continuous-ingest forms of that chain
+DEDUP_ORACLES = [
+    "dd_jaccard",
+    "dd_jaccard_ngram",
+    "dd_containment",
+    "dd_jaccard_lsh",
+    "dd_lsh_candidates",
+    "dd_clusters",
+    "dd_clusters_lsh",
+    "dd_cluster_representatives",
+    "dd_incremental_clusters",
+    "dd_incremental_near_dup",
+    "dd_minhash_calibration",
+    "stream_near_dup_ingest",
+]
+
 
 @pytest.fixture(scope="module")
 def oracle_con(sf_dir):
@@ -42,11 +59,20 @@ def oracle_con(sf_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", GATE_ORACLES)
-def test_gate_query_matches_oracle(spark, sf_dir, oracle_con, name):
+def _check(spark, sf_dir, oracle_con, name):
     from dataprocessingframework_spark.queries import REGISTRY
 
     fn, sql = REGISTRY[name]
     assert sql is not None, f"{name} has no oracle"
     status, detail, _ = check_query(spark, oracle_con, sf_dir, fn, sql)
     assert status == "ok", (name, status, detail)
+
+
+@pytest.mark.parametrize("name", GATE_ORACLES)
+def test_gate_query_matches_oracle(spark, sf_dir, oracle_con, name):
+    _check(spark, sf_dir, oracle_con, name)
+
+
+@pytest.mark.parametrize("name", DEDUP_ORACLES)
+def test_dedup_query_matches_oracle(spark, sf_dir, oracle_con, name):
+    _check(spark, sf_dir, oracle_con, name)

@@ -5,7 +5,7 @@ adjudicates: 3 isolated trials of the EXACT bench shape (minhash LSH
 candidates over sf0.1 documents -> star-contraction CC), same
 min-of-trials discipline as bench.py, plus ONE instrumented run that
 records the contraction round count and per-round
-(edges-after, seconds) via connected_components_star(round_stats=...)
+(edges-after, seconds) via connected_components(round_stats=...)
 — if the drift is real it shows up as more rounds or a bigger
 candidate edge set (a testdata regeneration artifact), not slower
 code.
@@ -56,7 +56,7 @@ def main() -> None:
     stats: list = []
     spark.sparkContext._jvm.System.gc()
     t0 = time.time()
-    dedup.connected_components_star(
+    dedup.connected_components(
         candidates(),
         all_nodes=q.T(spark, SF_DIR, "documents").select("doc_id"),
         round_stats=stats,

@@ -47,7 +47,7 @@ import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from dataprocessingframework_spark.operators.dedup import (  # noqa: E402
-    connected_components_star,
+    connected_components,
     jaccard_pairs,
     minhash_lsh_candidates,
 )
@@ -227,7 +227,7 @@ def main() -> None:
     _, _, s2 = stage_shuffle(app_url)
     rounds: list = []
     t0 = time.monotonic()
-    cc = connected_components_star(pairs, round_stats=rounds).localCheckpoint()
+    cc = connected_components(pairs, round_stats=rounds).localCheckpoint()
     n_nodes = cc.count()
     t_cc = time.monotonic() - t0
     sh3 = window_shuffle(app_url, s2)
