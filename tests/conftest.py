@@ -10,6 +10,10 @@ from dataprocessingframework_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
+    # the engine default heap (48g) exceeds a small test host, and G1
+    # grows toward it: one test JVM then holds several GB it does not
+    # need. sf0.001 inputs fit a 4g heap.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     s = get_spark(
         app_name="dpf-spark-tests",
         master="local[4]",
