@@ -731,60 +731,6 @@ def lsh_topk_from_index(
     return _per_query_topk(scored, k)
 
 
-def _salt_cell_blocks(
-    c: DataFrame,
-    b: DataFrame,
-    id_col: str,
-    key: str,
-    max_rows: int | None,
-) -> tuple[DataFrame, DataFrame, list[str]]:
-    """Bound cogroup-group size for an existential corpus-vs-batch
-    gate: corpus ``key`` groups above ``max_rows`` are hash-salted
-    into ceil(n/max_rows) sub-blocks (on ``id_col``), and every batch
-    probe row fans to every sub-block of its key. applyInPandas
-    materializes a whole group in one Python worker, so without this
-    a quantizer mega-cell is an executor OOM regardless of matmul
-    chunking. The gate verdict is existential (ANY corpus hit), so
-    corpus-side splitting never changes results. The sub-block bound
-    is in expectation (hash split, like every salted join): ~max_rows
-    per block with sqrt-order variance, not a hard ceiling.
-
-    Returns (salted corpus, fanned batch, cogroup keys). ``max_rows``
-    None disables (keys = [key] only)."""
-    if max_rows is None:
-        return c, b, [key]
-    # one tiny agg (n_keys rows, broadcast) sizes the salt space per
-    # key; groups at or under the cap keep n_salt=1 so the common
-    # case adds no fan-out
-    counts = c.groupBy(key).agg(
-        F.ceil(F.count(F.lit(1)) / F.lit(int(max_rows)))
-        .cast("int")
-        .alias("n_salt")
-    )
-    c_g = (
-        c.join(F.broadcast(counts), on=key)
-        .withColumn(
-            "salt", F.pmod(F.xxhash64(id_col), F.col("n_salt")).cast("int")
-        )
-        .drop("n_salt")
-    )
-    # left join: a batch key with no corpus rows has no count row —
-    # coalesce to one (empty-corpus) sub-block
-    b_g = (
-        b.join(F.broadcast(counts), on=key, how="left")
-        .withColumn(
-            "salt",
-            F.explode(
-                F.sequence(
-                    F.lit(0), F.coalesce(F.col("n_salt"), F.lit(1)) - 1
-                )
-            ),
-        )
-        .drop("n_salt")
-    )
-    return c_g, b_g, [key, "salt"]
-
-
 def _salt_self_join_blocks(
     a: DataFrame,
     b: DataFrame,
@@ -797,7 +743,8 @@ def _salt_self_join_blocks(
     ordered pair (x, y) meets in exactly the one group
     (key, salt(x), salt(y)) — no duplicate pairs, no lost pairs.
     Replication per side is n_salt (group count n_salt^2, each
-    bounded). Expected-size bound, as in :func:`_salt_cell_blocks`.
+    bounded). The bound is in expectation (hash split, like every
+    salted join), not a hard ceiling.
 
     ``a`` must carry ``id_a`` and ``b`` ``id_b`` for the salt hash.
     Returns (salted a, salted b, cogroup keys)."""
@@ -1101,6 +1048,19 @@ def assign_cells(
     return out.withColumn("cell", F.explode("_cells")).drop("_cells")
 
 
+def _top_cells(v: Any, cmat: Any, n_probe: int) -> Any:
+    """The ``n_probe`` nearest-centroid cell ids of each row of the
+    float64 matrix ``v`` as an int32 (rows × n_probe) array, from one
+    (rows × n_cells) matmul; ties break to the lower cell id (stable
+    argsort), matching the JVM comparator."""
+    import numpy as np
+
+    sims = v @ cmat.T
+    if n_probe == 1:
+        return sims.argmax(axis=1).astype("int32")[:, None]
+    return np.argsort(-sims, axis=1, kind="stable")[:, :n_probe].astype("int32")
+
+
 def _assign_cells_blas(
     df: DataFrame,
     centroids: list[list[float]],
@@ -1108,8 +1068,7 @@ def _assign_cells_blas(
     n_probe: int,
 ) -> DataFrame:
     """Arrow-batched centroid assignment: each batch is one (batch ×
-    n_cells) matmul. Narrow (no shuffle); ties break to the lower cell
-    id (stable argsort), matching the JVM comparator."""
+    n_cells) matmul (:func:`_top_cells`). Narrow (no shuffle)."""
     import numpy as np
     from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -1120,15 +1079,12 @@ def _assign_cells_blas(
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
-            v = np.stack(pdf[vec_col].values).astype(np.float64)
-            sims = v @ cmat.T
+            top = _top_cells(np.stack(pdf[vec_col].values).astype(np.float64), cmat, n_probe)
             if n_probe == 1:
                 out = pdf.copy()
-                out["cell"] = sims.argmax(axis=1).astype("int32")
             else:
-                top = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
                 out = pdf.loc[pdf.index.repeat(n_probe)].reset_index(drop=True)
-                out["cell"] = top.ravel().astype("int32")
+            out["cell"] = top.ravel()
             yield out
 
     return df.mapInPandas(go, schema)
@@ -2010,9 +1966,9 @@ def balance_centroids(
     round_stats: list | None = None,
 ) -> list[list[float]]:
     """Split HOT quantizer cells by seeding new centroids inside them
-    (r12) — the fix-at-source companion to the gates' salting caps:
-    salting bounds per-TASK memory when a mega-cell exists, but every
-    probe of that cell still scans all of it; splitting the cell
+    (r12): the gates' chunked scoring bounds per-TASK memory when a
+    mega-cell exists, but every probe of that cell still scores all
+    of it; splitting the cell
     makes the quantizer itself balanced, so probe latency and gate
     candidate sets shrink at the source. The IVF skew risk at 100 TB
     is exactly this (`ivf_cell_stats` is the detector; this is the
@@ -2056,8 +2012,8 @@ def balance_centroids(
     after its mean-sideways round (side = 0: identical vectors) is
     marked unsplittable and excluded (until a later round moves >5%
     new mass into it, which clears the mark and retries — shifted
-    boundaries can make a once-tight cell diverse) — the gates'
-    salting caps remain its backstop. ``rounds`` caps the attempts
+    boundaries can make a once-tight cell diverse) — the gates still
+    score it correctly, only slower. ``rounds`` caps the attempts
     and ``round_stats`` (pass a list) records per round
     ``{round, n_cells, hot_cells, max_cell, reflected,
     unsplittable}`` (the last updated after the split loop, so
@@ -2101,8 +2057,8 @@ def balance_centroids(
         # per-lineage progress: a hot cell that kept >=95% of its
         # ancestor's size made no real progress — escalate it to the
         # mean-sideways split; stuck even after that round, mark it
-        # unsplittable and stop burning rounds on it (the gates'
-        # salting caps remain its backstop).
+        # unsplittable and stop burning rounds on it (the gates
+        # still score it correctly, only slower).
         hot_state, stuck = update_hot_lineage(
             sizes, max_cell_rows, hot_state, unsplittable
         )
@@ -2547,12 +2503,12 @@ def ivf_cell_stats(
 ) -> DataFrame:
     """One-row cell-balance report over an IVF assignment or
     materialized index — the diagnostic a user needs BEFORE sizing
-    ``n_cells``/``n_probe``/``max_cell_rows``: probe latency at scale
-    is governed by the largest probed cell (each probe reads whole
-    cell buckets), so a skewed quantizer quietly turns p50-fast
-    probes into p99-slow ones, and the
-    ``incremental_semantic_dedup(max_cell_rows=...)`` salting gate
-    should be set from ``max_cell`` here, not guessed. Columns:
+    ``n_cells``/``n_probe``: probe latency at scale is governed by
+    the largest probed cell (each probe reads whole cell buckets),
+    so a skewed quantizer quietly turns p50-fast probes into
+    p99-slow ones; ``max_cell`` here is the number to size
+    :func:`balance_centroids` and ``rebalance_trigger`` caps from,
+    not a guess. Columns:
     ``n_rows, n_used, n_empty, min_cell, max_cell, avg_cell
     (round 4), top_share`` (largest cell's row fraction, round 4),
     ``imbalance`` (max/avg, round 4 — 1.0 is perfectly balanced;
@@ -2994,6 +2950,97 @@ def kcenter_select(
     ).select("sel_rank", "vec_id", F.round("dist", 4).alias("dist"))
 
 
+def _probe_scan(
+    b: DataFrame,
+    src: DataFrame,
+    centroids: list[list[float]],
+    n_probe: int,
+    decode: Callable[[Any], tuple[Any, Any]],
+    bcols: tuple[str, ...] = ("b_vec",),
+    pairs: bool = False,
+) -> tuple[DataFrame, Any]:
+    """Stage 1 of the 'blas' semantic gates: ONE narrow scan of the
+    corpus side against the collected batch.
+
+    ``b`` (b_id, b_vec, b_norm > 0, plus the ``bcols`` B is built
+    from) is collected once with ``toArrow()`` — the batch is the
+    small arriving side by contract, the same contract as the jvm
+    path's broadcast, so it must fit on the driver — and each row's
+    ``n_probe`` cells are assigned there (:func:`_top_cells`).
+    ``src`` (c_id, c_norm > 0, plus what ``decode`` reads) is then
+    read once by ``mapInPandas``: each Arrow chunk takes its cells
+    from a stored ``cell`` column (filtered to the probed cells
+    first, so a cell-bucketed index reads only their buckets, in at
+    most one wave of tasks) or,
+    without one, from an argmax of its decoded float vectors against
+    ``centroids``. ``decode(chunk)`` gives the chunk's matrix R and
+    its threshold (a scalar, or one per row); per cell, the batch
+    rows probing it keep ``(B @ R.T) / outer(b_norm, c_norm) >= thr``
+    against different-id rows, over batch slices of at most 2^24
+    result doubles. Per-task memory is one Arrow chunk times one
+    slice, whatever the cell sizes: mega-cells need no salting.
+
+    Returns (hits, probes): the hit ``b_id``s — (b_id, c_id) pairs
+    with ``pairs`` — and the batch's probed (cell, b_id) rows as
+    pandas."""
+    import numpy as np
+    import pandas as pd
+
+    schema = "b_id long, c_id long" if pairs else "b_id long"
+    cmat = np.array(centroids, dtype=np.float64)
+    bpdf = b.toArrow().to_pandas()
+    bids = bpdf["b_id"].values.astype(np.int64)
+    bvec = _rows(bpdf, ("b_vec",)) if len(bpdf) else np.empty((0, cmat.shape[1]))
+    top = _top_cells(bvec, cmat, n_probe)
+    probes = pd.DataFrame({"cell": top.ravel(), "b_id": np.repeat(bids, top.shape[1])})
+    if not len(bpdf):
+        return b.sparkSession.createDataFrame([], schema), probes
+    bmat = bvec if bcols == ("b_vec",) else _rows(bpdf, bcols)
+    bn = bpdf["b_norm"].values.astype(np.float64)
+    members = {int(c): np.flatnonzero((top == c).any(axis=1)) for c in np.unique(top)}
+    if "cell" in src.columns:
+        # a bucketed scan is one task per selected bucket file, however
+        # small, and each Python task pays a fixed Arrow hand-off (~0.3 s
+        # on a 4-vCPU host, where a 20k-row 64-bucket index gate took
+        # 6.3 s uncoalesced and 1.5 s coalesced), so run at most one
+        # wave of scan tasks
+        src = src.filter(F.col("cell").isin(sorted(members))).coalesce(
+            b.sparkSession.sparkContext.defaultParallelism
+        )
+        cmat = None
+
+    def scan(pdfs: Any) -> Any:
+        for pdf in pdfs:
+            if len(pdf) == 0:
+                continue
+            recon, thr = decode(pdf)
+            cells = pdf["cell"].values if cmat is None else _top_cells(recon, cmat, 1)[:, 0]
+            cn = pdf["c_norm"].values.astype(np.float64)
+            cids = pdf["c_id"].values.astype(np.int64)
+            out = []
+            for cell in np.unique(cells):
+                rows = members.get(int(cell))
+                if rows is None:
+                    continue
+                at = np.flatnonzero(cells == cell)
+                r, n, ids = recon[at], cn[at], cids[at]
+                t = thr[at] if np.ndim(thr) else thr
+                step = max(1, (1 << 24) // len(at))
+                for lo in range(0, len(rows), step):
+                    sl = rows[lo : lo + step]
+                    sims = (bmat[sl] @ r.T) / np.outer(bn[sl], n)
+                    hit = (sims >= t) & (bids[sl][:, None] != ids[None, :])
+                    if pairs:
+                        i, j = np.nonzero(hit)
+                        out.append(pd.DataFrame({"b_id": bids[sl][i], "c_id": ids[j]}))
+                    else:
+                        out.append(pd.DataFrame({"b_id": bids[sl][hit.any(axis=1)]}))
+            if out:
+                yield pd.concat(out, ignore_index=True)
+
+    return src.mapInPandas(scan, schema), probes
+
+
 def incremental_semantic_dedup(
     batch: DataFrame,
     corpus: DataFrame | None,
@@ -3004,7 +3051,6 @@ def incremental_semantic_dedup(
     n_probe: int = 2,
     impl: str = "jvm",
     corpus_cells: DataFrame | None = None,
-    max_cell_rows: int | None = 100_000,
 ) -> DataFrame:
     """Drop arriving vectors that semantically duplicate the accepted
     corpus: a batch row is removed iff some DIFFERENT-id corpus
@@ -3023,30 +3069,29 @@ def incremental_semantic_dedup(
     gates on text MinHash/Jaccard), and the batch kernel of
     ``streaming.incremental_semantic_ingest``.
 
-    IVF-cell blocking is the scale shape: the corpus is touched only
-    through a cell equi-join (corpus rows in their 1 nearest cell,
-    batch rows fanned to n_probe cells), never an all-pairs score.
-    ``centroids`` is the shared coarse quantizer — train it once
-    (:func:`materialize_ivf_index` / :func:`load_ivf_centroids`) and
-    reuse it across batches; recomputing per batch would re-scan the
-    corpus. Zero-norm vectors never match (cosine undefined): they
-    are excluded from scoring on both sides, so zero-norm batch rows
-    are always kept. Within-batch duplicates are kept (the
-    incremental contract). Returns surviving batch rows, all columns.
+    IVF-cell blocking is the scale shape: a corpus row is scored only
+    against the batch rows probing its cell (corpus rows in their 1
+    nearest cell, batch rows in their n_probe nearest), never an
+    all-pairs score. ``centroids`` is the shared coarse quantizer —
+    train it once (:func:`materialize_ivf_index` /
+    :func:`load_ivf_centroids`) and reuse it across batches;
+    recomputing per batch would re-scan the corpus. Zero-norm vectors
+    never match (cosine undefined): they are excluded from scoring on
+    both sides, so zero-norm batch rows are always kept. Within-batch
+    duplicates are kept (the incremental contract). Returns surviving
+    batch rows, all columns.
 
-    The jvm path broadcasts the probe side (the batch is by contract
-    the small arriving side), so the cell join never shuffles the
-    corpus: its key has only n_cells distinct values, and a shuffle
+    Both paths rely on the batch being the small arriving side. The
+    jvm path broadcasts it into a cell equi-join, so the corpus never
+    shuffles: the key has only n_cells distinct values, and a shuffle
     join on it would concentrate each cell's corpus rows in one task.
-
-    ``max_cell_rows`` (blas path, default ON) hard-bounds per-task
-    memory against quantizer skew: corpus cells above the cap are
-    salted into (cell, salt) sub-blocks before the cogroup — see the
-    inline note. Sizing ``n_cells`` well (corpus/500) remains the
-    performance lever; the cap is the OOM guard when the data
-    distribution refuses to cooperate. Pass None to disable. (With
-    the cap on, the corpus side is evaluated twice — once for the
-    n_cells-row count agg, once for scoring; both are narrow reads.)
+    The blas path is one corpus scan against the collected batch
+    (:func:`_probe_scan`): no join, no shuffle of the corpus, and one
+    numpy matmul per (Arrow chunk, cell) instead of a per-pair
+    codegen fold — seconds instead of minutes on a
+    100k-batch-vs-100k-corpus gate at 64 cells (PLANS.md "r8 semantic
+    ingest soak"). Its float summation order differs from the fold in
+    the last ulp; use impl='jvm' for oracle-exact parity.
     """
     if corpus_cells is not None:
         c = corpus_cells.select(
@@ -3056,92 +3101,28 @@ def incremental_semantic_dedup(
             F.col("vnorm").alias("c_norm"),
         ).filter(F.col("c_norm") > 0)
     else:
-        c = assign_cells(
-            corpus.select(
-                F.col(id_col).alias("c_id"),
-                F.col(vec_col).alias("c_vec"),
-                norm(F.col(vec_col)).alias("c_norm"),
-            ).filter(F.col("c_norm") > 0),
-            centroids,
-            "c_id",
-            "c_vec",
-            n_probe=1,
-            impl=impl,
-        )
-    b = assign_cells(
-        batch.select(
-            F.col(id_col).alias("b_id"),
-            F.col(vec_col).alias("b_vec"),
-            norm(F.col(vec_col)).alias("b_norm"),
-        ).filter(F.col("b_norm") > 0),
-        centroids,
-        "b_id",
-        "b_vec",
-        n_probe=n_probe,
-        impl=impl,
-    )
+        c = corpus.select(
+            F.col(id_col).alias("c_id"),
+            F.col(vec_col).alias("c_vec"),
+            norm(F.col(vec_col)).alias("c_norm"),
+        ).filter(F.col("c_norm") > 0)
+    b = batch.select(
+        F.col(id_col).alias("b_id"),
+        F.col(vec_col).alias("b_vec"),
+        norm(F.col(vec_col)).alias("b_norm"),
+    ).filter(F.col("b_norm") > 0)
     if impl == "blas":
-        # per-cell matmul instead of a per-pair codegen fold: cogroup
-        # (corpus cell members) x (batch probe rows) and score each
-        # cell as ONE numpy matmul. Measured necessity (PLANS.md "r8
-        # semantic ingest soak"): a 100k-batch-vs-100k-corpus gate at
-        # 64 cells is ~6x10^8 pairs — minutes through the JVM fold,
-        # seconds as matmuls. Like cosine_topk's blas impl, float
-        # summation order differs from the fold in the last ulp —
-        # production path; use impl='jvm' for oracle-exact parity.
-        #
-        # max_cell_rows (default ON) is the per-task memory cap: a
-        # skewed quantizer concentrates a near-dup-heavy corpus in few
-        # cells — exactly when the gate runs — and applyInPandas
-        # materializes a WHOLE group in one Python worker, so an
-        # uncapped mega-cell is an executor OOM no matter how the
-        # matmul is chunked. Corpus cells larger than max_cell_rows
-        # are salted into ceil(n/max) (cell, salt) sub-blocks and the
-        # batch probe rows fan to every sub-block of their cell;
-        # the threshold decision is existential (ANY corpus hit drops
-        # the row), so corpus-side splitting is semantics-free — the
-        # distinct() below unions sub-block verdicts. Same discipline
-        # as max_bucket_size in the LSH tier. Inside each sub-block
-        # the matmul additionally chunks over batch rows so the sims
-        # matrix stays <=2^24 doubles (~128 MB) even under a bulk
-        # backfill batch.
-        c_g, b_g, keys = _salt_cell_blocks(c, b, "c_id", "cell", max_cell_rows)
         import numpy as np
-        import pandas as pd
 
-        def gate(cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
-            if len(cpdf) == 0 or len(bpdf) == 0:
-                return pd.DataFrame({"b_id": pd.Series([], dtype="int64")})
-            cm = np.stack(cpdf["c_vec"].values).astype(np.float64)
-            cn = cpdf["c_norm"].values.astype(np.float64)
-            cids = cpdf["c_id"].values
-            bids_all = bpdf["b_id"].values
-            hits = []
-            step = max(1, (1 << 24) // len(cpdf))
-            for lo in range(0, len(bpdf), step):
-                bm = np.stack(
-                    bpdf["b_vec"].values[lo : lo + step]
-                ).astype(np.float64)
-                bn = bpdf["b_norm"].values[lo : lo + step].astype(
-                    np.float64
-                )
-                bids = bids_all[lo : lo + step]
-                sims = (bm @ cm.T) / np.outer(bn, cn)
-                not_self = bids[:, None] != cids[None, :]
-                hit = ((sims >= threshold) & not_self).any(axis=1)
-                hits.append(bids[hit])
-            return pd.DataFrame(
-                {"b_id": np.concatenate(hits).astype("int64")}
-            )
+        def decode(cpdf: Any) -> tuple[Any, float]:
+            return np.stack(cpdf["c_vec"].values).astype(np.float64), threshold
 
-        dup_ids = (
-            c_g.groupby(*keys)
-            .cogroup(b_g.groupby(*keys))
-            .applyInPandas(gate, schema="b_id long")
-            .withColumnRenamed("b_id", id_col)
-            .distinct()
-        )
+        hits, _ = _probe_scan(b, c, centroids, n_probe, decode)
+        dup_ids = hits.withColumnRenamed("b_id", id_col).distinct()
     else:
+        if corpus_cells is None:
+            c = assign_cells(c, centroids, "c_id", "c_vec", n_probe=1)
+        b = assign_cells(b, centroids, "b_id", "b_vec", n_probe=n_probe)
         dup_ids = (
             c.join(F.broadcast(b), on="cell")
             .filter(F.col("c_id") != F.col("b_id"))
@@ -3312,10 +3293,10 @@ def _prefix_margin(index: DataFrame, dp: int, margin: float | None) -> float:
 
 
 def _prefix_batch(b: DataFrame, dp: int) -> DataFrame:
-    return b.select(
-        "cell", "b_id", F.expr(f"slice(b_vec, 1, {int(dp)})").alias("b_prefix"),
-        norm(F.expr(f"slice(b_vec, {int(dp) + 1}, size(b_vec))")).alias("b_rest"), "b_norm",
-    )
+    return b.withColumns({
+        "b_prefix": F.expr(f"slice(b_vec, 1, {int(dp)})"),
+        "b_rest": norm(F.expr(f"slice(b_vec, {int(dp) + 1}, size(b_vec))")),
+    })
 
 
 def _pq_bound(books: list[list[list[float]]], thr: float) -> Column:
@@ -3400,7 +3381,7 @@ def _two_stage_gate(
     rung: _GateRung, sidecar: Any, batch: DataFrame, corpus: DataFrame,
     centroids: list[list[float]], index: DataFrame, id_col: str, vec_col: str,
     threshold: float, margin: float | None, n_probe: int, impl: str,
-    pushdown_candidate_ids: bool, max_cell_rows: int | None, gate_stats: dict | None,
+    pushdown_candidate_ids: bool, gate_stats: dict | None,
 ) -> DataFrame:
     """A compressed rung of :func:`semantic_dedup_gate`: prune by a
     sound bound, then verify exactly. Stage 1 shortlists (b_id, c_id)
@@ -3408,59 +3389,31 @@ def _two_stage_gate(
     reaches ``threshold - margin`` (a superset of the exact matches
     at the rung's default margin); stored rows with vnorm <= 0 join
     unconditionally; stage 2 decides on exact cosines. 'jvm' scores
-    with the rung's codegen fold (oracle-exact); 'blas' cogroups
-    salted cells with their probe rows, decodes each group into R and
-    per-row thresholds, and keeps ``(B @ R.T) / outer(b_norm, c_norm)
-    >= thr_row`` over batch chunks of at most 2^24 result doubles."""
+    with the rung's codegen fold (oracle-exact); 'blas' is one index
+    scan against the collected batch (:func:`_probe_scan`), decoding
+    each chunk into R and per-row thresholds and keeping
+    ``(B @ R.T) / outer(b_norm, c_norm) >= thr_row``."""
     thr = threshold - rung.margin(index, sidecar, margin)
-    b = assign_cells(
+    b = rung.batch(
         batch.select(
             F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_vec"),
             norm(F.col(vec_col)).alias("b_norm"),
         ).filter(F.col("b_norm") > 0),
-        centroids, "b_id", "b_vec", n_probe=n_probe, impl=impl,
+        sidecar,
     )
-    b = rung.batch(b, sidecar)
     c = index.filter(F.col("vnorm") > 0).select(
         "cell", F.col("vec_id").alias("c_id"), F.col("vnorm").alias("c_norm"), *rung.cols
     )
     if impl == "blas":
-        import numpy as np
-        import pandas as pd
-
-        decode = rung.decode(sidecar, thr)
-
-        def stage1(cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
-            bi, ci = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
-            if len(cpdf) and len(bpdf):
-                recon, thr_row = decode(cpdf)
-                cn = cpdf["c_norm"].values.astype(np.float64)
-                cids = cpdf["c_id"].values
-                step = max(1, (1 << 24) // len(cpdf))
-                for lo in range(0, len(bpdf), step):
-                    chunk = bpdf.iloc[lo : lo + step]
-                    bids = chunk["b_id"].values
-                    bn = chunk["b_norm"].values.astype(np.float64)
-                    sims = (_rows(chunk, rung.bcols) @ recon.T) / np.outer(bn, cn)
-                    hit = (sims >= thr_row) & (bids[:, None] != cids[None, :])
-                    rows, cols = np.nonzero(hit)
-                    bi.append(bids[rows])
-                    ci.append(cids[cols])
-            return pd.DataFrame(
-                {"b_id": np.concatenate(bi).astype("int64"),
-                 "c_id": np.concatenate(ci).astype("int64")}
-            )
-
-        c_g, b_g, keys = _salt_cell_blocks(c, b, "c_id", "cell", max_cell_rows)
-        cand = (
-            c_g.groupby(*keys)
-            .cogroup(b_g.groupby(*keys))
-            .applyInPandas(stage1, schema="b_id long, c_id long")
-            .distinct()
+        cand, probes = _probe_scan(
+            b, c, centroids, n_probe, rung.decode(sidecar, thr), rung.bcols, pairs=True
         )
+        cand = cand.distinct()
+        b = batch.sparkSession.createDataFrame(probes, "cell int, b_id long")
     else:
         # skinny (b_id, c_id) candidate pairs; distinct also collapses
         # a crash-replayed append's duplicate index rows
+        b = assign_cells(b, centroids, "b_id", "b_vec", n_probe=n_probe)
         cand = (
             c.join(F.broadcast(b), on="cell")
             .filter(F.col("c_id") != F.col("b_id"))
@@ -3492,7 +3445,6 @@ def semantic_dedup_gate(
     n_probe: int = 2,
     impl: str = "jvm",
     pushdown_candidate_ids: bool = False,
-    max_cell_rows: int | None = 100_000,
     gate_stats: dict | None = None,
     recommend_stats: dict | None = None,
 ) -> DataFrame:
@@ -3535,8 +3487,8 @@ def semantic_dedup_gate(
     candidate ids into the recheck's corpus scan as an IN filter (one
     driver round-trip); ``gate_stats``: see :func:`_exact_gate_recheck`
     (the runtime twin of the ``emb_gate_margin_report`` /
-    ``emb_gate_pq_margin_report`` sizing reports). ``impl`` /
-    ``max_cell_rows``: as in :func:`incremental_semantic_dedup`.
+    ``emb_gate_pq_margin_report`` sizing reports). ``impl``: as in
+    :func:`incremental_semantic_dedup`.
     Rung choice guidance: docs/llm_operators.md.
 
     ``recommend_stats`` (opt-in dict): filled with ``signals``,
@@ -3601,7 +3553,6 @@ def semantic_dedup_gate(
             batch, corpus, centroids,
             id_col=id_col, vec_col=vec_col, threshold=threshold,
             n_probe=n_probe, impl=impl, corpus_cells=cells,
-            max_cell_rows=max_cell_rows,
         )
     rung = _GATE_RUNGS[gate_kind]
     sidecar = {"sq8": sq8_bounds, "pq": codebooks, "prefix": prefix_dims}[gate_kind]
@@ -3615,8 +3566,7 @@ def semantic_dedup_gate(
     assert corpus is not None and index is not None
     return _two_stage_gate(
         rung, sidecar, batch, corpus, centroids, index, id_col, vec_col,
-        threshold, margin, n_probe, impl, pushdown_candidate_ids,
-        max_cell_rows, gate_stats,
+        threshold, margin, n_probe, impl, pushdown_candidate_ids, gate_stats,
     )
 
 

@@ -4178,17 +4178,15 @@ FROM rows_
 
 def q_emb_gate_blas_parity(spark, sf_dir):
     """Driver-checks the blas PRODUCTION path of the semantic gate
-    (streaming.incremental_semantic_ingest defaults impl='blas')
-    including the r9 max_cell_rows salting: with n_probe == n_cells
-    every batch row probes every cell, so the gate is EXACT — drop
-    iff ANY different-id corpus cosine >= threshold — and the oracle
-    is a plain NOT EXISTS, no quantizer arithmetic at all. The gate
-    runs twice, impl='jvm' and impl='blas' with max_cell_rows=50
-    (500-row corpus / 8 cells, so every real cell salts into
-    sub-blocks), and the full-outer join of the two kept sets must
-    collapse to identical TRUE/TRUE rows the oracle reproduces —
-    any impl divergence or salting bug surfaces as a hash
-    mismatch."""
+    (streaming.incremental_semantic_ingest defaults impl='blas'): with
+    n_probe == n_cells every batch row probes every cell, so the gate
+    is EXACT — drop iff ANY different-id corpus cosine >= threshold —
+    and the oracle is a plain NOT EXISTS, no quantizer arithmetic at
+    all. The gate runs twice, impl='jvm' (broadcast cell join) and
+    impl='blas' (one corpus scan against the collected batch), and
+    the full-outer join of the two kept sets must collapse to
+    identical TRUE/TRUE rows the oracle reproduces — any impl
+    divergence surfaces as a hash mismatch."""
     from dataprocessingframework_spark.operators.similarity import (
         _ivf_centroids,
         incremental_semantic_dedup,
@@ -4206,8 +4204,7 @@ def q_emb_gate_blas_parity(spark, sf_dir):
         batch, corpus, cents, threshold=0.95, n_probe=8, impl="jvm"
     ).select("vec_id")
     kept_b = incremental_semantic_dedup(
-        batch, corpus, cents, threshold=0.95, n_probe=8, impl="blas",
-        max_cell_rows=50,
+        batch, corpus, cents, threshold=0.95, n_probe=8, impl="blas"
     ).select("vec_id")
     out = (
         kept_j.withColumn("in_jvm", F.lit(True))
@@ -9656,10 +9653,9 @@ ORDER BY q_id, nbr_id
 
 def q_emb_ivf_cell_stats(spark, sf_dir):
     """IVF quantizer cell-balance diagnostics (r11) — the report
-    that sizes n_cells/n_probe/max_cell_rows before building a 100 TB
-    index: probe latency is governed by the largest probed cell and
-    the semantic-gate salting threshold should be read off max_cell,
-    not guessed. Seeded iters=0 quantizer (the md5 hash-min
+    that sizes n_cells/n_probe and the balance cap before building a
+    100 TB index: probe latency is governed by the largest probed
+    cell, and the cap should be read off max_cell, not guessed. Seeded iters=0 quantizer (the md5 hash-min
     construction shared with emb_ivf_topk_seeded) makes every cell
     assignment portable arithmetic, so the whole one-row report is
     FULL-oracled. One groupBy(cell) count + one aggregate over the

@@ -311,7 +311,6 @@ def incremental_semantic_ingest(
     index_table: str | None = None,
     index_path: str | None = None,
     index_num_buckets: int = 16,
-    max_cell_rows: int | None = 100_000,
     compact_every: int | None = None,
     index_sq8: bool = False,
     index_pq: bool = False,
@@ -337,15 +336,15 @@ def incremental_semantic_ingest(
     outside the stream (``materialize_ivf_index`` /
     ``load_ivf_centroids`` — or seeded ``_ivf_centroids(iters=0)``
     for an engine-portable gate); per-batch cost is the batch's cell
-    assignment plus a cell equi-join against the corpus — never an
-    all-pairs score, and no quantizer retraining inside the stream.
-    Default ``impl='blas'`` scores each cell as one cogrouped matmul
+    assignment plus a cell-blocked score against the corpus — never
+    an all-pairs score, and no quantizer retraining inside the
+    stream. Default ``impl='blas'`` is one corpus scan against the
+    collected batch, one numpy matmul per (Arrow chunk, cell)
     (measured >=45x over the JVM fold on a 100k-vs-100k batch;
-    PLANS.md "r8 semantic ingest soak"); pass 'jvm' for
-    fold-order-exact scoring. ``max_cell_rows`` (default on) is the
-    blas path's per-task memory cap against quantizer-skew
-    mega-cells — see ``incremental_semantic_dedup``. Within-batch
-    semantic dups are kept (the incremental contract).
+    PLANS.md "r8 semantic ingest soak"); the micro-batch must fit on
+    the driver, the same contract as the jvm path's broadcast. Pass
+    'jvm' for fold-order-exact scoring. Within-batch semantic dups
+    are kept (the incremental contract).
 
     ``index_table`` switches the corpus side to a MAINTAINED
     materialized IVF index: each batch probes the cell-bucketed
@@ -440,9 +439,8 @@ def incremental_semantic_ingest(
     the sound regime (cells only bound WHERE candidates are probed;
     the threshold decision is exact cosine), so acceptance semantics
     are unchanged — pinned by the mid-stream-rebalance test equaling
-    the exact gate. ``rebalance_cell_rows`` defaults to
-    ``max_cell_rows`` (the salting cap — the same mega-cell the cap
-    defends against is the one worth splitting);
+    the exact gate. ``rebalance_cell_rows`` (required with the
+    policy) is the cell size above which a cell is worth splitting;
     ``rebalance_rounds`` caps each repair's split rounds;
     ``rebalance_log`` (pass a list) records per index write
     ``{batch_id, n_rows, max_cell, imbalance, triggered,
@@ -492,10 +490,10 @@ def incremental_semantic_ingest(
                 "rebalance_on_imbalance requires index_table (the"
                 " policy reads the maintained index's cell sizes)"
             )
-        if rebalance_cell_rows is None and max_cell_rows is None:
+        if rebalance_cell_rows is None:
             raise ValueError(
                 "rebalance_on_imbalance needs a cell cap: pass"
-                " rebalance_cell_rows= (or leave max_cell_rows set)"
+                " rebalance_cell_rows="
             )
     if auto_rung is not None:
         if index_table is None:
@@ -607,7 +605,6 @@ def incremental_semantic_ingest(
                 prefix_dims=state["prefix_dims"],
                 id_col=id_col, vec_col=vec_col,
                 threshold=threshold, n_probe=n_probe, impl=impl,
-                max_cell_rows=max_cell_rows,
             )
         elif prior:
             corpus = spark.read.parquet(*prior)
@@ -615,7 +612,6 @@ def incremental_semantic_ingest(
                 curated, corpus, state["cents"],
                 id_col=id_col, vec_col=vec_col,
                 threshold=threshold, n_probe=n_probe, impl=impl,
-                max_cell_rows=max_cell_rows,
             )
         else:
             fresh = curated
@@ -752,13 +748,9 @@ def incremental_semantic_ingest(
             and index_table is not None
             and spark.catalog.tableExists(index_table)
         ):
-            cap = (
-                rebalance_cell_rows
-                if rebalance_cell_rows is not None
-                else max_cell_rows
-            )
             decision = rebalance_trigger(
-                spark.table(index_table), rebalance_on_imbalance, cap
+                spark.table(index_table), rebalance_on_imbalance,
+                rebalance_cell_rows,
             )
             n_before = len(state["cents"])
             rebalanced = False
@@ -787,7 +779,7 @@ def incremental_semantic_ingest(
                         F.col(vec_col).alias("embedding"),
                     )
                     new_cents = balance_centroids(
-                        fv, state["cents"], cap,
+                        fv, state["cents"], rebalance_cell_rows,
                         rounds=rebalance_rounds, impl=impl,
                     )
                     if new_cents != state["cents"]:

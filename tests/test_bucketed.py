@@ -1251,7 +1251,7 @@ def test_pq_compressed_gate_equals_exact_gate(spark, sf_dir, tmp_path):
         for kw in (
             dict(impl="jvm"),
             dict(impl="jvm", pushdown_candidate_ids=True),
-            dict(impl="blas", max_cell_rows=13),
+            dict(impl="blas"),
         ):
             comp = sorted(
                 r.vec_id
@@ -1899,3 +1899,128 @@ def test_index_companion_tables_written_single_partition(
         for t in ("t_meta_1slice", "t_meta_1slice_centroids",
                   "t_meta_1slice_sq8"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+@pytest.fixture(scope="module")
+def edge_gate(spark, tmp_path_factory):
+    """A 120-row 8-d corpus living only in IVF cells 0 and 1 of a
+    4-cell quantizer (dims 2 and 3 are zero), indexed at every rung:
+    float, sq8, prefix (d_p=4) and pq (4 subspaces, 16 codes)."""
+    import numpy as np
+
+    from dataprocessingframework_spark.operators.similarity import (
+        materialize_ivf_index,
+        materialize_pq_index,
+    )
+
+    rng = np.random.default_rng(5)
+    vecs = rng.normal(size=(120, 8))
+    vecs[:, :2] = np.abs(vecs[:, :2])
+    vecs[:, 2:4] = 0.0
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = np.eye(4, 8).tolist()
+    base = tmp_path_factory.mktemp("edge_gate")
+    common = dict(centroids=cents, n_cells=4, num_buckets=4, iters=0, impl="jvm")
+    idx = {
+        "float": materialize_ivf_index(corpus, "t_edge_f", path=str(base / "f"), **common)[0],
+        "sq8": materialize_ivf_index(corpus, "t_edge_s", path=str(base / "s"), sq8=True, **common)[0],
+        "prefix": materialize_ivf_index(
+            corpus, "t_edge_x", path=str(base / "x"), prefix_dims=4, **common
+        )[0],
+        "pq": materialize_pq_index(
+            corpus, "t_edge_p", path=str(base / "p"), m=4, k_codes=16, **common
+        )[0],
+    }
+    tables = {"float": "t_edge_f", "sq8": "t_edge_s", "prefix": "t_edge_x", "pq": "t_edge_p"}
+    yield corpus, vecs, cents, idx, tables
+    for t in tables.values():
+        for sfx in ("", "_centroids", "_sq8", "_pq", "_prefix"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}{sfx}")
+
+
+@pytest.mark.parametrize(
+    "case", ["empty_batch", "zero_norm_batch", "empty_corpus", "unpopulated_cells", "replay"]
+)
+def test_semantic_gate_blas_edge_case_parity(spark, edge_gate, case):
+    """The blas gates collect the batch and assign its cells on the
+    driver; on the inputs where that branch has nothing (or nothing
+    scoreable) to do, and on a crash-replayed row, the blas float gate
+    keeps exactly the jvm gate's rows and every compressed blas rung
+    (and the float-index rung) keeps exactly the float gate's rows."""
+    from dataprocessingframework_spark.operators.similarity import (
+        incremental_semantic_dedup,
+        semantic_dedup_gate,
+    )
+
+    corpus, vecs, cents, idx, tables = edge_gate
+    schema = "vec_id long, embedding array<double>"
+    near = [(1000 + i, [float(2.0 * x + 1e-4) for x in vecs[i]]) for i in range(3)]
+    rows = {
+        "empty_batch": [],
+        "zero_norm_batch": [(900 + i, [0.0] * 8) for i in range(3)],
+        "empty_corpus": near,
+        # dims 2 and 3 only: both probed cells (n_probe=2) hold no rows
+        "unpopulated_cells": [(950 + i, [0.0, 0.0, 1.0 + i, 2.0] + [0.0] * 4) for i in range(3)],
+        # corpus row 6 (no other corpus row within 0.9 cosine)
+        # replayed under its own id, beside a true dup
+        "replay": [(6, [float(x) for x in vecs[6]])] + near[:1],
+    }[case]
+    batch = spark.createDataFrame(rows, schema)
+    if case == "empty_corpus":
+        corpus = corpus.limit(0)
+        idx = {k: v.limit(0) for k, v in idx.items()}
+
+    def kept(df):
+        return sorted(r.vec_id for r in df.select("vec_id").collect())
+
+    kw = dict(threshold=0.95, n_probe=2)
+    jvm = kept(incremental_semantic_dedup(batch, corpus, cents, impl="jvm", **kw))
+    assert kept(incremental_semantic_dedup(batch, corpus, cents, impl="blas", **kw)) == jvm
+    for rung, index in idx.items():
+        got = kept(
+            semantic_dedup_gate(
+                batch, None if rung == "float" else corpus, cents, index=index,
+                index_table=tables[rung], impl="blas", **kw,
+            )
+        )
+        assert got == jvm, rung
+    want = {"replay": [6], "empty_batch": []}.get(case, sorted(r[0] for r in rows))
+    assert jvm == want
+
+
+def test_semantic_gate_blas_prunes_index_buckets(spark, sf_dir, tmp_path):
+    """The blas gate over a cell-bucketed index filters the scan to the
+    batch's probed cells, so Spark reads only their bucket files: a
+    2-row batch probing 2 cells each reads fewer than all 16 buckets,
+    and keeps the same rows as the unpruned jvm gate."""
+    import re
+
+    from dataprocessingframework_spark.operators.similarity import (
+        materialize_ivf_index,
+        semantic_dedup_gate,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
+    batch = emb.filter(F.col("vec_id") < 2).withColumn("vec_id", F.col("vec_id") + 10_000)
+    try:
+        idx, cents = materialize_ivf_index(
+            emb, "t_gate_prune", n_cells=16, iters=0, num_buckets=16,
+            path=str(tmp_path / "prune"),
+        )
+        out = semantic_dedup_gate(batch, None, cents, index=idx, n_probe=2, impl="blas")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        m = re.findall(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
+        assert len(m) == 1, plan
+        assert int(m[0][0]) < int(m[0][1]) == 16, m
+        got = sorted(r.vec_id for r in out.collect())
+        assert got == sorted(
+            r.vec_id
+            for r in semantic_dedup_gate(batch, None, cents, index=idx, n_probe=2).collect()
+        )
+        assert got == []  # each row meets its own vector under another id
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_gate_prune")
+        spark.sql("DROP TABLE IF EXISTS t_gate_prune_centroids")

@@ -30,6 +30,7 @@ GATE_ORACLES = [
     "emb_gate_pq_margin_report",
     "emb_gate_blas_parity",
     "emb_gate_rung_policy",
+    "emb_rebalance_policy",
     "stream_semantic_ingest",
     "dd_semantic_vs_lexical",
 ]

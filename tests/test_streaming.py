@@ -849,15 +849,14 @@ def test_sq8_gate_pushdown_candidate_ids_equivalent(spark):
         )
         assert pushed == plain
         assert 0 < len(plain) < 20  # drops some, keeps some
-        # blas stage-1 (cogrouped decode+matmul) must return the same
-        # kept set — stage 2 decides exactly on both paths; salting
-        # forced so every cell splits
+        # blas stage-1 (one index scan, decode+matmul per cell) must
+        # return the same kept set — stage 2 decides exactly on both
+        # paths
         blas = sorted(
             r.vec_id
             for r in semantic_dedup_gate(
                 batch, corpus, cents, idx, gate_kind="sq8", sq8_bounds=bounds,
                 threshold=0.9, n_probe=2, impl="blas",
-                max_cell_rows=7,
             ).collect()
         )
         assert blas == plain
