@@ -77,13 +77,10 @@ TIERS: dict[str, list[str]] = {
     "shards": [
         "shards_write_native", "shards_read_media_native",
         # metadata-only scan routes (r16, VERDICT r15 item 6):
-        # legacy = JVM csv glob with per-read inference (the pre-DSv2
-        # implementation), native = JVM csv with the published
-        # _schema.json pinned (read_metadata_shards engine="jvm"),
-        # dsv2 = the Python DataSource route (the Arrow hop priced
-        # honestly)
-        "shards_read_meta_legacy", "shards_read_meta_native",
-        "shards_read_meta_dsv2",
+        # native = JVM csv with the published _schema.json pinned
+        # (read_metadata_shards engine="jvm"), dsv2 = the Python
+        # DataSource route (the Arrow hop priced honestly)
+        "shards_read_meta_native", "shards_read_meta_dsv2",
     ],
 }
 
@@ -285,7 +282,6 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
         out["ann_gate_sq8"] = lambda: None
         out["shards_write_native"] = lambda: None
         out["shards_read_media_native"] = lambda: None
-        out["shards_read_meta_legacy"] = lambda: None
         out["shards_read_meta_native"] = lambda: None
         out["shards_read_meta_dsv2"] = lambda: None
         return out
@@ -298,7 +294,6 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
     # fixture built once in extra.
     _SHARD_READ_ENTRIES = {
         "shards_read_media_native",
-        "shards_read_meta_legacy",
         "shards_read_meta_native",
         "shards_read_meta_dsv2",
     }
@@ -364,7 +359,7 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
                 out["shards_read_media_native"] = shards_read
 
             # metadata-only scan routes over the same fixture: the
-            # identical aggregate through three plans
+            # identical aggregate through two plans
             from dataprocessingframework_spark.sources.reader import (
                 DatasetReader,
             )
@@ -375,24 +370,6 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
                     F.count(F.lit(1)).alias("n"),
                     F.count_distinct("split_name").alias("n_shards"),
                 ).collect()
-
-            def meta_legacy():
-                # the pre-DSv2 implementation: csv glob + per-read
-                # inference pass + input_file_name split_name
-                df = (
-                    spark.read.options(
-                        header=True, inferSchema=True, multiLine=True,
-                        escape='"',
-                    )
-                    .csv(os.path.join(rdir, "*.csv"))
-                    .withColumn(
-                        "split_name",
-                        F.regexp_extract(
-                            F.input_file_name(), r"([^/]+)\.csv$", 1
-                        ),
-                    )
-                )
-                _meta_agg(df)
 
             def meta_native():
                 _meta_agg(
@@ -408,8 +385,6 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
                     .df
                 )
 
-            if "shards_read_meta_legacy" in only:
-                out["shards_read_meta_legacy"] = meta_legacy
             if "shards_read_meta_native" in only:
                 out["shards_read_meta_native"] = meta_native
             if "shards_read_meta_dsv2" in only:

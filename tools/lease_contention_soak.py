@@ -46,7 +46,7 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dataprocessingframework_spark.sources import shards_source  # noqa: E402
 from dataprocessingframework_spark.sources.shard_fs import (  # noqa: E402

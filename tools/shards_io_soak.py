@@ -19,11 +19,12 @@ Usage: python tools/shards_io_soak.py [--rows 200000]
 from __future__ import annotations
 
 import argparse
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

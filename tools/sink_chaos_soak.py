@@ -34,7 +34,7 @@ import shutil
 import sys
 import tarfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql.types import (  # noqa: E402
     IntegerType,
