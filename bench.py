@@ -235,7 +235,7 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
         # multi-table LSH (OR-amplification, r6): L=3 plane tables,
         # one (table, bucket) equi-join, skinny-pair dedup pre-ranking
         "ann_lsh_multi_topk": big(
-            lambda s, d: similarity.lsh_topk_multi(
+            lambda s, d: similarity.lsh_topk(
                 q.T(s, d, "embeddings"),
                 q.T(s, d, "embeddings").filter(F.col("vec_id") < 50),
                 k=10,
@@ -318,7 +318,7 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
         shards_tag = uuid.uuid4().hex[:8]
         sh_paths = []
         if "shards_write_native" in only:
-            wdir = f"/root/repo/.scratch/bench_shards_w_{shards_tag}"
+            wdir = f"{q.SCRATCH}/bench_shards_w_{shards_tag}"
             sh_paths.append(wdir)
 
             def shards_write():
@@ -332,7 +332,7 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
 
             out["shards_write_native"] = shards_write
         if _SHARD_READ_ENTRIES & set(only):
-            rdir = f"/root/repo/.scratch/bench_shards_r_{shards_tag}"
+            rdir = f"{q.SCRATCH}/bench_shards_r_{shards_tag}"
             sh_paths.append(rdir)
             t0 = time.time()
             (
@@ -405,7 +405,7 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
 
         tag = uuid.uuid4().hex[:8]
         table = f"bench_ann_idx_{tag}"
-        path = f"/root/repo/.scratch/bench_ann_idx_{tag}"
+        path = f"{q.SCRATCH}/bench_ann_idx_{tag}"
         emb = q.T(spark, SF_DIR, "embeddings")
         t0 = time.time()
         idx = similarity.materialize_lsh_ann_index(
@@ -444,7 +444,7 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
 
         ivf_tag = uuid.uuid4().hex[:8]
         ivf_table = f"bench_ivf_idx_{ivf_tag}"
-        ivf_path = f"/root/repo/.scratch/bench_ivf_idx_{ivf_tag}"
+        ivf_path = f"{q.SCRATCH}/bench_ivf_idx_{ivf_tag}"
         emb2 = q.T(spark, SF_DIR, "embeddings")
         t0 = time.time()
         ivf_idx, _ = similarity.materialize_ivf_index(
@@ -491,7 +491,7 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
 
         sq8_tag = uuid.uuid4().hex[:8]
         sq8_table = f"bench_sq8_idx_{sq8_tag}"
-        sq8_path = f"/root/repo/.scratch/bench_sq8_idx_{sq8_tag}"
+        sq8_path = f"{q.SCRATCH}/bench_sq8_idx_{sq8_tag}"
         emb3 = q.T(spark, SF_DIR, "embeddings")
         t0 = time.time()
         sq8_idx, _ = similarity.materialize_ivf_index(
@@ -552,7 +552,7 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
 
         bld_tag = uuid.uuid4().hex[:8]
         bld_table = f"bench_sq8_bld_{bld_tag}"
-        bld_path = f"/root/repo/.scratch/bench_sq8_bld_{bld_tag}"
+        bld_path = f"{q.SCRATCH}/bench_sq8_bld_{bld_tag}"
         emb_bld = q.T(spark, SF_DIR, "embeddings")
 
         def sq8_index_build():
@@ -584,7 +584,7 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
 
         pq_tag = uuid.uuid4().hex[:8]
         pq_table = f"bench_pq_idx_{pq_tag}"
-        pq_path = f"/root/repo/.scratch/bench_pq_idx_{pq_tag}"
+        pq_path = f"{q.SCRATCH}/bench_pq_idx_{pq_tag}"
         emb4 = q.T(spark, SF_DIR, "embeddings")
         t0 = time.time()
         pq_idx, pq_cents, pq_books = similarity.materialize_pq_index(
@@ -602,15 +602,16 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
 
         def pq_probe():
             _noop(
-                similarity.ivf_pq_topk_from_index(
+                similarity.ivf_topk_from_index(
                     pq_idx,
                     pq_cents,
-                    pq_books,
                     q.T(spark, SF_DIR, "embeddings").filter(
                         F.col("vec_id") < 50
                     ),
                     k=10,
                     n_probe=4,
+                    impl="jvm",
+                    codebooks=pq_books,
                 )
             )
 
@@ -663,7 +664,7 @@ def bench_queries(spark, extra: dict[str, float], only: set[str] | None):
 
         g_tag = uuid.uuid4().hex[:8]
         g_table = f"bench_gate_sq8_{g_tag}"
-        g_path = f"/root/repo/.scratch/bench_gate_sq8_{g_tag}"
+        g_path = f"{q.SCRATCH}/bench_gate_sq8_{g_tag}"
         emb5 = q.T(spark, SF_DIR, "embeddings").select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("embedding"),

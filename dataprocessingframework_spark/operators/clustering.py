@@ -5,8 +5,10 @@ Cluster-then-act is the scale pattern for semantic operations on a
 (semantic dedup, stratified sampling, topic balancing, per-cluster
 quality review) within clusters instead of across the whole corpus.
 The reference has no embedding operations at all; this rounds out the
-similarity stack (cosine_topk / lsh_topk / ivf_topk in similarity.py
-share the same coarse-quantizer idea).
+similarity stack in similarity.py, whose ivf_topk applies the same
+partition-first idea to search: a coarse quantizer (hash-seeded
+centroids plus Lloyd rounds) blocks the corpus into cells, and a query
+scores only its probed cells.
 
 Built on Spark MLlib's distributed KMeans (JVM, Catalyst-adjacent):
 seeded and deterministic for a fixed input, tested for stability, but

@@ -1,22 +1,29 @@
 """Embedding similarity search over an ``array<float>`` column.
 
-Two paths, mirroring how a 100 TB pipeline actually runs ANN:
+Three top-k paths, mirroring how a 100 TB pipeline actually runs ANN:
 
 - ``cosine_topk``: brute-force exact top-k. The query side is small and
   broadcast, so the big side streams through one narrow stage — no
   shuffle of the corpus, cost O(corpus x queries). This is the baseline
-  and the verifier for the approximate path.
-- ``lsh_topk``: random-hyperplane LSH. Corpus and queries are bucketed
-  by sign-pattern of dot products against shared deterministic
-  hyperplanes; only same-bucket pairs are scored. Sub-linear scored
-  pairs at the cost of recall; multiple tables raise recall.
+  and the verifier for the approximate paths.
+- ``lsh_topk`` / ``lsh_topk_from_index``: random-hyperplane LSH. Corpus
+  and queries are bucketed by sign-pattern of dot products against
+  shared deterministic hyperplanes; only same-bucket pairs are scored.
+  Sub-linear scored pairs at the cost of recall; multiple tables raise
+  recall.
+- ``ivf_topk`` / ``ivf_topk_from_index`` / ``ivf_pq_topk_rerank``: an
+  IVF coarse quantizer; queries score only their probed cells, against
+  float, SQ8 or PQ-coded index rows.
 
-Dot products run JVM-side via ``aggregate(zip_with(...))`` — no Python
-in the hot loop.
+The JVM forms of all of them share one probe-join skeleton
+(:func:`_probe_side` + :func:`_probe_topk`). Dot products run JVM-side
+via ``aggregate(zip_with(...))`` — no Python in the hot loop.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 from collections.abc import Callable
 from typing import Any, NamedTuple
 
@@ -93,6 +100,83 @@ def _per_query_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+# A probe batch is broadcast only while its post-fanout row count stays
+# under this (see lsh_topk); a larger one shuffles both join sides.
+BROADCAST_THRESHOLD = 100_000
+# lsh_topk_from_index's probe-key pushdown disarms above this many keys.
+PUSHDOWN_KEY_CAP = 4096
+
+_Q_SIDE = ("q_id", "q_vec", "q_norm")
+_C_SIDE = ("nbr_id", "c_vec", "c_norm")
+
+
+def _probe_side(
+    df: DataFrame,
+    names: tuple[str, str, str],
+    id_col: str,
+    vec: str | Column,
+    norm_col: str | None = None,
+    *keys: str | Column,
+) -> DataFrame:
+    """One side of a top-k probe join: (id, vec, norm, *keys) renamed to
+    ``names`` (``_Q_SIDE`` or ``_C_SIDE``). ``vec`` is a column name or a
+    Column (an index's packed SQ8 codes, a PQ reconstruction);
+    ``norm_col`` names a stored norm, else the norm is folded here —
+    once per row, not once per joined pair.
+
+    Zero-norm rows (all-zero embeddings, a real artifact of failed
+    encoders) are dropped on every side: their cosine is 0/0, which
+    raises DIVIDE_BY_ZERO under ANSI mode and is otherwise a NaN that
+    sorts above every real neighbor under F.desc."""
+    i, v, n = names
+    vec = F.col(vec) if isinstance(vec, str) else vec
+    nrm = norm(vec) if norm_col is None else F.col(norm_col)
+    return df.select(
+        F.col(id_col).alias(i), vec.alias(v), nrm.alias(n), *keys
+    ).filter(F.col(n) > 0)
+
+
+def _probe_topk(
+    c: DataFrame,
+    q: DataFrame,
+    k: int,
+    on: str | list[str] | None = None,
+    score: Column | None = None,
+    dedup: bool = False,
+    broadcast: bool = True,
+) -> DataFrame:
+    """The shared tail of every JVM top-k path, REPOSE's shape (ICDE
+    2021): the corpus side ``c`` meets the query side ``q`` (both
+    :func:`_probe_side` frames) on the probe key ``on`` — a cross join
+    when there is none — with ``q`` broadcast unless ``broadcast`` is
+    False, so the corpus never shuffles. Self-pairs drop, each pair
+    scores ``score / (q_norm * c_norm)`` (``score`` defaults to the
+    float ``dot(q_vec, c_vec)``), and :func:`_per_query_topk` keeps a
+    partition-local top-k before the global merge.
+
+    ``dedup`` collapses duplicate (q_id, nbr_id) pairs on the skinny
+    score relation before ranking — only where they can arise: a pair
+    colliding in several LSH tables, or a maintained index holding a
+    crash-replayed append's duplicate rows (a doubled neighbor would
+    displace a distinct real one). Its exchange stays apart from the
+    ranking one on purpose: one repartition(q_id) was A/B'd 8 %
+    faster at sf0.1 but puts a hot query's whole candidate set in one
+    task; the (q_id, nbr_id) spread plus the map-side partial
+    WindowGroupLimit is the skew guard (PLANS.md r8)."""
+    if score is None:
+        score = dot(F.col("q_vec"), F.col("c_vec"))
+    q = F.broadcast(q) if broadcast else q
+    pairs = c.crossJoin(q) if on is None else c.join(q, on=on)
+    scored = pairs.filter(F.col("nbr_id") != F.col("q_id")).select(
+        "q_id",
+        "nbr_id",
+        (score / (F.col("q_norm") * F.col("c_norm"))).alias("cos_raw"),
+    )
+    if dedup:
+        scored = scored.dropDuplicates(["q_id", "nbr_id"])
+    return _per_query_topk(scored, k)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -118,44 +202,18 @@ def cosine_topk(
     amortization); float summation order differs, so scores can drift
     in the last ulp — use for production ANN, jvm for exact parity.
 
-    Zero-norm vectors (all-zero embeddings — a real artifact of
-    failed encoders) are EXCLUDED on both sides in both impls: their
-    cosine is 0/0 = NaN, which Spark's/DuckDB's descending sort ranks
-    above every real neighbor while numpy comparisons drop it — the
-    one place the two impls could diverge (ADVICE r5). Filtering is
-    the only semantics under which 'top-k by cosine' is well-defined.
+    Zero-norm vectors are EXCLUDED on both sides in both impls, as in
+    every top-k path (:func:`_probe_side`): NaN cosines rank first in
+    Spark's/DuckDB's descending sort while numpy comparisons drop them
+    — the one place the two impls could diverge (ADVICE r5).
     """
     if impl == "blas":
         return _cosine_topk_blas(corpus, queries, id_col, vec_col, k)
-    # norms are precomputed per SIDE, not per pair: the corpus norm fold
-    # runs once per corpus row instead of once per (corpus x query) pair
-    # — same fold order, bit-identical values, ~2x less codegen work
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
-    ).filter(F.col("q_norm") > 0)
     # NB: no fan_out here — measured at sf0.1, repartitioning the
     # (small) embedding corpus costs more than the serial fold saves;
     # at real scale the corpus arrives with its own splits anyway
-    c = corpus.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
-    ).filter(F.col("c_norm") > 0)
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("nbr_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "nbr_id",
-            (
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cos_raw"),
-        )
-    )
-    return _per_query_topk(scored, k)
+    q = _probe_side(queries, _Q_SIDE, id_col, vec_col)
+    return _probe_topk(_probe_side(corpus, _C_SIDE, id_col, vec_col), q, k)
 
 
 def _cosine_topk_blas(
@@ -322,8 +380,8 @@ def lsh_topk(
     k: int = 5,
     dim: int = 64,
     n_planes: int = 8,
+    n_tables: int = 1,
     probe_radius: int = 1,
-    broadcast_threshold: int = 100_000,
     broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """Approximate top-k: score only pairs sharing a probed LSH bucket.
@@ -334,103 +392,58 @@ def lsh_topk(
     distance 1 from its own — the likeliest homes of near neighbors
     that fell on the other side of one hyperplane. Only the (tiny)
     query side fans out x(n_planes+1); the corpus keeps exactly one
-    bucket per row, so each candidate pair still arises once and the
-    corpus-side shuffle volume is unchanged. probe_radius=0 restores
-    single-bucket probing. At 100 TB the shape stays the only viable
-    one: bucket assignment is a narrow map, the join is an equi-join
-    on bucket (shuffle on bucket id, AQE-skew-splittable).
+    bucket per row and table. probe_radius=0 restores single-bucket
+    probing. At 100 TB the shape stays the only viable one: bucket
+    assignment is a narrow map, the join is an equi-join on bucket
+    (on (tbl, bucket) with several tables; shuffle on bucket id,
+    AQE-skew-splittable).
 
-    Comparability note: the default changed 0 -> 1 in round 3, so
-    lsh_topk recall and bench timings before/after that round are not
-    directly comparable (the query side scores ~(n_planes+1)x more
-    candidate pairs; recall only improves).
+    ``n_tables=L`` adds independent plane sets: a candidate passes if
+    it shares a (probed) bucket with the query in ANY table (classic
+    LSH OR-amplification — Indyk–Motwani; the production knob for
+    raising recall without the exponential radius-2 probe blowup).
+    Table 0 is the single-table plane set, so recall can only improve
+    with L; shuffle volume grows linearly in L, never all-pairs. Pairs
+    colliding in several tables are scored per collision and deduped
+    on the skinny score relation (see :func:`_probe_topk`); one table
+    needs no dedup. The body is the probe of :func:`lsh_topk_from_index`
+    over the inline :func:`lsh_ann_index` of ``corpus``.
+
+    Comparability note: the probe_radius default changed 0 -> 1 in
+    round 3, so recall and bench timings before/after that round are
+    not directly comparable.
 
     The query side is broadcast only while its post-probe row count
-    stays under ``broadcast_threshold``; a large probe batch (say 10M
-    rows against a corpus) instead flows through a plain equi-join on
-    bucket, which shuffles both sides but cannot OOM the driver or
-    executors on broadcast materialization. The auto-decision costs a
-    count() action (one query-side scan); ``broadcast_queries``
-    True/False skips it when the caller knows the batch size class.
+    (|queries| x L x fanout) stays under ``BROADCAST_THRESHOLD``; a
+    large probe batch (say 10M rows against a corpus) instead flows
+    through a plain equi-join, which shuffles both sides but cannot OOM
+    the driver or executors on broadcast materialization. The
+    auto-decision costs a count() action (one query-side scan);
+    ``broadcast_queries`` True/False skips it when the caller knows the
+    batch size class.
     """
-    if probe_radius not in (0, 1):
-        raise ValueError("probe_radius must be 0 or 1")
-    planes = _hyperplanes(dim, n_planes)
-    # norms precomputed per SIDE (as in cosine_topk): the fold runs once
-    # per row, not once per same-bucket pair
-    # zero-norm rows are dropped on BOTH sides (as in cosine_topk):
-    # cos = 0/0 = NaN would sort first under F.desc and displace real
-    # neighbors from the top-k
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
-        lsh_bucket_expr(F.col(vec_col), planes).alias("bucket"),
-    ).filter(F.col("q_norm") > 0)
-    if probe_radius == 1:
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(2**p).cast("long"))
-                for p in range(n_planes)
-            ],
-        )
-        q = q.select(
-            "q_id", "q_vec", "q_norm", F.explode(probes).alias("bucket")
-        )
-    c = corpus.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
-        lsh_bucket_expr(F.col(vec_col), planes).alias("bucket"),
-    ).filter(F.col("c_norm") > 0)
-    fanout = (n_planes + 1) if probe_radius == 1 else 1
-    # broadcast_queries=None auto-decides via a count() of the query
-    # side — that action is a full query-side scan, so callers that
-    # already KNOW their probe batch is small (or huge) pass
-    # True/False and skip the extra job
-    if broadcast_queries is None:
-        broadcast_queries = queries.count() * fanout <= broadcast_threshold
-    q_side = F.broadcast(q) if broadcast_queries else q
-    scored = (
-        c.join(q_side, on="bucket")
-        .filter(F.col("nbr_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "nbr_id",
-            (
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cos_raw"),
-        )
+    return _lsh_probe(
+        corpus, queries, id_col, vec_col, k, dim, n_planes, n_tables,
+        probe_radius, broadcast_queries, indexed=False,
     )
-    # _per_query_topk's map-side partial WindowGroupLimit keeps a hot
-    # bucket (skewed sign-pattern) from funneling its full membership
-    # through one q_id partition
-    return _per_query_topk(scored, k)
 
 
 def _probe_structs(
-    vec: Column,
-    tables: list[list[list[float]]],
-    n_planes: int,
-    probe_radius: int,
+    buckets: list[Column], n_planes: int, probe_radius: int
 ) -> Column:
-    """array<struct<tbl,bucket>> for the query side (with probes)."""
-    elems = []
-    for t, planes in enumerate(tables):
-        b = lsh_bucket_expr(vec, planes)
-        masks = [F.lit(0).cast("long")]
-        if probe_radius == 1:
-            masks += [F.lit(2**p).cast("long") for p in range(n_planes)]
-        elems += [
-            F.struct(
-                F.lit(t).alias("tbl"),
-                b.bitwiseXOR(m).alias("bucket"),
-            )
+    """array<struct<tbl,bucket>> for the query side: each table's
+    bucket column, plus its n_planes Hamming-1 neighbors under
+    multi-probe."""
+    masks = [F.lit(0).cast("long")]
+    if probe_radius == 1:
+        masks += [F.lit(2**p).cast("long") for p in range(n_planes)]
+    return F.array(
+        *[
+            F.struct(F.lit(t).alias("tbl"), b.bitwiseXOR(m).alias("bucket"))
+            for t, b in enumerate(buckets)
             for m in masks
         ]
-    return F.array(*elems)
+    )
 
 
 def _bucket_structs(
@@ -446,93 +459,6 @@ def _bucket_structs(
             for t, planes in enumerate(tables)
         ]
     )
-
-
-def lsh_topk_multi(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    dim: int = 64,
-    n_planes: int = 8,
-    n_tables: int = 3,
-    probe_radius: int = 1,
-    broadcast_threshold: int = 100_000,
-    broadcast_queries: bool | None = None,
-) -> DataFrame:
-    """Multi-table hyperplane LSH ANN: L independent plane sets, a
-    candidate passes if it shares a (probed) bucket with the query in
-    ANY table (classic LSH OR-amplification — Indyk–Motwani; the
-    production knob for raising recall without the exponential
-    radius-2 probe blowup). Table 0 uses the same planes as
-    :func:`lsh_topk`, so the single-table candidate set is a strict
-    subset and recall can only improve.
-
-    Scale shape: both sides explode x ``n_tables`` (a query also
-    x(n_planes+1) under multi-probe) and meet in ONE equi-join on the
-    (table, bucket) composite key — shuffle volume is L x the
-    single-table path, linear and AQE-skew-splittable, never
-    all-pairs. Duplicate candidates (pairs colliding in several
-    tables) are scored cheaply per collision, then deduped on the
-    SKINNY (q_id, nbr_id, score) relation before ranking — vectors
-    never travel through the dedup shuffle. The final ranking reuses
-    _per_query_topk's map-side partial WindowGroupLimit.
-    """
-    if probe_radius not in (0, 1):
-        raise ValueError("probe_radius must be 0 or 1")
-    if n_tables < 1:
-        raise ValueError("n_tables must be >= 1")
-    tables = [_hyperplanes(dim, n_planes, t) for t in range(n_tables)]
-
-    def probe_structs(vec: Column) -> Column:
-        return _probe_structs(vec, tables, n_planes, probe_radius)
-
-    def bucket_structs(vec: Column) -> Column:
-        return _bucket_structs(vec, tables)
-
-    # zero-norm rows dropped BEFORE the explode (one filter per row,
-    # not per probe) — NaN cosines would outrank real neighbors
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
-        F.explode(probe_structs(F.col(vec_col))).alias("pr"),
-    ).filter(F.col("q_norm") > 0).select(
-        "q_id", "q_vec", "q_norm", "pr.tbl", "pr.bucket"
-    )
-    c = corpus.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
-        F.explode(bucket_structs(F.col(vec_col))).alias("pr"),
-    ).filter(F.col("c_norm") > 0).select(
-        "nbr_id", "c_vec", "c_norm", "pr.tbl", "pr.bucket"
-    )
-    fanout = n_tables * ((n_planes + 1) if probe_radius == 1 else 1)
-    if broadcast_queries is None:
-        broadcast_queries = queries.count() * fanout <= broadcast_threshold
-    q_side = F.broadcast(q) if broadcast_queries else q
-    scored = (
-        c.join(q_side, on=["tbl", "bucket"])
-        .filter(F.col("nbr_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "nbr_id",
-            (
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cos_raw"),
-        )
-        # two exchanges ((q_id, nbr_id) dedup, then q_id ranking) are
-        # DELIBERATE: collapsing them to one repartition(q_id) was
-        # A/B'd 8% faster at sf0.1 but concentrates a hot query's
-        # entire candidate set in one task — the (q_id, nbr_id)
-        # spread + map-side partial WindowGroupLimit is the skew
-        # guard at scale (measured-and-rejected, PLANS.md r8)
-        .dropDuplicates(["q_id", "nbr_id"])
-    )
-    return _per_query_topk(scored, k)
 
 
 def lsh_ann_index(
@@ -552,14 +478,18 @@ def lsh_ann_index(
     Zero-norm rows are excluded at build time (their cosine is NaN
     against every query — same semantics as cosine_topk/lsh_topk)."""
     tables = [_hyperplanes(dim, n_planes, t) for t in range(n_tables)]
+    structs = _bucket_structs(F.col(vec_col), tables)
+    # one table needs no Generate: the explode of a one-element array
+    # cost lsh_topk ~30 % on the sf0.1 bench entry
+    pr = structs[0] if n_tables == 1 else F.explode(structs)
     return corpus.select(
         F.col(id_col),
         F.col(vec_col),
         norm(F.col(vec_col)).alias("vnorm"),
-        F.explode(_bucket_structs(F.col(vec_col), tables)).alias("bb"),
+        pr.alias("pr"),
     ).filter(F.col("vnorm") > 0).select(
-        F.col("bb.tbl").alias("tbl"),
-        F.col("bb.bucket").alias("bucket"),
+        F.col("pr.tbl").alias("tbl"),
+        F.col("pr.bucket").alias("bucket"),
         id_col,
         vec_col,
         "vnorm",
@@ -624,19 +554,19 @@ def lsh_topk_from_index(
     n_planes: int = 8,
     n_tables: int = 3,
     probe_radius: int = 1,
-    broadcast_threshold: int = 100_000,
     broadcast_queries: bool | None = None,
     pushdown_probe_keys: bool = False,
-    pushdown_key_cap: int = 4096,
 ) -> DataFrame:
-    """:func:`lsh_topk_multi` against a prebuilt (tbl, bucket) index —
-    the repeated-probe production path. (dim, n_planes, n_tables,
+    """:func:`lsh_topk` against a prebuilt (tbl, bucket) index — the
+    repeated-probe production path. (dim, n_planes, n_tables,
     probe_radius semantics) must match the index build. Same output
-    as lsh_topk_multi on the same corpus (pinned by tests).
+    as lsh_topk on the same corpus (pinned by tests). Pairs are always
+    deduped: a maintained index can hold a crash-replayed append's
+    duplicate rows.
 
     ``pushdown_probe_keys=True`` collects the batch's distinct
     (tbl, bucket) probe keys driver-side (bounded by |queries| x
-    fanout, hard-capped by ``pushdown_key_cap``) and pushes them into
+    fanout, hard-capped by ``PUSHDOWN_KEY_CAP``) and pushes them into
     the index scan as per-table ``bucket IN (...)`` predicates. The
     index files are sorted by (tbl, bucket)
     (:func:`materialize_lsh_ann_index`), so parquet row-group stats
@@ -649,86 +579,98 @@ def lsh_topk_from_index(
     cache the bytes this filter avoids reading/decoding cost less
     than its fixed ~0.4s driver-side keys-collect job at every shape
     tested (index sizes 2 MB - 2.7 GB, probe batches touching
-    8 - 80 %% of buckets; PLANS.md "r8 ANN probe soak"). Opt in where
+    8 - 80 % of buckets; PLANS.md "r8 ANN probe soak"). Opt in where
     scan bytes are genuinely expensive — cold data on object storage,
     or indexes orders of magnitude past the testable range — and the
-    probed fraction is small."""
+    probed fraction is small.
+
+    The index side keeps the ``vnorm > 0`` filter: an index
+    materialized before lsh_ann_index excluded zero-norm rows may
+    still hold them, and the predicate is a cheap scan-side filter
+    that does not disturb the exchange-free bucketed probe join."""
+    return _lsh_probe(
+        index, queries, id_col, vec_col, k, dim, n_planes, n_tables,
+        probe_radius, broadcast_queries, indexed=True,
+        pushdown_probe_keys=pushdown_probe_keys,
+    )
+
+
+def _lsh_probe(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    dim: int,
+    n_planes: int,
+    n_tables: int,
+    probe_radius: int,
+    broadcast_queries: bool | None,
+    indexed: bool,
+    pushdown_probe_keys: bool = False,
+) -> DataFrame:
+    """The body of :func:`lsh_topk` (``indexed=False``: ``corpus`` is
+    raw and indexed inline) and :func:`lsh_topk_from_index`
+    (``indexed=True``: ``corpus`` is an :func:`lsh_ann_index`)."""
     if probe_radius not in (0, 1):
         raise ValueError("probe_radius must be 0 or 1")
+    if n_tables < 1:
+        raise ValueError("n_tables must be >= 1")
     tables = [_hyperplanes(dim, n_planes, t) for t in range(n_tables)]
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
+    # zero-norm rows drop BEFORE the explode (one filter per row, not
+    # per probe), and each table's bucket folds once per row in that
+    # projection: inside the explode's array the fold would rerun for
+    # every probe mask (x(n_planes+1) interpreted folds per row)
+    bcols = [f"_b{t}" for t in range(n_tables)]
+    q = _probe_side(
+        queries, _Q_SIDE, id_col, vec_col, None,
+        *[
+            lsh_bucket_expr(F.col(vec_col), planes).alias(b)
+            for b, planes in zip(bcols, tables)
+        ],
+    ).select(
+        *_Q_SIDE,
         F.explode(
-            _probe_structs(F.col(vec_col), tables, n_planes, probe_radius)
+            _probe_structs([F.col(b) for b in bcols], n_planes, probe_radius)
         ).alias("pr"),
-    ).filter(F.col("q_norm") > 0).select(
-        "q_id", "q_vec", "q_norm", "pr.tbl", "pr.bucket"
-    )
-    fanout = n_tables * ((n_planes + 1) if probe_radius == 1 else 1)
-    if broadcast_queries is None:
-        broadcast_queries = queries.count() * fanout <= broadcast_threshold
-    q_side = F.broadcast(q) if broadcast_queries else q
-
-    probe_filter = None
-    if pushdown_probe_keys:
+    ).select(*_Q_SIDE, "pr.tbl", "pr.bucket")
+    if not indexed:
+        corpus = lsh_ann_index(corpus, id_col, vec_col, dim, n_planes, n_tables)
+    elif pushdown_probe_keys:
         # one tiny job over the (broadcast-sized) query batch; cap+1
         # rows bound the driver collect even if the caller passed an
         # unexpectedly wide batch with pushdown forced on
         keys = (
             q.select("tbl", "bucket")
             .distinct()
-            .limit(pushdown_key_cap + 1)
+            .limit(PUSHDOWN_KEY_CAP + 1)
             .collect()
         )
-        if len(keys) <= pushdown_key_cap:
+        if 0 < len(keys) <= PUSHDOWN_KEY_CAP:
             by_tbl: dict[int, list[int]] = {}
             for r in keys:
                 by_tbl.setdefault(r.tbl, []).append(r.bucket)
-            for tbl, buckets in sorted(by_tbl.items()):
-                clause = (F.col("tbl") == tbl) & F.col("bucket").isin(
-                    buckets
-                )
-                probe_filter = (
-                    clause
-                    if probe_filter is None
-                    else probe_filter | clause
-                )
-    # Defensive: indexes materialized before the zero-norm exclusion
-    # landed in lsh_ann_index may still hold vnorm=0 rows, whose NaN
-    # cosines would sort ABOVE every real neighbor under F.desc. The
-    # predicate is a cheap scan-side filter and does not disturb the
-    # exchange-free bucketed probe join.
-    if probe_filter is not None:
-        index = index.filter(probe_filter)
-    c = index.filter(F.col("vnorm") > 0).select(
-        "tbl",
-        "bucket",
-        F.col(id_col).alias("nbr_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col("vnorm").alias("c_norm"),
+            clauses = [
+                (F.col("tbl") == tbl) & F.col("bucket").isin(buckets)
+                for tbl, buckets in sorted(by_tbl.items())
+            ]
+            corpus = corpus.filter(functools.reduce(operator.or_, clauses))
+    fanout = n_tables * ((n_planes + 1) if probe_radius == 1 else 1)
+    # broadcast_queries=None auto-decides via a count() of the query
+    # side — that action is a full query-side scan, so callers that
+    # already KNOW their probe batch is small (or huge) pass
+    # True/False and skip the extra job
+    if broadcast_queries is None:
+        broadcast_queries = queries.count() * fanout <= BROADCAST_THRESHOLD
+    c = _probe_side(corpus, _C_SIDE, id_col, vec_col, "vnorm", "tbl", "bucket")
+    # one inline table: no pair can repeat, and tbl is the constant 0 —
+    # a single long key keeps Spark's LongHashedRelation probe, ~20 %
+    # faster than the (tbl, bucket) composite on the sf0.1 bench entry
+    multi = indexed or n_tables > 1
+    return _probe_topk(
+        c, q, k, on=["tbl", "bucket"] if multi else "bucket", dedup=multi,
+        broadcast=broadcast_queries,
     )
-    scored = (
-        c.join(q_side, on=["tbl", "bucket"])
-        .filter(F.col("nbr_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "nbr_id",
-            (
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cos_raw"),
-        )
-        # two exchanges ((q_id, nbr_id) dedup, then q_id ranking) are
-        # DELIBERATE: collapsing them to one repartition(q_id) was
-        # A/B'd 8% faster at sf0.1 but concentrates a hot query's
-        # entire candidate set in one task — the (q_id, nbr_id)
-        # spread + map-side partial WindowGroupLimit is the skew
-        # guard at scale (measured-and-rejected, PLANS.md r8)
-        .dropDuplicates(["q_id", "nbr_id"])
-    )
-    return _per_query_topk(scored, k)
 
 
 def _salt_self_join_blocks(
@@ -1123,53 +1065,18 @@ def ivf_topk(
     cents = centroids or _ivf_centroids(
         corpus, id_col, vec_col, n_cells, iters, impl=impl
     )
-    # norms are computed on each side BEFORE the cell join: a corpus
-    # row meets every query probing its cell and a broadcast query
-    # meets every corpus row in its probed cells, so folding the
-    # norms per joined PAIR (the old cosine(q, c) expression) paid
-    # each 64-element fold |pairs|/|rows| times over — same fix as
-    # the materialized-index probe (value-identical: same fold over
-    # the same row's data, just evaluated once)
     c = assign_cells(
-        corpus.select(
-            F.col(id_col).alias("nbr_id"),
-            F.col(vec_col).alias("c_vec"),
-            norm(F.col(vec_col)).alias("c_norm"),
-        ),
-        cents,
-        "nbr_id",
-        "c_vec",
-        n_probe=1,
-        impl=impl,
+        _probe_side(corpus, _C_SIDE, id_col, vec_col),
+        cents, "nbr_id", "c_vec", n_probe=1, impl=impl,
     )
     q = assign_cells(
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            norm(F.col(vec_col)).alias("q_norm"),
-        ),
-        cents,
-        "q_id",
-        "q_vec",
-        n_probe=n_probe,
-        impl=impl,
-    )
-    scored = (
-        c.join(F.broadcast(q), on="cell")
-        .filter(F.col("nbr_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "nbr_id",
-            (
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cos_raw"),
-        )
+        _probe_side(queries, _Q_SIDE, id_col, vec_col),
+        cents, "q_id", "q_vec", n_probe=n_probe, impl=impl,
     )
     # _per_query_topk's map-side partial WindowGroupLimit keeps a fat
     # IVF cell from funneling its full membership through one q_id
     # partition
-    return _per_query_topk(scored, k)
+    return _probe_topk(c, q, k, on="cell")
 
 
 SQ8_LEVELS = 256
@@ -1510,6 +1417,33 @@ def _pq_code_exprs(
     return exprs
 
 
+def _pq_recon(books: list[list[list[float]]]) -> Column:
+    """The PQ reconstruction of an index row's packed ``codes``: one
+    codebook lookup per subspace (element_at on a nested-array literal
+    indexed by the unpacked code), concatenated in dim order, so a dot
+    fold over it sums in the order of the build-side
+    reconstruction-norm fold and of the DuckDB oracle. Each k x subdim
+    codebook literal appears exactly ONCE — an earlier unrolled-sum
+    variant referenced the lookup per DIMENSION, duplicating every
+    literal sd times, and Catalyst analysis + janino paid for a
+    131k-node literal forest per probe (r8)."""
+    return F.concat(
+        *[
+            F.element_at(
+                _nested_array_lit(bk),
+                (
+                    F.shiftright(
+                        F.col("codes")[s // _SQ8_PER_WORD],
+                        8 * (s % _SQ8_PER_WORD),
+                    ).bitwiseAND(F.lit(255))
+                    + 1
+                ).cast("int"),
+            )
+            for s, bk in enumerate(books)
+        ]
+    )
+
+
 def load_pq_codebooks(
     spark: SparkSession, table: str
 ) -> list[list[list[float]]]:
@@ -1568,7 +1502,8 @@ def materialize_pq_index(
     consistent for what the index holds). ``mode='append'`` reuses
     the persisted centroids AND codebooks — re-seeding on a batch
     would shift the code space under existing rows. Probe via
-    :func:`ivf_pq_topk_from_index`. ``balance_cell_rows``: as in
+    ``ivf_topk_from_index(..., codebooks=load_pq_codebooks(...))``
+    or :func:`ivf_pq_topk_rerank`. ``balance_cell_rows``: as in
     :func:`materialize_ivf_index` — fresh builds only, runs
     :func:`balance_centroids` after training so the persisted
     quantizer is the balanced one."""
@@ -1769,88 +1704,6 @@ def materialize_pq_index(
     return spark.table(table), cents, books
 
 
-def ivf_pq_topk_from_index(
-    index: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_probe: int = 4,
-    impl: str = "jvm",
-    pushdown_probe_cells: bool = False,
-) -> DataFrame:
-    """Probe a :func:`materialize_pq_index` table: queries assign to
-    their n_probe nearest cells (narrow map, driver-held centroid
-    matrix), broadcast-join the index on ``cell``, and score
-    asymmetrically — original query vector against the PQ
-    reconstruction, rebuilt per candidate as one codebook lookup per
-    subspace (element_at on a nested-array literal indexed by the
-    unpacked code) with a statically unrolled multiply-add chain in
-    dim order, so the summation order matches the build-side
-    reconstruction-norm fold and the DuckDB oracle bit-for-bit. No
-    UDF anywhere; query norms materialize once on the broadcast
-    side."""
-    m = len(codebooks)
-    sd = len(codebooks[0][0])
-    q = assign_cells(
-        queries.select(
-            F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-        ),
-        centroids,
-        "q_id",
-        "q_vec",
-        n_probe=n_probe,
-        impl=impl,
-    ).withColumn("q_norm", norm(F.col("q_vec")))
-    if pushdown_probe_cells:
-        cells = [r.cell for r in q.select("cell").distinct().collect()]
-        index = index.filter(F.col("cell").isin(cells))
-    # reconstruction as ONE codebook lookup per subspace, then a flat
-    # dim-order dot fold. Each k x subdim codebook literal appears
-    # exactly ONCE — an earlier unrolled-sum variant referenced the
-    # lookup per DIMENSION, duplicating every nested-array literal
-    # sd times, and Catalyst analysis + janino paid for a 131k-node
-    # literal forest per probe (the r8 compact-literal lesson, again;
-    # the flat fold also keeps the oracle's exact summation order)
-    recon = F.concat(
-        *[
-            F.element_at(
-                _nested_array_lit(codebooks[s]),
-                (
-                    F.shiftright(
-                        F.col("codes")[s // _SQ8_PER_WORD],
-                        8 * (s % _SQ8_PER_WORD),
-                    ).bitwiseAND(F.lit(255))
-                    + 1
-                ).cast("int"),
-            )
-            for s in range(m)
-        ]
-    )
-    c = index.filter(F.col("vnorm") > 0).select(
-        "cell",
-        F.col("vec_id").alias("nbr_id"),
-        recon.alias("c_vec"),
-        F.col("vnorm").alias("c_norm"),
-    )
-    scored = (
-        c.join(F.broadcast(q), on="cell")
-        .filter(F.col("nbr_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "nbr_id",
-            (
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cos_raw"),
-        )
-        .dropDuplicates(["q_id", "nbr_id"])
-    )
-    return _per_query_topk(scored, k)
-
-
 def ivf_pq_topk_rerank(
     index: DataFrame,
     centroids: list[list[float]],
@@ -1873,38 +1726,20 @@ def ivf_pq_topk_rerank(
     of exact (PLANS.md "r10 IVF-PQ index") — compression costs only
     shortlist coverage, not ranking quality.
 
-    Scale shape: the shortlist (|queries| x shortlist rows, skinny)
-    BROADCASTS into the corpus join, so the full-precision corpus is
-    touched only through a broadcast-hash semi-lookup of candidate
-    ids — at 100 TB the re-rank reads shortlist-many vectors per
-    query, not the corpus."""
-    short = ivf_pq_topk_from_index(
-        index, centroids, codebooks, queries,
-        id_col, vec_col, k=shortlist, n_probe=n_probe, impl=impl,
+    Scale shape: the shortlist (|queries| x shortlist rows, skinny,
+    joined to its query vectors) BROADCASTS into the corpus join on
+    nbr_id, so the full-precision corpus is touched only through a
+    broadcast-hash lookup of candidate ids — at 100 TB the re-rank
+    reads shortlist-many vectors per query, not the corpus."""
+    short = ivf_topk_from_index(
+        index, centroids, queries, id_col, vec_col, k=shortlist,
+        n_probe=n_probe, impl=impl, codebooks=codebooks,
     ).select("q_id", "nbr_id")
-    c = corpus.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
-    ).filter(F.col("c_norm") > 0)
-    qv = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
+    q = short.join(
+        F.broadcast(_probe_side(queries, _Q_SIDE, id_col, vec_col)), on="q_id"
     )
-    scored = (
-        c.join(F.broadcast(short), on="nbr_id")
-        .join(F.broadcast(qv), on="q_id")
-        .select(
-            "q_id",
-            "nbr_id",
-            (
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cos_raw"),
-        )
-    )
-    return _per_query_topk(scored, k)
+    c = _probe_side(corpus, _C_SIDE, id_col, vec_col)
+    return _probe_topk(c, q, k, on="nbr_id")
 
 
 def update_hot_lineage(
@@ -2603,6 +2438,7 @@ def ivf_topk_from_index(
     impl: str = "blas",
     pushdown_probe_cells: bool = False,
     sq8_bounds: tuple[list, list] | None = None,
+    codebooks: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """:func:`ivf_topk` against a prebuilt cell-bucketed index — the
     repeated-probe production path (same output as ivf_topk with the
@@ -2616,91 +2452,66 @@ def ivf_topk_from_index(
     bucket-prunes whole files on the single-column-bucketed index.
     Default OFF for the same measured reason as
     lsh_topk_from_index's pushdown: warm-cache local scans are
-    cheaper than the keys-collect job even at 7.6 %% touched cells on
+    cheaper than the keys-collect job even at 7.6 % touched cells on
     a 10M-row index (PLANS.md "r8 ANN probe soak"); opt in on
     cold/object storage with small probed fractions.
 
-    ``sq8_bounds=(mins, maxs)`` (from :func:`load_sq8_bounds`) probes
-    an index built with ``sq8=True``: candidate vectors rebuild from
-    the packed codes via literal-shift codegen (no UDF) and score
-    against the stored dequantized norm — cosines are exact for the
-    stored approximation, ranking is approximate within quantization
-    distortion."""
+    The scoring follows what the index stores
+    (:func:`detect_gate_rung` on its columns), and a compressed index
+    needs its sidecar — a missing or mismatched one raises ValueError:
+
+    - float (:func:`materialize_ivf_index`): the stored vectors.
+    - SQ8 (``sq8=True``; pass ``sq8_bounds=load_sq8_bounds(...)``):
+      the packed codes score with a statically UNROLLED
+      ``sum_i q[i] * (mn_i + (code_i + 0.5) * step_i)``
+      (:func:`_sq8_dequant_dot`, shared with the gate); left-nested
+      additions keep the exact summation order of the aggregate fold
+      and the DuckDB oracle while skipping the per-candidate array and
+      HOF lambda overhead (54.1s -> 33.1s on the 1M-row probe, PLANS.md
+      "r10 SQ8 IVF index").
+    - PQ (:func:`materialize_pq_index`; pass
+      ``codebooks=load_pq_codebooks(...)``): the original query vector
+      against the reconstruction (:func:`_pq_recon`) — asymmetric
+      scoring, no UDF.
+
+    Compressed cosines are exact for the stored approximation (the
+    stored ``vnorm`` is the approximation's norm); ranking is
+    approximate within quantization distortion. A prefix index
+    (``prefix_dims=``) stores no full vectors to rank by and is
+    refused."""
+    rung = detect_gate_rung(index.columns)
+    if rung == "prefix":
+        raise ValueError(
+            "a prefix index stores only the leading dimensions — it"
+            " serves semantic_dedup_gate; probe top-k on a float, sq8"
+            " or pq index"
+        )
+    want = None if rung == "float" else _GATE_RUNGS[rung].sidecar
+    for kw, val in (("sq8_bounds", sq8_bounds), ("codebooks", codebooks)):
+        if kw == want and val is None:
+            raise ValueError(
+                f"index stores {rung} codes — pass {kw}="
+                f"{_GATE_RUNGS[rung].load.__name__}(spark, table)"
+            )
+        if kw != want and val is not None:
+            raise ValueError(f"{kw} given but the index is a {rung} index")
     q = assign_cells(
-        queries.select(
-            F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-        ),
-        centroids,
-        "q_id",
-        "q_vec",
-        n_probe=n_probe,
-        impl=impl,
+        _probe_side(queries, _Q_SIDE, id_col, vec_col),
+        centroids, "q_id", "q_vec", n_probe=n_probe, impl=impl,
     )
     if pushdown_probe_cells:
         cells = [r.cell for r in q.select("cell").distinct().collect()]
         index = index.filter(F.col("cell").isin(cells))
-    if sq8_bounds is not None:
-        mins, maxs = sq8_bounds
-        if "codes" not in index.columns:
-            raise ValueError(
-                "sq8_bounds given but the index has no 'codes' column"
-                " — build it with materialize_ivf_index(sq8=True)"
-            )
-        sq8_mode = True
-    elif "codes" in index.columns:
-        raise ValueError(
-            "index stores SQ8 codes — pass sq8_bounds="
-            "load_sq8_bounds(spark, table)"
-        )
+    score = None
+    if rung == "sq8":
+        vec = F.col("codes")
+        score = _sq8_dequant_dot("q_vec", "c_vec", *sq8_bounds)
+    elif rung == "pq":
+        vec = _pq_recon(codebooks)
     else:
-        sq8_mode = False
-    # the query norm is computed on the BROADCAST side — it
-    # materializes once per query row when the hash relation builds,
-    # instead of re-running the 64-element fold per candidate row
-    # (the join output is |candidates|, the broadcast side is |q|)
-    q = q.withColumn("q_norm", norm(F.col("q_vec")))
-    if sq8_mode:
-        # score the packed codes with a statically UNROLLED sum:
-        # sum_i q[i] * (mn_i + (code_i + 0.5) * step_i). Left-nested
-        # additions keep the exact left-to-right summation order of
-        # the aggregate fold (bit-identical results — the DuckDB
-        # oracle pins this), while skipping the per-candidate array
-        # materialization and the per-element HOF lambda overhead of
-        # dot(q_vec, dequant_array) — together with the broadcast-side
-        # q_norm, measured 54.1s -> 33.1s on the 1M-row probe
-        # (PLANS.md "r10 SQ8 IVF index").
-        cos_expr = _sq8_dequant_dot("q_vec", "codes", mins, maxs) / (
-            F.col("q_norm") * F.col("c_norm")
-        )
-        c = index.filter(F.col("vnorm") > 0).select(
-            "cell",
-            F.col("vec_id").alias("nbr_id"),
-            "codes",
-            F.col("vnorm").alias("c_norm"),
-        )
-    else:
-        cos_expr = dot(F.col("q_vec"), F.col("c_vec")) / (
-            F.col("q_norm") * F.col("c_norm")
-        )
-        # defensive vnorm>0 (pre-fix persisted indexes), as in the
-        # LSH probe
-        c = index.filter(F.col("vnorm") > 0).select(
-            "cell",
-            F.col("vec_id").alias("nbr_id"),
-            F.col("embedding").alias("c_vec"),
-            F.col("vnorm").alias("c_norm"),
-        )
-    scored = (
-        c.join(F.broadcast(q), on="cell")
-        .filter(F.col("nbr_id") != F.col("q_id"))
-        .select("q_id", "nbr_id", cos_expr.alias("cos_raw"))
-        # a MAINTAINED index can hold duplicate (vec_id) rows after a
-        # crash-replayed append (harmless to the existential gate, but
-        # here a doubled neighbor would displace a distinct real one
-        # from top-k) — same guard as the LSH probe's dedup
-        .dropDuplicates(["q_id", "nbr_id"])
-    )
-    return _per_query_topk(scored, k)
+        vec = F.col("embedding")
+    c = _probe_side(index, _C_SIDE, "vec_id", vec, "vnorm", "cell")
+    return _probe_topk(c, q, k, on="cell", score=score, dedup=True)
 
 
 def kcenter_select(
@@ -3300,17 +3111,7 @@ def _prefix_batch(b: DataFrame, dp: int) -> DataFrame:
 
 
 def _pq_bound(books: list[list[list[float]]], thr: float) -> Column:
-    def code(s: int) -> Column:
-        word = F.col("codes")[s // _SQ8_PER_WORD]
-        return F.shiftright(word, 8 * (s % _SQ8_PER_WORD)).bitwiseAND(F.lit(255))
-
-    recon = F.concat(
-        *[
-            F.element_at(_nested_array_lit(bk), (code(s) + 1).cast("int"))
-            for s, bk in enumerate(books)
-        ]
-    )
-    approx_cos = dot(F.col("b_vec"), recon) / (F.col("b_norm") * F.col("c_norm"))
+    approx_cos = dot(F.col("b_vec"), _pq_recon(books)) / (F.col("b_norm") * F.col("c_norm"))
     return approx_cos >= F.lit(thr) - F.lit(2.0) * F.col("resid") / F.col("c_norm")
 
 

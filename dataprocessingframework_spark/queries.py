@@ -19,6 +19,7 @@ Conventions for oracle parity (FIXTURES.md §3):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -40,6 +41,13 @@ from dataprocessingframework_spark.operators import (
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 P = MINHASH_PRIME
+
+# Scratch root for the tables, shards and stream stages the registry
+# queries write: ``.scratch`` (gitignored) in the checkout this module
+# runs from.
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 
 _SHIPPED: set[str] = set()
 
@@ -753,7 +761,7 @@ def q_stream_tumbling(spark, sf_dir):
     from dataprocessingframework_spark.streaming import tumbling_window_agg
 
     events = T(spark, sf_dir, "events")
-    stage_dir = f"/root/repo/.scratch/stream_events_{uuid.uuid4().hex[:8]}"
+    stage_dir = f"{SCRATCH}/stream_events_{uuid.uuid4().hex[:8]}"
     qname = f"stream_win_{uuid.uuid4().hex[:8]}"
     # stage a micros-precision copy (readStream needs a fixed schema dir)
     events.write.mode("overwrite").parquet(stage_dir)
@@ -808,7 +816,7 @@ def q_stream_enriched(spark, sf_dir):
     cust = T(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    stage_dir = f"/root/repo/.scratch/stream_enrich_{uuid.uuid4().hex[:8]}"
+    stage_dir = f"{SCRATCH}/stream_enrich_{uuid.uuid4().hex[:8]}"
     qname = f"stream_enrich_{uuid.uuid4().hex[:8]}"
     events.write.mode("overwrite").parquet(stage_dir)
     stream = spark.readStream.schema(events.schema).parquet(stage_dir)
@@ -929,7 +937,7 @@ def q_stream_curation(spark, sf_dir):
         read_corpus,
     )
 
-    base = f"/root/repo/.scratch/stream_cur_{uuid.uuid4().hex[:8]}"
+    base = f"{SCRATCH}/stream_cur_{uuid.uuid4().hex[:8]}"
     src, corpus, ckpt = f"{base}/src", f"{base}/corpus", f"{base}/ckpt"
     docs = T(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "n_chars"
@@ -1074,7 +1082,7 @@ def q_stream_interval_join(spark, sf_dir):
     )
 
     events = T(spark, sf_dir, "events")
-    stage_dir = f"/root/repo/.scratch/stream_ssj_{uuid.uuid4().hex[:8]}"
+    stage_dir = f"{SCRATCH}/stream_ssj_{uuid.uuid4().hex[:8]}"
     qname = f"stream_ssj_{uuid.uuid4().hex[:8]}"
     events.write.mode("overwrite").parquet(stage_dir)
 
@@ -1191,7 +1199,7 @@ def q_w1_roundtrip(spark, sf_dir):
     from dataprocessingframework_spark.sources.reader import DatasetReader
     from dataprocessingframework_spark.sources.writers import write_shards
 
-    out = f"/root/repo/.scratch/w1_roundtrip_{uuid.uuid4().hex[:8]}"
+    out = f"{SCRATCH}/w1_roundtrip_{uuid.uuid4().hex[:8]}"
     try:
         li = T(spark, sf_dir, "lineitem")
         write_shards(li, out, max_files_in_shard=5000)
@@ -1227,7 +1235,7 @@ def q_w_shards_native_roundtrip(spark, sf_dir):
     )
 
     register_shards_source(spark)
-    out = f"/root/repo/.scratch/w_native_{uuid.uuid4().hex[:8]}"
+    out = f"{SCRATCH}/w_native_{uuid.uuid4().hex[:8]}"
     try:
         docs = T(spark, sf_dir, "documents")
         (
@@ -1272,7 +1280,7 @@ def q_w_shards_meta_jvm(spark, sf_dir):
     )
 
     register_shards_source(spark)
-    out = f"/root/repo/.scratch/w_metajvm_{uuid.uuid4().hex[:8]}"
+    out = f"{SCRATCH}/w_metajvm_{uuid.uuid4().hex[:8]}"
     try:
         docs = T(spark, sf_dir, "documents")
         (
@@ -1333,7 +1341,7 @@ def q_w_shards_objectstore_roundtrip(spark, sf_dir):
     )
 
     register_shards_source(spark)
-    backing = f"/root/repo/.scratch/w_objstore_{uuid.uuid4().hex[:8]}"
+    backing = f"{SCRATCH}/w_objstore_{uuid.uuid4().hex[:8]}"
     out = f"fakeobj://{backing}"
     try:
         docs = T(spark, sf_dir, "documents")
@@ -1388,7 +1396,7 @@ def q_w_shardedfiles_native_roundtrip(spark, sf_dir):
     )
 
     register_shards_source(spark)
-    out = f"/root/repo/.scratch/w_shardedfiles_{uuid.uuid4().hex[:8]}"
+    out = f"{SCRATCH}/w_shardedfiles_{uuid.uuid4().hex[:8]}"
     try:
         docs = T(spark, sf_dir, "documents").select(
             "doc_id",
@@ -1450,7 +1458,7 @@ def q_w_shards_parquet_meta_roundtrip(spark, sf_dir):
     )
 
     register_shards_source(spark)
-    out = f"/root/repo/.scratch/w_pqmeta_{uuid.uuid4().hex[:8]}"
+    out = f"{SCRATCH}/w_pqmeta_{uuid.uuid4().hex[:8]}"
     try:
         docs = T(spark, sf_dir, "documents").select(
             "doc_id",
@@ -1506,7 +1514,7 @@ def q_w_shard_stats(spark, sf_dir):
     )
 
     register_shards_source(spark)
-    out = f"/root/repo/.scratch/w_census_{uuid.uuid4().hex[:8]}"
+    out = f"{SCRATCH}/w_census_{uuid.uuid4().hex[:8]}"
     try:
         docs = T(spark, sf_dir, "documents")
         (
@@ -1559,7 +1567,7 @@ def q_w_update_metadata_native(spark, sf_dir):
     )
 
     register_shards_source(spark)
-    out = f"/root/repo/.scratch/w_updmeta_{uuid.uuid4().hex[:8]}"
+    out = f"{SCRATCH}/w_updmeta_{uuid.uuid4().hex[:8]}"
     try:
         docs = T(spark, sf_dir, "documents")
         (
@@ -1616,9 +1624,9 @@ def q_stream_shards_sink(spark, sf_dir):
 
     register_shards_source(spark)
     tag = uuid.uuid4().hex[:8]
-    out = f"/root/repo/.scratch/stream_shards_{tag}"
-    ckpt = f"/root/repo/.scratch/stream_shards_ckpt_{tag}"
-    stage_dir = f"/root/repo/.scratch/stream_shards_src_{tag}"
+    out = f"{SCRATCH}/stream_shards_{tag}"
+    ckpt = f"{SCRATCH}/stream_shards_ckpt_{tag}"
+    stage_dir = f"{SCRATCH}/stream_shards_src_{tag}"
     try:
         docs = T(spark, sf_dir, "documents")
         # stage a directory copy (readStream sources need a dir)
@@ -1678,7 +1686,7 @@ def q_w_shards_compact(spark, sf_dir):
     )
 
     register_shards_source(spark)
-    out = f"/root/repo/.scratch/w_compact_{uuid.uuid4().hex[:8]}"
+    out = f"{SCRATCH}/w_compact_{uuid.uuid4().hex[:8]}"
     try:
         docs = T(spark, sf_dir, "documents")
         (
@@ -2349,7 +2357,7 @@ def q_w_hive_partitioned(spark, sf_dir):
         write_hive_partitioned,
     )
 
-    out = f"/root/repo/.scratch/hive_{uuid.uuid4().hex[:8]}"
+    out = f"{SCRATCH}/hive_{uuid.uuid4().hex[:8]}"
     try:
         write_hive_partitioned(
             T(spark, sf_dir, "events"), out, ["event_type"]
@@ -3032,7 +3040,6 @@ def q_emb_ann_recall(spark, sf_dir):
         cosine_topk,
         ivf_topk,
         lsh_topk,
-        lsh_topk_multi,
     )
 
     emb = T(spark, sf_dir, "embeddings")
@@ -3067,7 +3074,7 @@ def q_emb_ann_recall(spark, sf_dir):
         ).collect()[0]
     )
     r_lsh = float(recall_of(lsh_topk(emb, qs, k=k)))
-    r_mlsh = float(recall_of(lsh_topk_multi(emb, qs, k=k, n_tables=3)))
+    r_mlsh = float(recall_of(lsh_topk(emb, qs, k=k, n_tables=3)))
     r_ivf = float(recall_of(ivf_topk(emb, qs, k=k, n_cells=16, n_probe=4)))
     return spark.createDataFrame(
         [
@@ -3369,7 +3376,7 @@ def q_emb_gate_sq8(spark, sf_dir):
     cents = _ivf_centroids(corpus, "vec_id", "embedding", 16, iters=0)
     tag = uuid.uuid4().hex[:8]
     table = f"t_gate_sq8_{tag}"
-    path = f"/root/repo/.scratch/gate_sq8_{tag}"
+    path = f"{SCRATCH}/gate_sq8_{tag}"
     idx, _ = materialize_ivf_index(
         corpus, table, n_cells=16, iters=0, impl="jvm",
         centroids=cents, num_buckets=16, path=path, sq8=True,
@@ -3526,7 +3533,7 @@ def q_emb_gate_sq8_stats(spark, sf_dir):
     cents = _ivf_centroids(corpus, "vec_id", "embedding", 16, iters=0)
     tag = uuid.uuid4().hex[:8]
     table = f"t_gate_s8s_{tag}"
-    path = f"/root/repo/.scratch/gate_s8s_{tag}"
+    path = f"{SCRATCH}/gate_s8s_{tag}"
     idx, _ = materialize_ivf_index(
         corpus, table, n_cells=16, iters=0, impl="jvm",
         centroids=cents, num_buckets=16, path=path, sq8=True,
@@ -3595,7 +3602,7 @@ def q_emb_gate_prefix(spark, sf_dir):
     cents = _ivf_centroids(corpus, "vec_id", "embedding", 16, iters=0)
     tag = uuid.uuid4().hex[:8]
     table = f"t_gate_pfx_{tag}"
-    path = f"/root/repo/.scratch/gate_pfx_{tag}"
+    path = f"{SCRATCH}/gate_pfx_{tag}"
     idx, _ = materialize_ivf_index(
         corpus, table, n_cells=16, iters=0, impl="jvm",
         centroids=cents, num_buckets=16, path=path, prefix_dims=16,
@@ -3716,7 +3723,7 @@ def q_emb_gate_prefix_report(spark, sf_dir):
     cents = _ivf_centroids(corpus, "vec_id", "embedding", 16, iters=0)
     tag = uuid.uuid4().hex[:8]
     table = f"t_gpr_{tag}"
-    path = f"/root/repo/.scratch/gate_pfx_rep_{tag}"
+    path = f"{SCRATCH}/gate_pfx_rep_{tag}"
     idx, _ = materialize_ivf_index(
         corpus, table, n_cells=16, iters=0, impl="jvm",
         centroids=cents, num_buckets=16, path=path, prefix_dims=16,
@@ -3808,7 +3815,7 @@ def q_emb_gate_pq(spark, sf_dir):
     cents = _ivf_centroids(corpus, "vec_id", "embedding", 16, iters=0)
     tag = uuid.uuid4().hex[:8]
     table = f"t_gate_pq_{tag}"
-    path = f"/root/repo/.scratch/gate_pq_{tag}"
+    path = f"{SCRATCH}/gate_pq_{tag}"
     idx, _, _ = materialize_pq_index(
         corpus, table, n_cells=16, iters=0, impl="jvm",
         centroids=cents, num_buckets=16, path=path,
@@ -3951,7 +3958,7 @@ def q_emb_gate_margin_report(spark, sf_dir):
     cents = _ivf_centroids(corpus, "vec_id", "embedding", 16, iters=0)
     tag = uuid.uuid4().hex[:8]
     table = f"t_gate_mr_{tag}"
-    path = f"/root/repo/.scratch/gate_mr_{tag}"
+    path = f"{SCRATCH}/gate_mr_{tag}"
     idx, _ = materialize_ivf_index(
         corpus, table, n_cells=16, iters=0, impl="jvm",
         centroids=cents, num_buckets=16, path=path, sq8=True,
@@ -4087,7 +4094,7 @@ def q_emb_gate_pq_margin_report(spark, sf_dir):
     cents = _ivf_centroids(corpus, "vec_id", "embedding", 16, iters=0)
     tag = uuid.uuid4().hex[:8]
     table = f"t_gate_pqmr_{tag}"
-    path = f"/root/repo/.scratch/gate_pqmr_{tag}"
+    path = f"{SCRATCH}/gate_pqmr_{tag}"
     idx, _, _ = materialize_pq_index(
         corpus, table, n_cells=16, iters=0, impl="jvm",
         centroids=cents, num_buckets=16, path=path,
@@ -4300,7 +4307,7 @@ def q_emb_lsh_multi_topk(spark, sf_dir):
     oracle recomputes all three tables from the same hash chain and
     the check is FULL (values, not rows-only)."""
     emb = T(spark, sf_dir, "embeddings")
-    return similarity.lsh_topk_multi(
+    return similarity.lsh_topk(
         emb,
         emb.filter(F.col("vec_id") < 5),
         k=5,
@@ -4373,7 +4380,7 @@ def q_emb_lsh_index_topk(spark, sf_dir):
     emb = T(spark, sf_dir, "embeddings")
     tag = uuid.uuid4().hex[:8]
     table = f"t_ann_idx_{tag}"
-    path = f"/root/repo/.scratch/ann_idx_{tag}"
+    path = f"{SCRATCH}/ann_idx_{tag}"
     idx = materialize_lsh_ann_index(
         emb, table, num_buckets=8, path=path
     )
@@ -4418,7 +4425,7 @@ def q_emb_ivf_index_topk(spark, sf_dir):
     emb = T(spark, sf_dir, "embeddings")
     tag = uuid.uuid4().hex[:8]
     table = f"t_ivf_idx_{tag}"
-    path = f"/root/repo/.scratch/ivf_idx_{tag}"
+    path = f"{SCRATCH}/ivf_idx_{tag}"
     idx, _ = materialize_ivf_index(
         emb, table, n_cells=16, iters=0, impl="jvm",
         num_buckets=16, path=path,
@@ -4468,7 +4475,7 @@ def q_emb_ivf_sq8_topk(spark, sf_dir):
     emb = T(spark, sf_dir, "embeddings")
     tag = uuid.uuid4().hex[:8]
     table = f"t_sq8_idx_{tag}"
-    path = f"/root/repo/.scratch/sq8_idx_{tag}"
+    path = f"{SCRATCH}/sq8_idx_{tag}"
     idx, _ = materialize_ivf_index(
         emb, table, n_cells=16, iters=0, impl="jvm",
         num_buckets=16, path=path, sq8=True,
@@ -4568,7 +4575,7 @@ def q_emb_ivf_pq_topk(spark, sf_dir):
     import uuid
 
     from dataprocessingframework_spark.operators.similarity import (
-        ivf_pq_topk_from_index,
+        ivf_topk_from_index,
         load_ivf_centroids,
         load_pq_codebooks,
         materialize_pq_index,
@@ -4577,20 +4584,20 @@ def q_emb_ivf_pq_topk(spark, sf_dir):
     emb = T(spark, sf_dir, "embeddings")
     tag = uuid.uuid4().hex[:8]
     table = f"t_pq_idx_{tag}"
-    path = f"/root/repo/.scratch/pq_idx_{tag}"
+    path = f"{SCRATCH}/pq_idx_{tag}"
     idx, _, _ = materialize_pq_index(
         emb, table, n_cells=16, iters=0, impl="jvm",
         num_buckets=16, path=path,
     )
     out = (
-        ivf_pq_topk_from_index(
+        ivf_topk_from_index(
             idx,
             load_ivf_centroids(spark, table),
-            load_pq_codebooks(spark, table),
             emb.filter(F.col("vec_id") < 5),
             k=5,
             n_probe=4,
             impl="jvm",
+            codebooks=load_pq_codebooks(spark, table),
         )
         .orderBy("q_id", "nbr_id")
         .collect()
@@ -4693,7 +4700,7 @@ def q_emb_ivf_pq_rerank(spark, sf_dir):
     emb = T(spark, sf_dir, "embeddings")
     tag = uuid.uuid4().hex[:8]
     table = f"t_pqr_idx_{tag}"
-    path = f"/root/repo/.scratch/pqr_idx_{tag}"
+    path = f"{SCRATCH}/pqr_idx_{tag}"
     idx, _, _ = materialize_pq_index(
         emb, table, n_cells=16, iters=0, impl="jvm",
         num_buckets=16, path=path,
@@ -6777,7 +6784,7 @@ def q_w_jsonl_roundtrip(spark, sf_dir):
         write_jsonl,
     )
 
-    out = f"/root/repo/.scratch/jsonl_{uuid.uuid4().hex[:8]}"
+    out = f"{SCRATCH}/jsonl_{uuid.uuid4().hex[:8]}"
     try:
         docs = T(spark, sf_dir, "documents")
         write_jsonl(docs, out, max_records_per_file=200)
@@ -6819,7 +6826,7 @@ def q_w_convert_formats(spark, sf_dir):
         write_table,
     )
 
-    base = f"/root/repo/.scratch/fmt_{uuid.uuid4().hex[:8]}"
+    base = f"{SCRATCH}/fmt_{uuid.uuid4().hex[:8]}"
     try:
         docs = T(spark, sf_dir, "documents")
         write_table(docs, f"{base}/orc", "orc", max_records_per_file=200)
@@ -7331,7 +7338,7 @@ def q_w_bucketed_join(spark, sf_dir):
 
     tag = uuid.uuid4().hex[:8]
     ot, ct = f"orders_b_{tag}", f"customer_b_{tag}"
-    base = f"/root/repo/.scratch/bucketed_{tag}"
+    base = f"{SCRATCH}/bucketed_{tag}"
     try:
         # write_bucketed (not raw bucketBy): one file per bucket —
         # see PLANS.md "r8 ANN probe soak" finding 1
@@ -8149,7 +8156,7 @@ def q_w_zorder_layout(spark, sf_dir):
         write_zorder_layout,
     )
 
-    out = f"/root/repo/.scratch/zorder_{uuid.uuid4().hex[:8]}"
+    out = f"{SCRATCH}/zorder_{uuid.uuid4().hex[:8]}"
     li = T(spark, sf_dir, "lineitem")
     try:
         write_zorder_layout(
@@ -8660,7 +8667,7 @@ def q_w_schema_evolution(spark, sf_dir):
     import uuid
 
     docs = T(spark, sf_dir, "documents")
-    base = f"/root/repo/.scratch/schema_ev_{uuid.uuid4().hex[:8]}"
+    base = f"{SCRATCH}/schema_ev_{uuid.uuid4().hex[:8]}"
     try:
         docs.filter(F.col("doc_id") % 2 == 0).select(
             "doc_id", "lang", "n_chars"
@@ -8717,7 +8724,7 @@ def q_w_compact_small_files(spark, sf_dir):
         compact_parquet,
     )
 
-    base = f"/root/repo/.scratch/compact_{uuid.uuid4().hex[:8]}"
+    base = f"{SCRATCH}/compact_{uuid.uuid4().hex[:8]}"
     try:
         T(spark, sf_dir, "documents").repartition(47).write.parquet(
             f"{base}/small"
@@ -9502,7 +9509,7 @@ def q_w_time_travel(spark, sf_dir):
     )
 
     docs = T(spark, sf_dir, "documents")
-    base = f"/root/repo/.scratch/vtable_{uuid.uuid4().hex[:8]}"
+    base = f"{SCRATCH}/vtable_{uuid.uuid4().hex[:8]}"
     try:
         commit(spark, docs.filter(F.col("doc_id") % 3 == 0), base)
         commit(
@@ -9563,7 +9570,7 @@ def q_w_incremental_read(spark, sf_dir):
     )
 
     docs = T(spark, sf_dir, "documents")
-    base = f"/root/repo/.scratch/vdelta_{uuid.uuid4().hex[:8]}"
+    base = f"{SCRATCH}/vdelta_{uuid.uuid4().hex[:8]}"
     try:
         commit(spark, docs.filter(F.col("doc_id") % 3 == 0), base)
         commit(
@@ -10616,7 +10623,7 @@ def q_stream_near_dup_ingest(spark, sf_dir):
         read_corpus,
     )
 
-    base = f"/root/repo/.scratch/stream_nd_{uuid.uuid4().hex[:8]}"
+    base = f"{SCRATCH}/stream_nd_{uuid.uuid4().hex[:8]}"
     src, corpus, ckpt = f"{base}/src", f"{base}/corpus", f"{base}/ckpt"
     docs = T(spark, sf_dir, "documents").select("doc_id", "text", "source")
     # engine-exact wave cut (the oracle replicates it with integer
@@ -10749,7 +10756,7 @@ def q_stream_semantic_ingest(spark, sf_dir):
         read_corpus,
     )
 
-    base = f"/root/repo/.scratch/stream_sem_{uuid.uuid4().hex[:8]}"
+    base = f"{SCRATCH}/stream_sem_{uuid.uuid4().hex[:8]}"
     src, corpus, ckpt = f"{base}/src", f"{base}/corpus", f"{base}/ckpt"
     emb = T(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cut = (emb.agg(F.max("vec_id")).collect()[0][0] + 1) // 2
@@ -10950,7 +10957,7 @@ def q_stream_quality_gate(spark, sf_dir):
         read_corpus,
     )
 
-    base = f"/root/repo/.scratch/stream_qg_{uuid.uuid4().hex[:8]}"
+    base = f"{SCRATCH}/stream_qg_{uuid.uuid4().hex[:8]}"
     src, corpus, ckpt = f"{base}/src", f"{base}/corpus", f"{base}/ckpt"
     docs = T(spark, sf_dir, "documents").select("doc_id", "text", "source")
     cut = docs.agg(F.expr("percentile_approx(doc_id, 0.5)")).collect()[0][0]

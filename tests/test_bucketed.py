@@ -140,11 +140,11 @@ def test_bucketed_lsh_index_probe_exchange_free(spark, sf_dir, tmp_path):
 def test_bucketed_ann_index_probe_exchange_free(spark, sf_dir, tmp_path):
     """The materialized multi-table ANN index, bucketed on (tbl,
     bucket), must make lsh_topk_from_index's probe join exchange-free
-    on the INDEX side, and return exactly lsh_topk_multi's output on
+    on the INDEX side, and return exactly lsh_topk(n_tables=3)'s output on
     the same corpus."""
     from dataprocessingframework_spark.operators.similarity import (
+        lsh_topk,
         lsh_topk_from_index,
-        lsh_topk_multi,
         materialize_lsh_ann_index,
     )
 
@@ -183,7 +183,7 @@ def test_bucketed_ann_index_probe_exchange_free(spark, sf_dir, tmp_path):
         )
         want = sorted(
             (r.q_id, r.nbr_id, r.cos)
-            for r in lsh_topk_multi(
+            for r in lsh_topk(
                 emb, qs, k=5, n_tables=3, broadcast_queries=True
             ).collect()
         )
@@ -193,7 +193,7 @@ def test_bucketed_ann_index_probe_exchange_free(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_ann_idx")
 
 
-def test_ann_index_probe_key_pushdown(spark, sf_dir, tmp_path):
+def test_ann_index_probe_key_pushdown(spark, sf_dir, tmp_path, monkeypatch):
     """r8: for broadcast-sized query batches, lsh_topk_from_index
     collects the batch's distinct (tbl, bucket) probe keys and pushes
     them into the index scan, so the (tbl,bucket)-sorted parquet
@@ -201,6 +201,7 @@ def test_ann_index_probe_key_pushdown(spark, sf_dir, tmp_path):
     with touched buckets, not corpus size. Pushdown must (a) reach
     the scan's PushedFilters, (b) change no results, and (c) disarm
     itself when the key count exceeds the cap."""
+    from dataprocessingframework_spark.operators import similarity
     from dataprocessingframework_spark.operators.similarity import (
         lsh_topk_from_index,
         materialize_lsh_ann_index,
@@ -240,9 +241,10 @@ def test_ann_index_probe_key_pushdown(spark, sf_dir, tmp_path):
             auto._jdf.queryExecution().executedPlan().toString()
         )
         # cap exceeded => pushdown silently disarms, results identical
+        monkeypatch.setattr(similarity, "PUSHDOWN_KEY_CAP", 2)
         capped = lsh_topk_from_index(
             idx, qs, k=5, broadcast_queries=True,
-            pushdown_probe_keys=True, pushdown_key_cap=2,
+            pushdown_probe_keys=True,
         )
         assert "In(bucket" not in (
             capped._jdf.queryExecution().executedPlan().toString()
@@ -777,7 +779,7 @@ def test_pq_index_codes_reconstruction_and_probe(spark, sf_dir, tmp_path):
     import numpy as np
 
     from dataprocessingframework_spark.operators.similarity import (
-        ivf_pq_topk_from_index,
+        ivf_topk_from_index,
         load_ivf_centroids,
         load_pq_codebooks,
         materialize_pq_index,
@@ -814,14 +816,14 @@ def test_pq_index_codes_reconstruction_and_probe(spark, sf_dir, tmp_path):
 
         got = sorted(
             (r.q_id, r.nbr_id, r.cos)
-            for r in ivf_pq_topk_from_index(
+            for r in ivf_topk_from_index(
                 idx,
                 load_ivf_centroids(spark, "t_pq_t1"),
-                books,
                 emb.filter(F.col("vec_id") < 4),
                 k=3,
                 n_probe=8,
                 impl="jvm",
+                codebooks=books,
             ).collect()
         )
         allr = {

@@ -445,6 +445,40 @@ def test_ivf_topk_reuses_supplied_centroids(spark):
     )
 
 
+@pytest.mark.parametrize(
+    "cols, kwargs, match",
+    [
+        ("codes array<bigint>", {}, "sq8_bounds="),
+        ("codes array<bigint>, resid double", {}, "codebooks="),
+        ("embedding array<float>", {"codebooks": [[[0.0]]]},
+         "codebooks given"),
+        ("codes array<bigint>, resid double",
+         {"sq8_bounds": ([0.0], [1.0]), "codebooks": [[[0.0]]]},
+         "sq8_bounds given"),
+        ("prefix array<float>, rest_norm double", {}, "prefix"),
+    ],
+    ids=["sq8", "pq", "float_extra", "pq_extra", "prefix"],
+)
+def test_ivf_topk_from_index_sidecar_must_match_index(
+    spark, cols, kwargs, match
+):
+    """ivf_topk_from_index scores what the index stores (detected from
+    its columns, as the gate does): a compressed index without its
+    sidecar, a sidecar the index does not use, or a prefix index
+    (nothing to rank by) raises a ValueError naming the fix before any
+    job runs."""
+    from dataprocessingframework_spark.operators.similarity import (
+        ivf_topk_from_index,
+    )
+
+    index = spark.createDataFrame(
+        [], f"cell int, vec_id long, {cols}, vnorm double"
+    )
+    queries = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match=match):
+        ivf_topk_from_index(index, [[1.0]], queries, **kwargs)
+
+
 def test_semantic_dedup_gate_recommend_stats(spark):
     """r14: the dispatcher's opt-in recommendation telemetry — the
     dispatch is still decided by the index handed in, but the dict

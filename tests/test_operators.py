@@ -1374,12 +1374,26 @@ def test_cosine_topk_zero_norm_parity(spark):
     assert all(not np.isnan(r.cos) for r in jvm + blas)
 
 
-def test_lsh_paths_zero_norm_excluded(spark):
-    """ADVICE r6: zero-norm rows yield cos = 0/0 = NaN, which sorts
-    FIRST under F.desc and displaces real neighbors — cosine_topk
-    filtered them (r5 fix) but the three LSH ANN paths did not. All
-    of lsh_topk / lsh_topk_multi / lsh_topk_from_index (via
-    lsh_ann_index) must now drop zero-norm rows on both sides."""
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "lsh",
+        "ivf_jvm",
+        "ivf_blas",
+        "ivf_index",
+        "ivf_index_sq8",
+        "ivf_index_pq",
+        "ivf_pq_rerank",
+    ],
+)
+def test_lsh_paths_zero_norm_excluded(spark, tmp_path, entry):
+    """ADVICE r6: zero-norm rows yield cos = 0/0 — a NaN that sorts
+    FIRST under F.desc and displaces real neighbors, or a
+    DIVIDE_BY_ZERO error under ANSI mode. Every top-k entry must drop
+    them on both sides: 'lsh' covers lsh_topk (one and three tables)
+    and lsh_topk_from_index (via lsh_ann_index); the others cover
+    ivf_topk (jvm, blas), ivf_topk_from_index on float, SQ8 and PQ
+    indexes, and ivf_pq_topk_rerank."""
     rng = np.random.RandomState(23)
     vecs = rng.randn(40, 64).astype(np.float32)
     vecs[7] = 0.0  # degenerate corpus vector
@@ -1389,32 +1403,79 @@ def test_lsh_paths_zero_norm_excluded(spark):
         schema="vec_id long, embedding array<float>",
     )
     qdf = df.filter(F.col("vec_id") < 3)
-    results = {
-        "lsh": similarity.lsh_topk(df, qdf, k=5, dim=64).collect(),
-        "mlsh": similarity.lsh_topk_multi(
-            df, qdf, k=5, dim=64, n_tables=3
-        ).collect(),
-        "idx": similarity.lsh_topk_from_index(
-            similarity.lsh_ann_index(df, dim=64, n_tables=3),
-            qdf,
-            k=5,
-            dim=64,
-            n_tables=3,
-        ).collect(),
-    }
+    table = f"t_zero_norm_{entry}"
+    path = str(tmp_path / table)
+    try:
+        if entry == "lsh":
+            results = {
+                "lsh": similarity.lsh_topk(df, qdf, k=5, dim=64).collect(),
+                "mlsh": similarity.lsh_topk(
+                    df, qdf, k=5, dim=64, n_tables=3
+                ).collect(),
+                "idx": similarity.lsh_topk_from_index(
+                    similarity.lsh_ann_index(df, dim=64, n_tables=3),
+                    qdf,
+                    k=5,
+                    dim=64,
+                    n_tables=3,
+                ).collect(),
+            }
+        elif entry.startswith("ivf_index"):
+            sq8 = entry == "ivf_index_sq8"
+            if entry == "ivf_index_pq":
+                idx, cents, books = similarity.materialize_pq_index(
+                    df, table, n_cells=4, iters=0, num_buckets=4, path=path
+                )
+            else:
+                idx, cents = similarity.materialize_ivf_index(
+                    df, table, n_cells=4, iters=0, num_buckets=4,
+                    path=path, sq8=sq8,
+                )
+                books = None
+            results = {
+                entry: similarity.ivf_topk_from_index(
+                    idx, cents, qdf, k=5, n_probe=4,
+                    sq8_bounds=(
+                        similarity.load_sq8_bounds(spark, table)
+                        if sq8 else None
+                    ),
+                    codebooks=books,
+                ).collect()
+            }
+        elif entry == "ivf_pq_rerank":
+            idx, cents, books = similarity.materialize_pq_index(
+                df, table, n_cells=4, iters=0, num_buckets=4, path=path
+            )
+            results = {
+                entry: similarity.ivf_pq_topk_rerank(
+                    idx, cents, books, qdf, df, k=5, shortlist=10,
+                    n_probe=4,
+                ).collect()
+            }
+        else:
+            results = {
+                entry: similarity.ivf_topk(
+                    df, qdf, k=5, n_cells=4, n_probe=4,
+                    impl=entry.split("_")[1],
+                ).collect()
+            }
+    finally:
+        for sfx in ("", "_centroids", "_sq8", "_pq"):
+            spark.sql(f"DROP TABLE IF EXISTS {table}{sfx}")
     for name, rows in results.items():
         pairs = {(r.q_id, r.nbr_id) for r in rows}
         assert pairs, name
         assert all(n != 7 for _, n in pairs), (name, pairs)
         assert all(q != 1 for q, _ in pairs), (name, pairs)
         assert all(not np.isnan(r.cos) for r in rows), name
-    # from_index must still equal the inline multi path exactly
-    assert {(r.q_id, r.nbr_id) for r in results["idx"]} == {
-        (r.q_id, r.nbr_id) for r in results["mlsh"]
-    }
-    # zero-norm rows never enter the materializable index at all
-    idx = similarity.lsh_ann_index(df, dim=64, n_tables=3)
-    assert idx.filter(F.col("vec_id") == 7).count() == 0
+    if entry == "lsh":
+        # from_index must still equal the inline multi-table path
+        assert {(r.q_id, r.nbr_id) for r in results["idx"]} == {
+            (r.q_id, r.nbr_id) for r in results["mlsh"]
+        }
+        # zero-norm rows never enter the materializable index at all
+        idx = similarity.lsh_ann_index(df, dim=64, n_tables=3)
+        assert idx.filter(F.col("vec_id") == 7).count() == 0
 
 
 def test_lsh_index_probe_defends_against_stale_index(spark):
@@ -1562,14 +1623,14 @@ def test_lsh_multi_candidates_superset_of_single(spark):
     single = similarity.lsh_topk(
         df, qs, k=40, dim=8, n_planes=4, broadcast_queries=True
     ).collect()
-    multi1 = similarity.lsh_topk_multi(
+    multi1 = similarity.lsh_topk(
         df, qs, k=40, dim=8, n_planes=4, n_tables=1,
         broadcast_queries=True,
     ).collect()
     assert {(r.q_id, r.nbr_id, r.cos) for r in single} == {
         (r.q_id, r.nbr_id, r.cos) for r in multi1
     }
-    multi3 = similarity.lsh_topk_multi(
+    multi3 = similarity.lsh_topk(
         df, qs, k=40, dim=8, n_planes=4, n_tables=3,
         broadcast_queries=True,
     ).collect()

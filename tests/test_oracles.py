@@ -1,5 +1,6 @@
-"""The semantic-gate and lexical near-dup families of the query
-registry, checked against their DuckDB oracles in the regular test run.
+"""The semantic-gate, lexical near-dup and ANN top-k families of the
+query registry, checked against their DuckDB oracles in the regular
+test run.
 
 Each case runs one registered query and its oracle SQL at sf0.001 with
 the same comparison ``tools/check_correctness.py`` applies to the whole
@@ -52,6 +53,21 @@ DEDUP_ORACLES = [
     "stream_near_dup_ingest",
 ]
 
+# exact, LSH and IVF (float, SQ8, PQ, PQ re-rank) top-k paths
+ANN_ORACLES = [
+    "emb_topk_cosine",
+    "emb_ann_recall",
+    "emb_lsh_topk",
+    "emb_lsh_multi_topk",
+    "emb_lsh_index_topk",
+    "emb_ivf_topk",
+    "emb_ivf_topk_seeded",
+    "emb_ivf_index_topk",
+    "emb_ivf_sq8_topk",
+    "emb_ivf_pq_topk",
+    "emb_ivf_pq_rerank",
+]
+
 
 @pytest.fixture(scope="module")
 def oracle_con(sf_dir):
@@ -76,4 +92,9 @@ def test_gate_query_matches_oracle(spark, sf_dir, oracle_con, name):
 
 @pytest.mark.parametrize("name", DEDUP_ORACLES)
 def test_dedup_query_matches_oracle(spark, sf_dir, oracle_con, name):
+    _check(spark, sf_dir, oracle_con, name)
+
+
+@pytest.mark.parametrize("name", ANN_ORACLES)
+def test_ann_query_matches_oracle(spark, sf_dir, oracle_con, name):
     _check(spark, sf_dir, oracle_con, name)

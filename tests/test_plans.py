@@ -236,7 +236,7 @@ def test_temperature_sample_corpus_not_shuffled(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_lsh_topk_broadcast_gated_by_query_size(spark, sf_dir):
+def test_lsh_topk_broadcast_gated_by_query_size(spark, sf_dir, monkeypatch):
     """VERDICT r3 'what's wrong' #2: the multi-probe query side must
     broadcast only under the row threshold. Small probe batch ->
     BroadcastHashJoin; threshold forced to 0 -> plain equi-join on
@@ -251,7 +251,8 @@ def test_lsh_topk_broadcast_gated_by_query_size(spark, sf_dir):
     # over threshold: the FORCED hint must be gone (Catalyst may still
     # auto-broadcast a stats-small side, but a stats-large batch now
     # falls back to a shuffled equi-join instead of an OOMing hint)
-    large = similarity.lsh_topk(emb, qs, k=5, broadcast_threshold=0)
+    monkeypatch.setattr(similarity, "BROADCAST_THRESHOLD", 0)
+    large = similarity.lsh_topk(emb, qs, k=5)
     analyzed = large._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in analyzed
     assert "UnresolvedHint" not in analyzed
@@ -438,27 +439,24 @@ def test_emb_centroid_prune_broadcasts_prototypes(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_lsh_multi_topk_scale_shape(spark, sf_dir):
+def test_lsh_multi_topk_scale_shape(spark, sf_dir, monkeypatch):
     """Multi-table LSH must keep the single-table guarantees: one
     hash equi-join on the (tbl, bucket) composite key (never a
     cartesian), broadcast gated by post-fanout query size, and the
     candidate dedup running on the skinny pair relation BEFORE the
     ranking window (vectors never shuffle through the dedup)."""
-    from dataprocessingframework_spark.operators.similarity import (
-        lsh_topk_multi,
-    )
+    from dataprocessingframework_spark.operators import similarity
 
     emb = q.T(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 5)
-    small = lsh_topk_multi(emb, qs, k=5, n_tables=3)
+    small = similarity.lsh_topk(emb, qs, k=5, n_tables=3)
     plan = plan_of(small)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "tbl" in plan and "bucket" in plan
     _assert_partial_group_limit_below_exchange(plan)
-    large = lsh_topk_multi(
-        emb, qs, k=5, n_tables=3, broadcast_threshold=0
-    )
+    monkeypatch.setattr(similarity, "BROADCAST_THRESHOLD", 0)
+    large = similarity.lsh_topk(emb, qs, k=5, n_tables=3)
     analyzed = large._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in analyzed
     assert "CartesianProduct" not in plan_of(large)

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import EqualTo, In
 
 from dataprocessingframework_spark.configs import ShardsDatasetConfig
+from dataprocessingframework_spark.queries import SCRATCH
 from dataprocessingframework_spark.sources.media import load_shard_bytes
 from dataprocessingframework_spark.sources.reader import DatasetReader
 from dataprocessingframework_spark.sources.shards_source import (
@@ -16,6 +17,8 @@ from dataprocessingframework_spark.sources.shards_source import (
     register_shards_source,
 )
 from dataprocessingframework_spark.sources.writers import write_shards
+
+_TOOLS = os.path.join(os.path.dirname(SCRATCH), "tools")
 
 
 
@@ -1092,9 +1095,9 @@ def test_sink_chaos_soak_smoke():
 
     out = subprocess.run(
         [
-            sys.executable, "/root/repo/tools/sink_chaos_soak.py",
+            sys.executable, os.path.join(_TOOLS, "sink_chaos_soak.py"),
             "--batches", "30", "--seed", "7",
-            "--root", "/root/repo/.scratch/sink_chaos_ci",
+            "--root", os.path.join(SCRATCH, "sink_chaos_ci"),
         ],
         capture_output=True, text=True, timeout=300,
     )
@@ -1160,9 +1163,9 @@ def test_compaction_chaos_soak_smoke():
     out = subprocess.run(
         [
             sys.executable,
-            "/root/repo/tools/shard_compaction_chaos_soak.py",
+            os.path.join(_TOOLS, "shard_compaction_chaos_soak.py"),
             "--rounds", "4", "--seed", "3",
-            "--root", "/root/repo/.scratch/compact_chaos_ci",
+            "--root", os.path.join(SCRATCH, "compact_chaos_ci"),
         ],
         capture_output=True, text=True, timeout=570,
     )

@@ -62,7 +62,7 @@ def main() -> None:
     print(f"corpus: {COPIES}x base = {n_base * COPIES} vectors, dim {dim}")
 
     tag = uuid.uuid4().hex[:8]
-    scratch = f"/root/repo/.scratch/ann_soak_{tag}"
+    scratch = f"{q.SCRATCH}/ann_soak_{tag}"
     queries = base.filter(F.col("vec_id") < 50)
 
     def noop(df):

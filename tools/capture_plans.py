@@ -98,7 +98,7 @@ def main() -> int:
             emb(), emb().filter(F.col("vec_id") < 10), k=5,
             n_cells=16, n_probe=4,
         ),
-        "ann_lsh_multi_topk": lambda: similarity.lsh_topk_multi(
+        "ann_lsh_multi_topk": lambda: similarity.lsh_topk(
             emb(), emb().filter(F.col("vec_id") < 50), k=10,
             n_tables=3, broadcast_queries=True,
         ),

@@ -103,7 +103,7 @@ def main() -> None:
     for kind in ("float32", "sq8", "pq", "pq_refined"):
         tag = uuid.uuid4().hex[:8]
         table = f"soak_sq8_{tag}"
-        path = f"/root/repo/.scratch/soak_sq8_{tag}"
+        path = f"{q.SCRATCH}/soak_sq8_{tag}"
         t0 = time.time()
         if kind.startswith("pq"):
             idx, cents, books = similarity.materialize_pq_index(
@@ -130,8 +130,9 @@ def main() -> None:
             spark.sparkContext._jvm.System.gc()
             t0 = time.time()
             if kind.startswith("pq"):
-                probe = similarity.ivf_pq_topk_from_index(
-                    idx, cents, books, qs, k=10, n_probe=8
+                probe = similarity.ivf_topk_from_index(
+                    idx, cents, qs, k=10, n_probe=8, impl="jvm",
+                    codebooks=books,
                 )
             else:
                 probe = similarity.ivf_topk_from_index(
