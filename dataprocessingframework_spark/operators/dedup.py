@@ -1011,24 +1011,11 @@ def materialize_lsh_index(
     reshuffled per arriving batch; only the (small) batch-side index
     moves. Within-bucket sortBy(band, bucket) also lets the sort-merge
     join skip the index-side sort. ``mode='append'`` adds an accepted
-    batch's rows to the same bucket layout (Spark appends respecting
-    the table's bucket spec), which is the per-batch index maintenance
-    step. Size ``num_buckets`` so one bucket of the full corpus index
+    batch's rows to the same bucket layout (``write_bucketed`` reads
+    the stored bucket spec and location), which is the per-batch index
+    maintenance step. Size ``num_buckets`` so one bucket of the full corpus index
     fits an executor (thousands at 100 TB, not 32).
     """
-    if mode == "append":
-        # append must match the existing table's bucket spec exactly
-        # (Spark rejects a mismatch) — read it from the catalog
-        # instead of trusting the caller to repeat it
-        desc = df.sparkSession.sql(f"DESCRIBE FORMATTED {table}").collect()
-        buckets = [r for r in desc if r.col_name == "Num Buckets"]
-        if buckets:
-            num_buckets = int(buckets[0].data_type)
-        # the existing table's catalog location is authoritative for
-        # appends — compact_bucketed_index relocates external index
-        # tables, and passing the stale original path would fail the
-        # location-match check
-        path = None
     from dataprocessingframework_spark.sources.bucketed import (
         write_bucketed,
     )

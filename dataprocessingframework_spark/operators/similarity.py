@@ -73,6 +73,18 @@ def _driver_meta_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     )
 
 
+def _save_companion(
+    spark: SparkSession, table: str, suffix: str, rows: list, schema: str,
+    mode: str, path: str | None,
+) -> None:
+    """Persist driver-held metadata rows as the ``{table}{suffix}``
+    companion table of an index (at ``{path}{suffix}`` when external)."""
+    w = _driver_meta_df(spark, rows, schema).write.mode(mode).format("parquet")
+    if path:
+        w = w.option("path", f"{path}{suffix}")
+    w.saveAsTable(f"{table}{suffix}")
+
+
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
@@ -1464,6 +1476,95 @@ def load_pq_codebooks(
     return books
 
 
+def _pq_encode(assigned: DataFrame, books: list[list[list[float]]], impl: str) -> DataFrame:
+    """PQ index rows (cell, vec_id, codes, vnorm, resid): per-subspace
+    argmin codes packed 7 per bigint, ``vnorm`` the RECONSTRUCTION's
+    norm, and the per-row residual ``resid`` = ||v - v̂||, the sound
+    per-vector margin input of the pq gate rung (8 B/row)."""
+    m, sd = len(books), len(books[0][0])
+    if impl == "jvm":
+        # expression encode: portable argmin arithmetic, the
+        # oracle-exact path. Interpreted-HOF cost is ~28 ms/row
+        # (k_codes folds per subspace per row) — fine for the
+        # oracled registry query, wrong for a production build;
+        # the blas default below is ~100x faster per batch.
+        assigned = assigned.withColumn(
+            "pq_codes", F.array(*_pq_code_exprs("embedding", books))
+        )
+        words = []
+        for w in range(0, m, _SQ8_PER_WORD):
+            expr = F.lit(0).cast("long")
+            for j, s in enumerate(range(w, min(w + _SQ8_PER_WORD, m))):
+                expr = expr + F.shiftleft(F.col("pq_codes")[s], 8 * j)
+            words.append(expr)
+        recon = F.concat(
+            *[
+                F.element_at(
+                    _nested_array_lit(books[s]),
+                    (F.col("pq_codes")[s] + 1).cast("int"),
+                )
+                for s in range(m)
+            ]
+        )
+        return assigned.select(
+            "cell",
+            "vec_id",
+            F.array(*words).alias("codes"),
+            norm(recon).alias("vnorm"),
+            norm(
+                F.zip_with(F.col("embedding"), recon, lambda a, b: a - b)
+            ).alias("resid"),
+        )
+    # Arrow-batched numpy encode (production default): per batch, per
+    # subspace ONE ||sub||^2 - 2 sub@CB^T + ||CB||^2 distance matrix and
+    # a vectorized argmin (np ties -> first index = lowest codeword,
+    # same tiebreak as the expression path). Distances accumulate in a
+    # different order than the JVM fold, so a code can differ only on
+    # an exact inter-codeword distance tie — use impl='jvm' for
+    # oracle-exact parity.
+    import numpy as np
+    import pandas as pd
+
+    n_words = (m + _SQ8_PER_WORD - 1) // _SQ8_PER_WORD
+    b_books = [np.array(books[s], dtype=np.float64) for s in range(m)]
+    b_norm2 = [(b * b).sum(axis=1) for b in b_books]
+
+    def encode(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            vm = np.stack(
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
+            )
+            words = np.zeros((len(pdf), n_words), dtype=np.int64)
+            recon = np.empty_like(vm)
+            for s in range(m):
+                sub = vm[:, s * sd : (s + 1) * sd]
+                d = (
+                    (sub * sub).sum(axis=1)[:, None]
+                    - 2.0 * (sub @ b_books[s].T)
+                    + b_norm2[s][None, :]
+                )
+                cs = np.argmin(d, axis=1)
+                recon[:, s * sd : (s + 1) * sd] = b_books[s][cs]
+                words[:, s // _SQ8_PER_WORD] |= cs << (8 * (s % _SQ8_PER_WORD))
+            yield pd.DataFrame(
+                {
+                    "cell": pdf["cell"].values,
+                    "vec_id": pdf["vec_id"].values,
+                    "codes": [w.tolist() for w in words],
+                    "vnorm": np.linalg.norm(recon, axis=1),
+                    "resid": np.linalg.norm(vm - recon, axis=1),
+                }
+            )
+
+    return assigned.select("cell", "vec_id", "embedding").mapInPandas(
+        encode,
+        schema="cell int, vec_id long, codes array<bigint>,"
+        " vnorm double, resid double",
+    )
+
+
 def materialize_pq_index(
     corpus: DataFrame,
     table: str,
@@ -1500,208 +1601,33 @@ def materialize_pq_index(
     keep 0 for oracle-checked uses).
     ``vnorm`` stores the RECONSTRUCTION's norm (probe cosines are
     consistent for what the index holds). ``mode='append'`` reuses
-    the persisted centroids AND codebooks — re-seeding on a batch
-    would shift the code space under existing rows. Probe via
+    the persisted centroids AND codebooks (the caller's ``m`` is
+    ignored) — re-seeding on a batch would shift the code space under
+    existing rows. Probe via
     ``ivf_topk_from_index(..., codebooks=load_pq_codebooks(...))``
     or :func:`ivf_pq_topk_rerank`. ``balance_cell_rows``: as in
     :func:`materialize_ivf_index` — fresh builds only, runs
     :func:`balance_centroids` after training so the persisted
     quantizer is the balanced one."""
-    from dataprocessingframework_spark.sources.bucketed import (
-        write_bucketed,
-    )
-
-    spark = corpus.sparkSession
-    if mode == "append" and balance_cell_rows is not None:
-        raise ValueError(
-            "balance_cell_rows is a fresh-build option: rebalancing"
-            " under an existing index would reassign cells without"
-            " rewriting stored rows — rebuild instead"
-        )
     if k_codes > 256:
         raise ValueError(
             f"k_codes={k_codes} > 256: PQ codes are packed one byte"
             " each (7 per bigint); codes >= 256 would silently"
             " corrupt neighboring bytes in the packed word"
         )
-    if mode == "append":
-        if centroids is None:
-            centroids = load_ivf_centroids(spark, table)
-        cents = centroids
-        books = load_pq_codebooks(spark, table)
-        # The stored index defines the geometry: ignore the caller's
-        # m (default 8) and derive it from the persisted codebooks —
-        # an append encoded with a mismatched subspace count would
-        # write corrupt codes/vnorm, the exact drift append mode
-        # exists to prevent.
-        m = len(books)
-        first = corpus.select(F.size(vec_col)).first()
-        if first is not None and first[0] != m * len(books[0][0]):
-            raise ValueError(
-                f"append batch dim {first[0]} != index geometry"
-                f" m={m} x subdim={len(books[0][0])} for {table}"
-            )
-        desc = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-        buckets = [r for r in desc if r.col_name == "Num Buckets"]
-        if buckets:
-            num_buckets = int(buckets[0].data_type)
-        path = None
-    else:
-        cents = centroids or _ivf_centroids(
-            corpus, id_col, vec_col, n_cells, iters, impl=impl
+
+    def codebooks(nz: DataFrame, stored: Any) -> Any:
+        if stored is not None:
+            return stored
+        return _pq_codebooks(
+            nz, "vec_id", "embedding", m, min(k_codes, nz.count()),
+            refine_iters=refine_iters,
         )
-        if balance_cell_rows is not None:
-            cents = balance_centroids(
-                corpus, cents, balance_cell_rows,
-                rounds=8, id_col=id_col, vec_col=vec_col, impl=impl,
-            )
-        nz = corpus.select(
-            F.col(id_col).alias("pid"),
-            F.col(vec_col).alias("pv"),
-            norm(F.col(vec_col)).alias("pn"),
-        ).filter(F.col("pn") > 0)
-        k_eff = min(k_codes, nz.count())
-        books = _pq_codebooks(
-            nz, "pid", "pv", m, k_eff, refine_iters=refine_iters
-        )
-    sd = len(books[0][0])
-    assigned = assign_cells(
-        corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("embedding"),
-            norm(F.col(vec_col)).alias("vnorm"),
-        ).filter(F.col("vnorm") > 0),
-        cents,
-        "vec_id",
-        "embedding",
-        n_probe=1,
-        impl=impl,
+
+    return _build_ivf_index(
+        corpus, table, "pq", codebooks, id_col, vec_col, n_cells, iters, impl,
+        centroids, num_buckets, path, mode, balance_cell_rows,
     )
-    n_words = (m + _SQ8_PER_WORD - 1) // _SQ8_PER_WORD
-    if impl == "jvm":
-        # expression encode: portable argmin arithmetic, the
-        # oracle-exact path. Interpreted-HOF cost is ~28 ms/row
-        # (k_codes folds per subspace per row) — fine for the
-        # oracled registry query, wrong for a production build;
-        # the blas default below is ~100x faster per batch.
-        assigned = assigned.withColumn(
-            "pq_codes", F.array(*_pq_code_exprs("embedding", books))
-        )
-        words = []
-        for w in range(0, m, _SQ8_PER_WORD):
-            expr = F.lit(0).cast("long")
-            for j, s in enumerate(range(w, min(w + _SQ8_PER_WORD, m))):
-                expr = expr + F.shiftleft(F.col("pq_codes")[s], 8 * j)
-            words.append(expr)
-        recon = F.concat(
-            *[
-                F.element_at(
-                    _nested_array_lit(books[s]),
-                    (F.col("pq_codes")[s] + 1).cast("int"),
-                )
-                for s in range(m)
-            ]
-        )
-        idx = assigned.select(
-            "cell",
-            "vec_id",
-            F.array(*words).alias("codes"),
-            norm(recon).alias("vnorm"),
-            # per-row reconstruction residual ||v - v̂||: the sound
-            # per-vector margin input for the compressed PQ gate
-            # (8 B/row; see semantic_dedup_gate's pq rung)
-            norm(
-                F.zip_with(
-                    F.col("embedding"), recon, lambda a, b: a - b
-                )
-            ).alias("resid"),
-        )
-    else:
-        # Arrow-batched numpy encode (production default): per batch,
-        # per subspace ONE ||sub||^2 - 2 sub@CB^T + ||CB||^2 distance
-        # matrix and a vectorized argmin (np ties -> first index =
-        # lowest codeword, same tiebreak as the expression path).
-        # Distances accumulate in a different order than the JVM
-        # fold, so a code can differ only on an exact inter-codeword
-        # distance tie — use impl='jvm' for oracle-exact parity.
-        import numpy as np
-        import pandas as pd
-
-        b_books = [
-            np.array(books[s], dtype=np.float64) for s in range(m)
-        ]
-        b_norm2 = [(b * b).sum(axis=1) for b in b_books]
-
-        def encode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                vm = np.stack(
-                    [np.asarray(v, dtype=np.float64)
-                     for v in pdf["embedding"]]
-                )
-                words = np.zeros((len(pdf), n_words), dtype=np.int64)
-                recon = np.empty_like(vm)
-                for s in range(m):
-                    sub = vm[:, s * sd : (s + 1) * sd]
-                    d = (
-                        (sub * sub).sum(axis=1)[:, None]
-                        - 2.0 * (sub @ b_books[s].T)
-                        + b_norm2[s][None, :]
-                    )
-                    cs = np.argmin(d, axis=1)
-                    recon[:, s * sd : (s + 1) * sd] = b_books[s][cs]
-                    words[:, s // _SQ8_PER_WORD] |= cs << (
-                        8 * (s % _SQ8_PER_WORD)
-                    )
-                yield pd.DataFrame(
-                    {
-                        "cell": pdf["cell"].values,
-                        "vec_id": pdf["vec_id"].values,
-                        "codes": [w.tolist() for w in words],
-                        "vnorm": np.linalg.norm(recon, axis=1),
-                        "resid": np.linalg.norm(vm - recon, axis=1),
-                    }
-                )
-
-        idx = assigned.select("cell", "vec_id", "embedding").mapInPandas(
-            encode,
-            schema="cell int, vec_id long, codes array<bigint>,"
-            " vnorm double, resid double",
-        )
-    write_bucketed(
-        idx,
-        table,
-        ["cell"],
-        num_buckets=num_buckets,
-        sort_cols=["cell"],
-        path=path,
-        mode=mode,
-    )
-    if mode != "append":
-        cent_rows = [
-            (c, [float(x) for x in vec]) for c, vec in enumerate(cents)
-        ]
-        cent_df = _driver_meta_df(
-            spark, cent_rows, "cell int, centroid array<double>"
-        )
-        w0 = cent_df.write.mode(mode).format("parquet")
-        if path:
-            w0 = w0.option("path", f"{path}_centroids")
-        w0.saveAsTable(f"{table}_centroids")
-        book_rows = [
-            (s, c, books[s][c])
-            for s in range(len(books))
-            for c in range(len(books[s]))
-        ]
-        book_df = _driver_meta_df(
-            spark, book_rows, "s int, c int, codeword array<double>"
-        )
-        wb = book_df.write.mode(mode).format("parquet")
-        if path:
-            wb = wb.option("path", f"{path}_pq")
-        wb.saveAsTable(f"{table}_pq")
-    return spark.table(table), cents, books
 
 
 def ivf_pq_topk_rerank(
@@ -2000,6 +1926,177 @@ def balance_centroids(
     return cents
 
 
+def _sq8_encode(assigned: DataFrame, bounds: tuple[list, list], impl: str) -> DataFrame:
+    """SQ8 index rows (cell, vec_id, codes, vnorm): codes packed 7 per
+    bigint, and ``vnorm`` the norm of the DEQUANTIZED midpoint vector,
+    so probe cosines are consistent with what the index stores. The
+    same JVM expressions for either ``impl``."""
+    mins, maxs = bounds
+    # direct per-dim midpoint exprs — value-identical to unpacking the
+    # codes (the pack/unpack round-trip itself is pinned by the probe
+    # parity tests). One parsed SQL expression (r16, see
+    # _sq8_code_sql): the py4j form issued ~15 round-trips per
+    # dimension per build
+    deq = F.expr(
+        "array(" + ", ".join(
+            f"{_finite_d(mins[i], f'sq8 min[{i}]')} + "
+            f"(CAST({_sq8_code_sql('embedding', mins, maxs, i)}"
+            " AS DOUBLE) + 0.5D) * "
+            + _finite_d(
+                (maxs[i] - mins[i]) / float(SQ8_LEVELS),
+                f"sq8 step[{i}]",
+            )
+            for i in range(len(mins))
+        ) + ")"
+    )
+    return assigned.select(
+        "cell",
+        "vec_id",
+        _sq8_pack_expr("embedding", mins, maxs).alias("codes"),
+        norm(deq).alias("vnorm"),
+    )
+
+
+def _sq8_clamp_stats(nz: DataFrame, mins: list, maxs: list) -> dict:
+    """SQ8 append-drift telemetry over the rows to encode: ``n_rows``,
+    ``rows_clamped`` (rows with >= 1 dimension outside the stored
+    bounds) and ``dims_clamped`` (total such dimensions). Those dims
+    clamp to the code rails, where the dequant error exceeds step/2
+    and the gate margin is no longer sound; for degenerate dims (mx <=
+    mn, everything codes 0) any x != mn is equally uncovered, which the
+    x < mn | x > mx test already says. One batch-sized agg."""
+    x = [F.col("embedding")[i].cast("double") for i in range(len(mins))]
+    cd = functools.reduce(operator.add, [
+        F.when((x[i] < F.lit(mins[i])) | (x[i] > F.lit(maxs[i])), 1).otherwise(0)
+        for i in range(len(mins))
+    ])
+    row = nz.select(cd.alias("cd")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(F.col("cd") > 0, 1).otherwise(0)).alias("r"),
+        F.sum("cd").alias("d"),
+    ).collect()[0]
+    return {
+        "n_rows": int(row.n),
+        "rows_clamped": int(row.r or 0),
+        "dims_clamped": int(row.d or 0),
+    }
+
+
+def _prefix_encode(assigned: DataFrame, dims: tuple[int, int], impl: str) -> DataFrame:
+    """Prefix index rows (cell, vec_id, prefix, rest_norm, vnorm): the
+    first d_p coordinates and the norm of the rest."""
+    dp = dims[0]
+    return assigned.select(
+        "cell",
+        "vec_id",
+        F.expr(f"slice(embedding, 1, {dp})").alias("prefix"),
+        norm(F.expr(f"slice(embedding, {dp + 1}, size(embedding))")).alias("rest_norm"),
+        "vnorm",
+    )
+
+
+class _IndexRung(NamedTuple):
+    """How a compressed rung stores its IVF index: the row encoder, and
+    the ``{table}{suffix}`` companion table holding its sidecar."""
+
+    suffix: str
+    schema: str
+    rows: Callable[[Any], list]  # sidecar -> companion rows
+    load: Callable[[SparkSession, str], Any]  # companion table -> sidecar
+    dim: Callable[[Any], int]  # vector length the sidecar encodes
+    encode: Callable[[DataFrame, Any, str], DataFrame]  # (assigned, sidecar, impl)
+
+
+# keyed like _GATE_RUNGS; the float rung stores (cell, vec_id,
+# embedding, vnorm) and no sidecar
+_INDEX_RUNGS: dict[str, _IndexRung] = {
+    "pq": _IndexRung(
+        "_pq", "s int, c int, codeword array<double>",
+        rows=lambda books: [(s, c, w) for s, bk in enumerate(books) for c, w in enumerate(bk)],
+        load=load_pq_codebooks, dim=lambda books: len(books) * len(books[0][0]),
+        encode=_pq_encode,
+    ),
+    "sq8": _IndexRung(
+        "_sq8", "mins array<double>, maxs array<double>, levels int",
+        rows=lambda bounds: [(bounds[0], bounds[1], SQ8_LEVELS)],
+        load=load_sq8_bounds, dim=lambda bounds: len(bounds[0]), encode=_sq8_encode,
+    ),
+    "prefix": _IndexRung(
+        "_prefix", "dims int, full_dim int",
+        rows=lambda dims: [(int(dims[0]), int(dims[1]))],
+        load=load_prefix_dims, dim=lambda dims: dims[1], encode=_prefix_encode,
+    ),
+}
+
+
+def _build_ivf_index(
+    corpus: DataFrame, table: str, rung: str,
+    sidecar: Callable[[DataFrame, Any], Any], id_col: str, vec_col: str,
+    n_cells: int, iters: int, impl: str, centroids: list[list[float]] | None,
+    num_buckets: int, path: str | None, mode: str, balance_cell_rows: int | None,
+) -> tuple[DataFrame, list[list[float]], Any]:
+    """The IVF index build of every rung. A fresh build trains the
+    coarse quantizer unless ``centroids`` are given (then balances it
+    when ``balance_cell_rows`` is set); an append extends the inverted
+    lists under the STORED quantizer and rung — retraining would shift
+    cell boundaries between the old rows and the new ones — and its
+    batch must have the stored geometry's vector length. Zero-norm
+    vectors (undefined cosine) are excluded; the rest go to their
+    nearest cell, are encoded by the rung and written bucketed on
+    ``cell`` (``write_bucketed`` owns the append rule).
+    ``sidecar(nz, stored)`` gives the rung's sidecar: derived from the
+    non-zero rows on a fresh build (``stored`` None), or the stored one
+    checked on an append. A fresh build persists ``{table}_centroids``
+    and the rung's companion table. Returns (index, centroids,
+    sidecar)."""
+    from dataprocessingframework_spark.sources.bucketed import write_bucketed
+
+    spark = corpus.sparkSession
+    if mode == "append" and balance_cell_rows is not None:
+        raise ValueError(
+            "balance_cell_rows is a fresh-build option: rebalancing"
+            " under an existing index would reassign cells without"
+            " rewriting stored rows — rebuild instead"
+        )
+    if mode == "append" and rung == "float":
+        rung = detect_gate_rung(spark.table(table).columns)
+    r = _INDEX_RUNGS.get(rung)
+    stored = None
+    if mode == "append":
+        cents = centroids if centroids is not None else load_ivf_centroids(spark, table)
+        if r is not None:
+            stored = r.load(spark, table)
+            dim = r.dim(stored)
+            first = corpus.select(F.size(vec_col)).first()
+            if first is not None and first[0] != dim:
+                raise ValueError(
+                    f"append batch dim {first[0]} != the stored {rung}"
+                    f" geometry dim {dim} for {table}"
+                )
+    else:
+        cents = centroids or _ivf_centroids(corpus, id_col, vec_col, n_cells, iters, impl=impl)
+        if balance_cell_rows is not None:
+            cents = balance_centroids(
+                corpus, cents, balance_cell_rows,
+                rounds=8, id_col=id_col, vec_col=vec_col, impl=impl,
+            )
+    nz = corpus.select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("embedding"),
+        norm(F.col(vec_col)).alias("vnorm"),
+    ).filter(F.col("vnorm") > 0)
+    side = None if r is None else sidecar(nz, stored)
+    idx = assign_cells(nz, cents, "vec_id", "embedding", n_probe=1, impl=impl)
+    idx = idx.select("cell", "vec_id", "embedding", "vnorm") if r is None else r.encode(idx, side, impl)
+    write_bucketed(idx, table, ["cell"], num_buckets=num_buckets, sort_cols=["cell"], path=path, mode=mode)
+    if mode != "append":
+        rows = [(c, [float(x) for x in vec]) for c, vec in enumerate(cents)]
+        _save_companion(spark, table, "_centroids", rows, "cell int, centroid array<double>", mode, path)
+        if r is not None:
+            _save_companion(spark, table, r.suffix, r.rows(side), r.schema, mode, path)
+    return spark.table(table), cents, side
+
+
 def materialize_ivf_index(
     corpus: DataFrame,
     table: str,
@@ -2031,6 +2128,10 @@ def materialize_ivf_index(
     trained once here (``iters`` Lloyd rounds — the expensive part at
     scale) and reloaded via :func:`load_ivf_centroids` for every
     later probe batch. Returns (index frame, centroids).
+    ``mode='append'`` extends the stored index under its stored
+    quantizer, rung and sidecar; without ``sq8``/``prefix_dims`` it
+    keeps whatever rung the stored index has. The build steps are
+    shared with :func:`materialize_pq_index` (:func:`_build_ivf_index`).
 
     ``sq8=True`` stores SQ8 scalar-quantized codes instead of the
     float vectors — at 100 TB the index IS the scan cost, and codes
@@ -2077,7 +2178,7 @@ def materialize_ivf_index(
     d_p = dim/4 typically keeps rest_norm/vnorm small and the bound
     tight; the ``{table}_prefix`` companion persists d_p for appends
     (:func:`load_prefix_dims`). Append mode validates the batch's
-    vector length against the stored geometry, as SQ8/PQ do.
+    vector length against the stored geometry, as for SQ8 and PQ.
 
     ``balance_cell_rows`` (fresh builds only, r12): after training
     the quantizer, run :func:`balance_centroids` with this cap
@@ -2086,232 +2187,41 @@ def materialize_ivf_index(
     caller composing the two calls. Ignored (error) in append mode:
     rebalancing under an existing index would move rows between
     cells without rewriting them."""
-    if mode == "append" and balance_cell_rows is not None:
-        raise ValueError(
-            "balance_cell_rows is a fresh-build option: rebalancing"
-            " under an existing index would reassign cells without"
-            " rewriting stored rows — rebuild instead"
-        )
     if sq8 and prefix_dims is not None:
         raise ValueError(
             "sq8 and prefix_dims are distinct compression rungs —"
             " pick one (stack them by materializing two indexes)"
         )
-    from dataprocessingframework_spark.sources.bucketed import (
-        write_bucketed,
-    )
 
-    if mode == "append":
-        # appending a batch extends the inverted lists under the
-        # EXISTING quantizer — retraining would silently shift cell
-        # boundaries between the old rows and the new ones — and
-        # under the existing bucket spec (Spark rejects a mismatch)
-        if centroids is None:
-            centroids = load_ivf_centroids(corpus.sparkSession, table)
-        cents = centroids
-        desc = corpus.sparkSession.sql(
-            f"DESCRIBE FORMATTED {table}"
-        ).collect()
-        buckets = [r for r in desc if r.col_name == "Num Buckets"]
-        if buckets:
-            num_buckets = int(buckets[0].data_type)
-        # the existing table's catalog location is authoritative for
-        # appends — compact_bucketed_index relocates external index
-        # tables, and passing the stale original path would fail the
-        # location-match check
-        path = None
-        if sq8:
-            mins, maxs = load_sq8_bounds(corpus.sparkSession, table)
-            # same geometry guard as the PQ append path: the stored
-            # bounds define dim; a batch with a different vector
-            # length would pack null/truncated codes silently
-            first = corpus.select(F.size(vec_col)).first()
-            if first is not None and first[0] != len(mins):
-                raise ValueError(
-                    f"append batch dim {first[0]} != stored sq8"
-                    f" bounds dim {len(mins)} for {table}"
-                )
-        existing_cols = corpus.sparkSession.table(table).columns
-        if prefix_dims is not None or "rest_norm" in existing_cols:
-            stored_dp, stored_dim = load_prefix_dims(
-                corpus.sparkSession, table
-            )
-            known_full_dim = stored_dim
-            if prefix_dims is not None and prefix_dims != stored_dp:
+    def sidecar(nz: DataFrame, stored: Any) -> Any:
+        if stored is not None:
+            if prefix_dims is not None and prefix_dims != stored[0]:
                 raise ValueError(
                     f"append prefix_dims {prefix_dims} != stored"
-                    f" {stored_dp} for {table} — the stored geometry"
+                    f" {stored[0]} for {table} — the stored geometry"
                     " is authoritative"
                 )
-            prefix_dims = stored_dp
+        elif prefix_dims is not None:
             first = corpus.select(F.size(vec_col)).first()
-            if first is not None and first[0] != stored_dim:
+            full_dim = int(first[0]) if first is not None else prefix_dims + 1
+            if not (1 <= prefix_dims < full_dim):
                 raise ValueError(
-                    f"append batch dim {first[0]} != stored prefix"
-                    f" geometry dim {stored_dim} for {table}"
+                    f"prefix_dims must be in [1, dim): got {prefix_dims}"
+                    f" for dim {full_dim}"
                 )
-    else:
-        cents = centroids or _ivf_centroids(
-            corpus, id_col, vec_col, n_cells, iters, impl=impl
-        )
-        if balance_cell_rows is not None:
-            cents = balance_centroids(
-                corpus, cents, balance_cell_rows,
-                rounds=8, id_col=id_col, vec_col=vec_col, impl=impl,
-            )
-        if sq8:
-            mins, maxs = _sq8_bounds(
-                corpus.select(
-                    F.col(vec_col).alias("embedding"),
-                    norm(F.col(vec_col)).alias("vnorm"),
-                ).filter(F.col("vnorm") > 0),
-                "embedding",
-            )
-    idx = assign_cells(
-        corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("embedding"),
-            norm(F.col(vec_col)).alias("vnorm"),
-        ).filter(F.col("vnorm") > 0),
-        cents,
-        "vec_id",
-        "embedding",
-        n_probe=1,
-        impl=impl,
-    )
-    if sq8 and clamp_stats is not None:
-        # drift telemetry: count dims landing OUTSIDE the stored
-        # bounds (they clamp to the code rails, where dequant error
-        # exceeds step/2 and the gate margin is no longer sound).
-        # For degenerate dims (mx <= mn, everything codes 0) any
-        # x != mn is equally uncovered — the x<mn|x>mx test already
-        # says exactly that. Statically unrolled like the pack expr;
-        # one batch-sized agg.
-        cexpr = None
-        for i in range(len(mins)):
-            x = F.col("embedding")[i].cast("double")
-            t = F.when(
-                (x < F.lit(mins[i])) | (x > F.lit(maxs[i])), 1
-            ).otherwise(0)
-            cexpr = t if cexpr is None else cexpr + t
-        crow = (
-            corpus.select(
-                F.col(vec_col).alias("embedding"),
-                norm(F.col(vec_col)).alias("vnorm"),
-            )
-            .filter(F.col("vnorm") > 0)
-            .select(cexpr.alias("cd"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("cd") > 0, 1).otherwise(0)).alias("r"),
-                F.sum("cd").alias("d"),
-            )
-            .collect()[0]
-        )
-        clamp_stats.update(
-            n_rows=int(crow.n),
-            rows_clamped=int(crow.r or 0),
-            dims_clamped=int(crow.d or 0),
-        )
-    if sq8:
-        # vnorm becomes the DEQUANTIZED vector's norm (direct
-        # per-dim midpoint exprs — value-identical to unpacking the
-        # codes; the pack/unpack round-trip itself is pinned by the
-        # probe parity tests), so probe cosines are consistent with
-        # what the index actually stores
-        dim = len(mins)
-        # one parsed SQL expression (r16, see _sq8_code_sql): the
-        # py4j form issued ~15 round-trips per dimension per build
-        deq = F.expr(
-            "array(" + ", ".join(
-                f"{_finite_d(mins[i], f'sq8 min[{i}]')} + "
-                f"(CAST({_sq8_code_sql('embedding', mins, maxs, i)}"
-                " AS DOUBLE) + 0.5D) * "
-                + _finite_d(
-                    (maxs[i] - mins[i]) / float(SQ8_LEVELS),
-                    f"sq8 step[{i}]",
-                )
-                for i in range(dim)
-            ) + ")"
-        )
-        idx = idx.select(
-            "cell",
-            "vec_id",
-            _sq8_pack_expr("embedding", mins, maxs).alias("codes"),
-            norm(deq).alias("vnorm"),
-        )
-    elif prefix_dims is not None:
-        if mode == "append":
-            # the append guard above already probed + validated the
-            # batch dim against the stored geometry — don't pay a
-            # second corpus job per ingest micro-batch
-            full_dim = known_full_dim
+            return prefix_dims, full_dim
         else:
-            first = corpus.select(F.size(vec_col)).first()
-            full_dim = (
-                int(first[0]) if first is not None else prefix_dims + 1
-            )
-        if not (1 <= prefix_dims < full_dim):
-            raise ValueError(
-                f"prefix_dims must be in [1, dim): got {prefix_dims}"
-                f" for dim {full_dim}"
-            )
-        idx = idx.select(
-            "cell",
-            "vec_id",
-            F.expr(f"slice(embedding, 1, {prefix_dims})").alias("prefix"),
-            norm(
-                F.expr(
-                    f"slice(embedding, {prefix_dims + 1},"
-                    " size(embedding))"
-                )
-            ).alias("rest_norm"),
-            "vnorm",
-        )
-    else:
-        idx = idx.select("cell", "vec_id", "embedding", "vnorm")
-    write_bucketed(
-        idx,
-        table,
-        ["cell"],
-        num_buckets=num_buckets,
-        sort_cols=["cell"],
-        path=path,
-        mode=mode,
+            stored = _sq8_bounds(nz, "embedding")
+        if sq8 and clamp_stats is not None:
+            clamp_stats.update(_sq8_clamp_stats(nz, *stored))
+        return stored
+
+    rung = "sq8" if sq8 else "float" if prefix_dims is None else "prefix"
+    idx, cents, _ = _build_ivf_index(
+        corpus, table, rung, sidecar, id_col, vec_col, n_cells, iters, impl,
+        centroids, num_buckets, path, mode, balance_cell_rows,
     )
-    spark = corpus.sparkSession
-    if mode != "append":  # append keeps the existing quantizer table
-        cent_rows = [
-            (c, [float(x) for x in vec]) for c, vec in enumerate(cents)
-        ]
-        cent_df = _driver_meta_df(
-            spark, cent_rows, "cell int, centroid array<double>"
-        )
-        w = cent_df.write.mode(mode).format("parquet")
-        if path:
-            w = w.option("path", f"{path}_centroids")
-        w.saveAsTable(f"{table}_centroids")
-        if sq8:
-            b_df = _driver_meta_df(
-                spark,
-                [(mins, maxs, SQ8_LEVELS)],
-                "mins array<double>, maxs array<double>, levels int",
-            )
-            wb = b_df.write.mode(mode).format("parquet")
-            if path:
-                wb = wb.option("path", f"{path}_sq8")
-            wb.saveAsTable(f"{table}_sq8")
-        if prefix_dims is not None:
-            p_df = _driver_meta_df(
-                spark,
-                [(int(prefix_dims), int(full_dim))],
-                "dims int, full_dim int",
-            )
-            wp = p_df.write.mode(mode).format("parquet")
-            if path:
-                wp = wp.option("path", f"{path}_prefix")
-            wp.saveAsTable(f"{table}_prefix")
-    return spark.table(table), cents
+    return idx, cents
 
 
 def load_ivf_centroids(spark: SparkSession, table: str) -> list[list[float]]:

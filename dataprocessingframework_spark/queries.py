@@ -37,6 +37,7 @@ from dataprocessingframework_spark.operators import (
     text_analysis,
     validators,
 )
+from dataprocessingframework_spark.session import _ship_package
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -48,37 +49,6 @@ P = MINHASH_PRIME
 SCRATCH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
 )
-
-_SHIPPED: set[str] = set()
-
-
-def _ship_package(spark: SparkSession) -> None:
-    """Make this package importable on executor Python workers.
-
-    The external driver imports ``__spark_entry__`` by path from an
-    arbitrary cwd; cloudpickle serializes mapInPandas / pandas-UDF
-    closures by *reference* to this package, so Python workers must be
-    able to import it — a driver-side ``sys.path`` entry does not
-    propagate. Shipping a zip via ``addPyFile`` fixes that identically
-    in local and cluster mode (workers prepend shipped files to their
-    ``sys.path``)."""
-    import os
-    import shutil
-    import tempfile
-
-    sc = spark.sparkContext
-    app_id = sc.applicationId  # unique per context, unlike id(sc)
-    if app_id in _SHIPPED:
-        return
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    target = os.path.join(
-        tempfile.gettempdir(), f"dpf_spark_pkg_{os.getpid()}"
-    )
-    zpath = shutil.make_archive(
-        target, "zip", root_dir=root, base_dir="dataprocessingframework_spark"
-    )
-    sc.addPyFile(zpath)
-    _SHIPPED.add(app_id)
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -9769,7 +9739,8 @@ def q_emb_rebalance_policy(spark, sf_dir):
     """Auto-rebalance DECISION arithmetic (r13 — VERDICT r12 item 4):
     the deterministic trigger that
     ``incremental_semantic_ingest(rebalance_on_imbalance=...)``
-    evaluates after every index append, FULL-oracled on the seeded
+    evaluates after every index write at any ``rung=`` (a firing
+    rebuilds the index at the same rung), FULL-oracled on the seeded
     coarse quantizer (n_cells=4, iters=0 — hash-order seeds +
     argmax-dot assignment, the same portable arithmetic the
     emb_ivf_balance oracle replays). ``triggered_hot`` is the
@@ -9859,8 +9830,8 @@ def q_emb_gate_rung_policy(spark, sf_dir):
     rest-mass p95 at d_p=16 for the prefix rung, the SQ8 derived
     margin 2Δ/min‖v‖ on the corpus's own min/max grid) fed through
     ``recommend_gate_rung`` with explicit cutoffs — the verdict
-    ``incremental_semantic_ingest(auto_rung=...)`` executes at
-    bootstrap. Two corpus variants pin BOTH decision legs: ``raw``
+    ``incremental_semantic_ingest(rung='auto', prefix_dims=16)``
+    executes at bootstrap (``recommend_stats=`` returns it). Two corpus variants pin BOTH decision legs: ``raw``
     (the synthetic random embeddings — rest mass ≈ sqrt(1 − 16/64),
     prefix REJECTED) and ``matryoshka`` (dims scaled by 0.125^(i//16)
     — exact power-of-two scaling, bit-portable — mass concentrates

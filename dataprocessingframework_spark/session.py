@@ -288,17 +288,55 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     if cds is None:
-        return builder.getOrCreate()
-    os.environ["SPARK_CONF_DIR"] = cds.conf_dir  # read by the launcher only
-    try:
         spark = builder.getOrCreate()
-    finally:
-        del os.environ["SPARK_CONF_DIR"]
-    proc = getattr(SparkContext._gateway, "proc", None)
-    if cds.classlist is not None and proc is not None:
-        classpath = spark._jvm.java.lang.System.getProperty("java.class.path")
-        atexit.register(_build_archive, proc, cds, classpath)
+    else:
+        os.environ["SPARK_CONF_DIR"] = cds.conf_dir  # read by the launcher only
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            del os.environ["SPARK_CONF_DIR"]
+        proc = getattr(SparkContext._gateway, "proc", None)
+        if cds.classlist is not None and proc is not None:
+            classpath = spark._jvm.java.lang.System.getProperty("java.class.path")
+            atexit.register(_build_archive, proc, cds, classpath)
+    _ship_package(spark)
     return spark
+
+
+_SHIPPED: set[str] = set()
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Make this package importable on the Python workers of
+    ``spark``'s context, once per context.
+
+    cloudpickle serializes mapInPandas / pandas-UDF closures by
+    *reference* to this package, so Python workers must be able to
+    import it; a driver-side ``sys.path`` entry (a script run from
+    outside the checkout, or the external driver importing
+    ``__spark_entry__`` by path) does not propagate. Shipping a zip
+    via ``addPyFile`` fixes that identically in local and cluster mode
+    (workers prepend shipped files to their ``sys.path``)."""
+    import tempfile
+
+    sc = spark.sparkContext
+    app_id = sc.applicationId  # unique per context, unlike id(sc)
+    if app_id in _SHIPPED:
+        return
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    target = os.path.join(tempfile.gettempdir(), f"dpf_spark_pkg_{os.getpid()}")
+    zpath = shutil.make_archive(
+        target, "zip", root_dir=root, base_dir="dataprocessingframework_spark"
+    )
+    sc.addPyFile(zpath)
+    if not _SHIPPED:
+        atexit.register(_remove_quietly, zpath)  # served to workers until exit
+    _SHIPPED.add(app_id)
+
+
+def _remove_quietly(path: str) -> None:
+    with suppress(OSError):
+        os.remove(path)
 
 
 def stop_spark() -> None:

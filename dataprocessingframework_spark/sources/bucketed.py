@@ -46,7 +46,21 @@ def write_bucketed(
     anti-pattern; file scheduling then dominates every later scan).
     Write parallelism becomes num_buckets — size it in the thousands
     at real scale, which the co-join sizing rule demands anyway.
+
+    ``mode='append'`` to an existing table takes its bucket count from
+    the catalog (Spark rejects a mismatched bucket spec) and ignores
+    ``path``: the table's catalog location is authoritative, because
+    ``compact_bucketed_index`` relocates external tables and the
+    original path would fail the location check.
     """
+    spark = df.sparkSession
+    if mode == "append" and spark.catalog.tableExists(table):
+        desc = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
+        num_buckets = next(
+            (int(r.data_type) for r in desc if r.col_name == "Num Buckets"),
+            num_buckets,
+        )
+        path = None
     bucket_cols = (
         [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
     )

@@ -29,7 +29,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataprocessingframework_spark.streaming.ingest import _committed_batches
+from dataprocessingframework_spark.streaming.ingest import _run_available_now
 
 
 def _batch_dirs(
@@ -152,39 +152,9 @@ def incremental_curation(
         fresh.write.mode("overwrite").parquet(f"{corpus_dir}/batch-{batch_id}")
 
     return _run_available_now(
-        spark, src_dir, schema, checkpoint_dir, _process,
-        src_format, max_files_per_trigger,
+        spark, src_dir, schema, checkpoint_dir,
+        lambda w: w.foreachBatch(_process), src_format, max_files_per_trigger,
     )
-
-
-def _run_available_now(
-    spark: SparkSession,
-    src_dir: str,
-    schema: str,
-    checkpoint_dir: str,
-    process: Callable[[DataFrame, int], None],
-    src_format: str = "json",
-    max_files_per_trigger: int | None = None,
-) -> int:
-    """Drive one availableNow foreachBatch pass over the source dir;
-    returns micro-batches committed this run."""
-    before = _committed_batches(spark, checkpoint_dir)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream: DataFrame = getattr(reader, src_format)(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        while q.isActive:
-            q.awaitTermination(1)
-    finally:
-        q.stop()
-    return len(_committed_batches(spark, checkpoint_dir) - before)
 
 
 def incremental_near_dup_ingest(
@@ -288,8 +258,8 @@ def incremental_near_dup_ingest(
             _maybe_compact(spark, index_table, batch_id, compact_every)
 
     return _run_available_now(
-        spark, src_dir, schema, checkpoint_dir, _process,
-        src_format, max_files_per_trigger,
+        spark, src_dir, schema, checkpoint_dir,
+        lambda w: w.foreachBatch(_process), src_format, max_files_per_trigger,
     )
 
 
@@ -312,16 +282,15 @@ def incremental_semantic_ingest(
     index_path: str | None = None,
     index_num_buckets: int = 16,
     compact_every: int | None = None,
-    index_sq8: bool = False,
-    index_pq: bool = False,
-    index_prefix_dims: int | None = None,
+    rung: str = "float",
+    prefix_dims: int | None = None,
     clamp_log: list | None = None,
     rebuild_on_clamp_frac: float | None = None,
     rebalance_on_imbalance: float | None = None,
     rebalance_cell_rows: int | None = None,
     rebalance_rounds: int = 4,
     rebalance_log: list | None = None,
-    auto_rung: dict | None = None,
+    recommend_stats: dict | None = None,
 ) -> int:
     """Continuous SEMANTIC-dup-gated ingestion: per micro-batch, drop
     arriving embedding rows whose cosine similarity to any
@@ -357,49 +326,56 @@ def incremental_semantic_ingest(
     a verdict). The batch-dir corpus remains the source of truth;
     the index is derived state rebuildable via
     ``materialize_ivf_index(read_corpus(...), centroids=...)``.
-    ``compact_every``: every N committed batches, rewrite the index
-    back to one file per bucket (each append adds
+    The bootstrap build, and every rebuild below, covers the WHOLE
+    accepted corpus. ``compact_every``: every N committed batches,
+    rewrite the index back to one file per bucket (each append adds
     ``index_num_buckets`` files — see
     ``sources.compact.compact_bucketed_index``).
 
-    ``index_sq8`` (requires ``index_table``): maintain the index
-    SQ8-COMPRESSED and gate through the sq8 rung of
-    ``similarity.semantic_dedup_gate`` — per batch, the corpus is
-    read only as packed codes (the ~3.6-7.7x smaller payload); the
-    handful of shortlisted candidates are exactly re-checked against
-    the batch-dir float corpus with the sound derived margin, so the
-    accepted set is IDENTICAL to the float-index path (pinned in
-    tests). Appends reuse the STORED bounds (code-grid stability)
-    and the bootstrap overwrite covers the whole accepted corpus,
-    exactly like the float path. Caveat: appended vectors that drift
-    OUTSIDE the bootstrap bounds clamp to the code rails, where the
-    derived margin is no longer sound — the failure direction is a
-    missed duplicate, never a false drop; under real drift, rebuild
-    the index periodically so the bounds re-cover the corpus (see
-    ``semantic_dedup_gate``).
+    ``rung`` (anything but 'float' requires ``index_table``): the
+    compression rung the index is maintained at, gated through the
+    same rung of ``similarity.semantic_dedup_gate``. The compressed
+    rungs shortlist candidates from the compressed rows and recheck
+    them exactly against the batch-dir float corpus, so every rung's
+    accepted set is IDENTICAL to the float path (pinned in tests):
 
-    ``index_pq`` (requires ``index_table``, exclusive with
-    ``index_sq8``): the 16 B/vector rung — the maintained index
-    stores PQ codes + per-row reconstruction residuals and gates via
-    the pq rung of ``semantic_dedup_gate`` (per-row 2·resid/vnorm sound
-    margins + exact recheck ⇒ accepted set identical to the float
-    path, pinned in tests). Unlike SQ8 there is NO append drift
-    caveat: PQ encoding never clamps and each appended row's resid
-    is computed against the stored codebooks, so the per-row margins
-    stay sound as the stream runs.
+    - 'sq8': packed codes, the ~3.6-7.7x smaller payload, with the
+      sound derived margin. Appends reuse the STORED bounds
+      (code-grid stability). Caveat: appended vectors that drift
+      OUTSIDE the bootstrap bounds clamp to the code rails, where the
+      derived margin is no longer sound — the failure direction is a
+      missed duplicate, never a false drop (``clamp_log``,
+      ``rebuild_on_clamp_frac``).
+    - 'pq': the 16 B/vector rung — PQ codes plus per-row
+      reconstruction residuals (per-row 2·resid/vnorm sound
+      margins). No append caveat: PQ encoding never clamps, and each
+      appended row's resid is computed against the stored codebooks.
+    - 'prefix': the training-free rung — the first ``prefix_dims``
+      coordinates plus the remainder norm (per-pair Cauchy-Schwarz
+      bound, sound at margin 0). No append caveat; appends validate
+      the batch against the stored geometry. Right for
+      matryoshka-trained embeddings — size d_p first with
+      ``emb_gate_prefix_report``.
+    - 'auto': the rung is picked at BOOTSTRAP by
+      ``similarity.recommend_gate_rung`` over
+      ``similarity.gate_rung_signals`` of the bootstrap corpus, with
+      ``prefix_dims`` the candidate d_p: the most-compressed viable
+      rung (prefix for matryoshka-shaped corpora, SQ8 when the
+      derived margin leaves headroom, float otherwise; PQ is never
+      auto-picked — its signal needs trained codebooks). On restart
+      against an existing index, the PERSISTED index's columns are
+      the rung of record (same principle as the persisted
+      quantizer): re-detected, never re-decided. Acceptance is
+      rung-independent, so the pick only moves cost, never verdicts.
 
-    ``index_prefix_dims`` (requires ``index_table``, exclusive with
-    ``index_sq8``/``index_pq``, r13): the training-free prefix rung —
-    the maintained index stores each vector's first d_p coordinates
-    plus the remainder norm and gates via
-    the prefix rung of ``semantic_dedup_gate`` (per-pair Cauchy-Schwarz
-    bound, sound at margin=0 ⇒ accepted set identical to the float
-    path). No append caveat (no bounds, no codebooks); appends
-    validate the batch against the stored geometry. Right for
-    matryoshka-trained embeddings — size d_p first with
-    ``emb_gate_prefix_report``.
+    ``recommend_stats`` (opt-in dict, requires ``index_table``):
+    filled at the bootstrap build with ``signals``, ``decision``,
+    ``rung`` and ``active_rung``, as in ``semantic_dedup_gate``
+    (``prefix_dims`` None means dim/4 for the signals). A restart with
+    rung='auto' sets ``rung`` and ``active_rung`` to the re-detected
+    rung only.
 
-    ``clamp_log`` (sq8 only, r12): pass a list and every index
+    ``clamp_log`` (rung='sq8' only, r12): pass a list and every index
     write appends ``{batch_id, n_rows, rows_clamped, dims_clamped,
     rebuilt}`` — the runtime signal for the SQ8 append-drift caveat
     above (clamped rows are exactly the ones the derived margin no
@@ -407,18 +383,17 @@ def incremental_semantic_ingest(
     construction; a growing rows_clamped fraction across batches is
     the cue to rebuild the index so the bounds re-cover the corpus.
 
-    ``rebuild_on_clamp_frac`` (sq8 only, r12): closes that loop —
-    when an append's rows_clamped/n_rows exceeds the fraction, the
-    index is REBUILT from the whole accepted corpus in the same
-    micro-batch (one bounded ``read_corpus`` pass, same shape as the
-    bootstrap overwrite), so the bounds re-cover the drifted
-    distribution and the gate's margin is sound again from the NEXT
-    batch on. The drifted batch itself was already gated before its
-    write (its clamped rows can only have missed dups against
-    themselves — the documented caveat direction); the rebuild bounds
-    the exposure to one batch instead of forever. Keep the threshold
-    above the noise floor (a few in 10k rows) — each rebuild is a
-    full corpus re-encode.
+    ``rebuild_on_clamp_frac`` (rung='sq8' only, r12): closes that
+    loop — when an append's rows_clamped/n_rows exceeds the fraction,
+    the index is REBUILT from the whole accepted corpus in the same
+    micro-batch, so the bounds re-cover the drifted distribution and
+    the gate's margin is sound again from the NEXT batch on. The
+    drifted batch itself was already gated before its write (its
+    clamped rows can only have missed dups against themselves — the
+    documented caveat direction); the rebuild bounds the exposure to
+    one batch instead of forever. Keep the threshold above the noise
+    floor (a few in 10k rows) — each rebuild is a full corpus
+    re-encode.
 
     ``rebalance_on_imbalance`` (r13 — VERDICT r12 item 4, requires
     ``index_table``): the opt-in AUTO-REBALANCE policy closing the
@@ -430,7 +405,7 @@ def incremental_semantic_ingest(
     (imbalance above the threshold AND a cell above the cap — a
     drifted stream piling mass into one quantizer cell), the
     quantizer is SPLIT via ``balance_centroids`` over the whole
-    accepted corpus and the index is rebuilt bootstrap-shaped with
+    accepted corpus and the index is rebuilt at the same rung with
     the split centroid list — so from the NEXT batch on, batch
     assignment and index cells both use the repaired quantizer (they
     must move together: the gate equi-joins batch cells against
@@ -446,43 +421,35 @@ def incremental_semantic_ingest(
     ``{batch_id, n_rows, max_cell, imbalance, triggered,
     n_cells_before, n_cells_after, rebalanced}``. Cost when idle:
     one column-pruned cell-count scan per batch; when fired: one
-    balance_centroids pass + one bootstrap-shaped index rebuild.
-
-    ``auto_rung`` (r14 — VERDICT r13 item 5, requires ``index_table``,
-    exclusive with the explicit rung flags): opt-in AUTOMATIC rung
-    selection. Pass a dict with ``prefix_dims`` (the candidate d_p)
-    and optionally ``max_rest_mass_p95`` / ``max_margin_frac`` — at
-    BOOTSTRAP the ingest computes
-    ``similarity.gate_rung_signals`` over the bootstrap corpus and
-    lets ``similarity.recommend_gate_rung`` pick the most-compressed
-    viable rung (prefix for matryoshka-shaped corpora, SQ8 when the
-    derived margin leaves headroom, float otherwise; PQ is never
-    auto-picked — its signal needs trained codebooks). The dict gains
-    ``signals``/``decision``/``rung`` keys for telemetry. On restart
-    against an existing index, the PERSISTED index's columns are the
-    source of truth (same principle as the persisted quantizer): the
-    rung is re-detected from them, never re-decided — acceptance
-    semantics are rung-independent (every rung provably equals the
-    exact gate), so the pick only moves cost, never verdicts."""
+    balance_centroids pass + one index rebuild."""
     from dataprocessingframework_spark.operators.similarity import (
         balance_centroids,
+        detect_gate_rung,
+        gate_rung_signals,
         incremental_semantic_dedup,
+        load_ivf_centroids,
+        load_prefix_dims,
         materialize_ivf_index,
         materialize_pq_index,
         rebalance_trigger,
+        recommend_gate_rung,
         semantic_dedup_gate,
     )
+    from dataprocessingframework_spark.sources.compact import _table_location
 
-    if (
-        index_sq8 or index_pq or index_prefix_dims is not None
-    ) and index_table is None:
+    if rung not in ("float", "sq8", "pq", "prefix", "auto"):
         raise ValueError(
-            "index_sq8/index_pq/index_prefix_dims require index_table"
+            f"unknown rung {rung!r}: expected 'float'|'sq8'|'pq'|'prefix'|'auto'"
         )
-    if sum((index_sq8, index_pq, index_prefix_dims is not None)) > 1:
+    if index_table is None and (rung != "float" or recommend_stats is not None):
         raise ValueError(
-            "index_sq8 / index_pq / index_prefix_dims are exclusive"
-            " compression rungs"
+            f"rung={rung!r} and recommend_stats require index_table (the"
+            " rung is materialized as the maintained index)"
+        )
+    if rung in ("prefix", "auto") and prefix_dims is None:
+        raise ValueError(
+            f"rung={rung!r} needs prefix_dims (size d_p with"
+            " emb_gate_prefix_report / gate_rung_signals)"
         )
     if rebalance_on_imbalance is not None:
         if index_table is None:
@@ -495,65 +462,35 @@ def incremental_semantic_ingest(
                 "rebalance_on_imbalance needs a cell cap: pass"
                 " rebalance_cell_rows="
             )
-    if auto_rung is not None:
-        if index_table is None:
-            raise ValueError(
-                "auto_rung requires index_table (the picked rung is"
-                " materialized as the maintained index)"
-            )
-        if index_sq8 or index_pq or index_prefix_dims is not None:
-            raise ValueError(
-                "auto_rung is exclusive with the explicit rung flags"
-                " (index_sq8/index_pq/index_prefix_dims)"
-            )
-        if "prefix_dims" not in auto_rung:
-            raise ValueError(
-                "auto_rung needs the candidate 'prefix_dims' (size"
-                " d_p with emb_gate_prefix_report / gate_rung_signals)"
-            )
     # the quantizer is MUTABLE stream state once the rebalance policy
     # is on: batch assignment and index cells must flip together, so
-    # _process reads it from this box every batch; with auto_rung the
-    # picked rung is stream state the same way
+    # _process reads it from this box every batch; with rung='auto'
+    # the picked rung is stream state the same way
     state = {
         "cents": [[float(x) for x in c] for c in centroids],
-        "rung": None,
-        "prefix_dims": index_prefix_dims,
+        "rung": rung,
+        "prefix_dims": prefix_dims if rung == "prefix" else None,
     }
-    if auto_rung is None:
-        state["rung"] = (
-            "sq8"
-            if index_sq8
-            else "pq"
-            if index_pq
-            else "prefix"
-            if index_prefix_dims is not None
-            else "float"
-        )
-    elif spark.catalog.tableExists(index_table):
+    if rung == "auto" and spark.catalog.tableExists(index_table):
         # restart: the PERSISTED index's columns are the rung of
         # record — re-deciding from a fresh signal pass could pick a
         # different rung than the table actually stores and score
         # packed words with the wrong arithmetic
-        from dataprocessingframework_spark.operators.similarity import (
-            detect_gate_rung,
-            load_prefix_dims,
-        )
-
         state["rung"] = detect_gate_rung(spark.table(index_table).columns)
         if state["rung"] == "pq":
-            # auto_rung never picks PQ (its signal needs trained
+            # 'auto' never picks PQ (its signal needs trained
             # codebooks), so a PQ table here means the caller switched
             # management modes — appending float rows into it would
             # corrupt the index; refuse instead
             raise ValueError(
-                f"auto_rung found an existing PQ index at"
-                f" {index_table!r} — PQ is user-managed; pass"
-                " index_pq=True (without auto_rung) to keep it"
+                f"rung='auto' found an existing PQ index at"
+                f" {index_table!r} — PQ is user-managed; pass rung='pq'"
+                " to keep it"
             )
         if state["rung"] == "prefix":
             state["prefix_dims"] = load_prefix_dims(spark, index_table)[0]
-        auto_rung["rung"] = state["rung"]
+        if recommend_stats is not None:
+            recommend_stats.update(rung=state["rung"], active_rung=state["rung"])
     if rebalance_on_imbalance is not None and spark.catalog.tableExists(
         f"{index_table}_centroids"
     ):
@@ -564,11 +501,30 @@ def incremental_semantic_ingest(
         # batch cells under one quantizer and equi-join them against
         # index cells written under another, silently missing
         # candidates
-        from dataprocessingframework_spark.operators.similarity import (
-            load_ivf_centroids,
-        )
-
         state["cents"] = load_ivf_centroids(spark, index_table)
+
+    def _write_index(
+        src: DataFrame, mode: str, cents: list, clamp_stats: dict | None = None
+    ) -> None:
+        path = index_path
+        if mode == "overwrite" and path is not None and spark.catalog.tableExists(index_table):
+            # a rebuild: the CURRENT catalog location is authoritative —
+            # compact_every may have relocated the external table since
+            # bootstrap, and writing back to the stale index_path would
+            # orphan the compacted directory and silently move the index
+            path = _table_location(spark, index_table)
+        vecs = src.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
+        kw = dict(
+            centroids=cents, impl=impl, num_buckets=index_num_buckets,
+            path=path, mode=mode,
+        )
+        if state["rung"] == "pq":
+            materialize_pq_index(vecs, index_table, **kw)
+        else:
+            materialize_ivf_index(
+                vecs, index_table, sq8=state["rung"] == "sq8",
+                clamp_stats=clamp_stats, prefix_dims=state["prefix_dims"], **kw,
+            )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         curated = curate(batch_df) if curate is not None else batch_df
@@ -580,10 +536,9 @@ def incremental_semantic_ingest(
         if use_index:
             # ONE gate entry point across the ladder (r12): the
             # explicit gate_kind also validates that the index's
-            # columns match the rung of record (the flags, or the
-            # auto_rung pick) — a mismatched table fails loudly
-            # instead of scoring packed words with the wrong
-            # arithmetic. The compressed rungs read the float
+            # columns match the rung of record — a mismatched table
+            # fails loudly instead of scoring packed words with the
+            # wrong arithmetic. The compressed rungs read the float
             # batch-dir corpus only for the exact stage-2 recheck of
             # shortlisted candidates; the float-index rung never
             # reads it.
@@ -617,137 +572,52 @@ def incremental_semantic_ingest(
             fresh = curated
         fresh.write.mode("overwrite").parquet(f"{corpus_dir}/batch-{batch_id}")
         if index_table is not None:
-            # bootstrap: overwrite builds cover the WHOLE accepted
-            # corpus, not just this batch (ADVICE r8 — an index
-            # adopted mid-stream would otherwise omit prior batches
-            # and under-gate everything after)
             src = _index_source(spark, corpus_dir, batch_id, use_index)
             if src is not None:
-                src_v = src.select(
-                    F.col(id_col).alias("vec_id"),
-                    F.col(vec_col).alias("embedding"),
-                )
-                if auto_rung is not None and state["rung"] is None:
-                    # bootstrap rung pick (r14): signals over the
-                    # SAME corpus the bootstrap index covers, picked
-                    # once — the persisted index then carries the
-                    # decision across restarts (re-detected from its
-                    # columns above, never re-decided)
-                    from dataprocessingframework_spark.operators.similarity import (  # noqa: E501
-                        gate_rung_signals,
-                        recommend_gate_rung,
-                    )
-
-                    signals = gate_rung_signals(
-                        src_v, auto_rung["prefix_dims"]
-                    )
+                if not use_index and (state["rung"] == "auto" or recommend_stats is not None):
+                    # bootstrap rung pick (r14): signals over the SAME
+                    # corpus the bootstrap index covers, picked once —
+                    # the persisted index then carries the decision
+                    # across restarts
+                    signals = gate_rung_signals(src, prefix_dims, vec_col=vec_col)
                     decision = recommend_gate_rung(
                         threshold=threshold,
                         rest_mass_p95=signals["rest_mass_p95"],
                         sq8_margin=signals["sq8_margin"],
-                        max_rest_mass_p95=auto_rung.get(
-                            "max_rest_mass_p95", 0.35
-                        ),
-                        max_margin_frac=auto_rung.get(
-                            "max_margin_frac", 0.25
-                        ),
                     )
-                    state["rung"] = decision["rung"]
-                    if decision["rung"] == "prefix":
-                        state["prefix_dims"] = auto_rung["prefix_dims"]
-                    auto_rung["signals"] = signals
-                    auto_rung["decision"] = decision
-                    auto_rung["rung"] = decision["rung"]
-                if index_pq:
-                    materialize_pq_index(
-                        src_v,
-                        index_table,
-                        centroids=state["cents"],
-                        impl=impl,
-                        num_buckets=index_num_buckets,
-                        path=index_path,
-                        mode="append" if use_index else "overwrite",
-                    )
-                else:
-                    eff_sq8 = state["rung"] == "sq8"
-                    cstats: dict | None = (
-                        {}
-                        if eff_sq8
-                        and (
-                            clamp_log is not None
-                            or rebuild_on_clamp_frac is not None
+                    if state["rung"] == "auto":
+                        state["rung"] = decision["rung"]
+                        if decision["rung"] == "prefix":
+                            state["prefix_dims"] = prefix_dims
+                    if recommend_stats is not None:
+                        recommend_stats.update(
+                            signals=signals, decision=decision,
+                            rung=decision["rung"], active_rung=state["rung"],
                         )
-                        else None
-                    )
-                    materialize_ivf_index(
-                        src_v,
-                        index_table,
-                        centroids=state["cents"],
-                        impl=impl,
-                        num_buckets=index_num_buckets,
-                        path=index_path,
-                        mode="append" if use_index else "overwrite",
-                        sq8=eff_sq8,
-                        clamp_stats=cstats,
-                        prefix_dims=state["prefix_dims"],
-                    )
-                    rebuilt = False
-                    if (
-                        cstats is not None
-                        and rebuild_on_clamp_frac is not None
-                        and use_index
-                        and cstats["rows_clamped"]
-                        > rebuild_on_clamp_frac * max(cstats["n_rows"], 1)
-                    ):
-                        # bounds no longer cover the corpus: rebuild
-                        # from ALL accepted batches (bootstrap shape),
-                        # re-deriving bounds so the gate margin is
-                        # sound again from the next batch on. The
-                        # CURRENT catalog location is authoritative —
-                        # compact_every may have relocated the
-                        # external table since bootstrap, and writing
-                        # back to the stale index_path would orphan
-                        # the compacted directory and silently move
-                        # the index
-                        from dataprocessingframework_spark.sources.compact import (  # noqa: E501
-                            _table_location,
-                        )
-
-                        full = _index_source(
-                            spark, corpus_dir, batch_id, False
-                        )
-                        materialize_ivf_index(
-                            full.select(
-                                F.col(id_col).alias("vec_id"),
-                                F.col(vec_col).alias("embedding"),
-                            ),
-                            index_table,
-                            centroids=state["cents"],
-                            impl=impl,
-                            num_buckets=index_num_buckets,
-                            path=(
-                                _table_location(spark, index_table)
-                                if index_path is not None
-                                else None
-                            ),
-                            mode="overwrite",
-                            sq8=True,
-                        )
-                        rebuilt = True
-                    if cstats is not None and clamp_log is not None:
-                        clamp_log.append(
-                            {
-                                "batch_id": batch_id,
-                                **cstats,
-                                "rebuilt": rebuilt,
-                            }
-                        )
+                cstats: dict | None = (
+                    {}
+                    if state["rung"] == "sq8"
+                    and (clamp_log is not None or rebuild_on_clamp_frac is not None)
+                    else None
+                )
+                _write_index(src, "append" if use_index else "overwrite", state["cents"], cstats)
+                rebuilt = (
+                    cstats is not None
+                    and rebuild_on_clamp_frac is not None
+                    and use_index
+                    and cstats["rows_clamped"]
+                    > rebuild_on_clamp_frac * max(cstats["n_rows"], 1)
+                )
+                if rebuilt:
+                    # bounds no longer cover the corpus: rebuild from
+                    # ALL accepted batches, re-deriving bounds so the
+                    # gate margin is sound again from the next batch on
+                    full = _index_source(spark, corpus_dir, batch_id, False)
+                    _write_index(full, "overwrite", state["cents"])
+                if cstats is not None and clamp_log is not None:
+                    clamp_log.append({"batch_id": batch_id, **cstats, "rebuilt": rebuilt})
             _maybe_compact(spark, index_table, batch_id, compact_every)
-        if (
-            rebalance_on_imbalance is not None
-            and index_table is not None
-            and spark.catalog.tableExists(index_table)
-        ):
+        if rebalance_on_imbalance is not None and spark.catalog.tableExists(index_table):
             decision = rebalance_trigger(
                 spark.table(index_table), rebalance_on_imbalance,
                 rebalance_cell_rows,
@@ -769,51 +639,21 @@ def incremental_semantic_ingest(
             )
             if decision["triggered"] and not cooling:
                 # repair at the source: split the quantizer over the
-                # WHOLE accepted corpus, then rebuild the index
-                # bootstrap-shaped with the split list so batch
-                # assignment (state) and index cells flip together
+                # WHOLE accepted corpus, then rebuild the index with
+                # the split list so batch assignment (state) and index
+                # cells flip together
                 full = _index_source(spark, corpus_dir, batch_id, False)
                 if full is not None:
-                    fv = full.select(
-                        F.col(id_col).alias("vec_id"),
-                        F.col(vec_col).alias("embedding"),
-                    )
                     new_cents = balance_centroids(
-                        fv, state["cents"], rebalance_cell_rows,
-                        rounds=rebalance_rounds, impl=impl,
+                        full, state["cents"], rebalance_cell_rows,
+                        rounds=rebalance_rounds, id_col=id_col,
+                        vec_col=vec_col, impl=impl,
                     )
                     if new_cents != state["cents"]:
-                        from dataprocessingframework_spark.sources.compact import (  # noqa: E501
-                            _table_location,
-                        )
-
-                        loc = (
-                            _table_location(spark, index_table)
-                            if index_path is not None
-                            else None
-                        )
-                        if index_pq:
-                            materialize_pq_index(
-                                fv, index_table, centroids=new_cents,
-                                impl=impl,
-                                num_buckets=index_num_buckets,
-                                path=loc, mode="overwrite",
-                            )
-                        else:
-                            materialize_ivf_index(
-                                fv, index_table, centroids=new_cents,
-                                impl=impl,
-                                num_buckets=index_num_buckets,
-                                path=loc, mode="overwrite",
-                                sq8=state["rung"] == "sq8",
-                                prefix_dims=state["prefix_dims"],
-                            )
+                        _write_index(full, "overwrite", new_cents)
                         state["cents"] = new_cents
                         rebalanced = True
-                if rebalanced:
-                    state["rebalance_stale_at"] = None
-                else:
-                    state["rebalance_stale_at"] = decision["n_rows"]
+                state["rebalance_stale_at"] = None if rebalanced else decision["n_rows"]
             if rebalance_log is not None:
                 rebalance_log.append(
                     {
@@ -830,6 +670,6 @@ def incremental_semantic_ingest(
                 )
 
     return _run_available_now(
-        spark, src_dir, schema, checkpoint_dir, _process,
-        src_format, max_files_per_trigger,
+        spark, src_dir, schema, checkpoint_dir,
+        lambda w: w.foreachBatch(_process), src_format, max_files_per_trigger,
     )

@@ -13,7 +13,10 @@ folded into a curated parquet dataset without ever re-reading history.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 
 def _committed_batches(spark: SparkSession, checkpoint_dir: str) -> set[int]:
@@ -32,6 +35,43 @@ def _committed_batches(spark: SparkSession, checkpoint_dir: str) -> set[int]:
         if name.isdigit():
             out.add(int(name))
     return out
+
+
+def _run_available_now(
+    spark: SparkSession,
+    src_dir: str,
+    schema: str,
+    checkpoint_dir: str,
+    sink: Callable[[DataStreamWriter], DataStreamWriter],
+    src_format: str = "json",
+    max_files_per_trigger: int | None = None,
+    transform: Callable[[DataFrame], DataFrame] | None = None,
+) -> int:
+    """Drive one availableNow pass over the source dir into the writer
+    ``sink`` configures (a foreachBatch function or a file sink);
+    returns micro-batches committed this run, counted from the
+    checkpoint's commit log — exact even when the run spans more
+    batches than ``recentProgress`` retains (its in-memory buffer
+    keeps only the most recent entries)."""
+    before = _committed_batches(spark, checkpoint_dir)
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    stream: DataFrame = getattr(reader, src_format)(src_dir)
+    if transform is not None:
+        stream = transform(stream)
+    q = (
+        sink(stream.writeStream)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        while q.isActive:
+            q.awaitTermination(1)
+    finally:
+        q.stop()
+    return len(_committed_batches(spark, checkpoint_dir) - before)
 
 
 def incremental_ingest(
@@ -54,31 +94,13 @@ def incremental_ingest(
     runs per micro-batch. ``max_files_per_trigger`` bounds the batch
     size for backfills (bounded state + steady checkpoints instead of
     one giant batch). Returns the number of micro-batches committed in
-    this run, counted from the checkpoint's commit log — exact even
-    when the run spans more batches than ``recentProgress`` retains
-    (its in-memory buffer keeps only the most recent entries).
+    this run.
     """
-    before = _committed_batches(spark, checkpoint_dir)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream: DataFrame = getattr(reader, src_format)(src_dir)
-    if transform is not None:
-        stream = transform(stream)
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _run_available_now(
+        spark, src_dir, schema, checkpoint_dir,
+        lambda w: w.format("parquet").option("path", out_dir).outputMode("append"),
+        src_format, max_files_per_trigger, transform,
     )
-    try:
-        while q.isActive:
-            q.awaitTermination(1)
-    finally:
-        q.stop()
-    return len(_committed_batches(spark, checkpoint_dir) - before)
 
 
 def stream_to_versioned(

@@ -124,7 +124,7 @@ def run_pipeline(spark, sf_dir: str, scratch: str) -> dict:
 
     # 6. rung auto-pick (r14): two metadata-sized aggregations per
     #    corpus shape decide the rung — the same call
-    #    incremental_semantic_ingest(auto_rung=...) makes at
+    #    incremental_semantic_ingest(rung='auto') makes at
     #    bootstrap. This corpus is SQ8-friendly, so the most-
     #    compressed viable rung is SQ8 on every shape; to show the
     #    decision DOING something we demo an SQ8-hostile store (tiny
@@ -202,6 +202,7 @@ def cleanup(spark) -> None:
 
 
 def main(sf_dir: str | None = None) -> dict:
+    from dataprocessingframework_spark.queries import SCRATCH
     from dataprocessingframework_spark.session import get_spark
 
     sf_dir = sf_dir or (
@@ -210,16 +211,12 @@ def main(sf_dir: str | None = None) -> dict:
     spark = get_spark(app_name="semantic-gate-ladder")
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        out = run_pipeline(
-            spark, sf_dir, "/root/repo/.scratch/gate_ladder"
-        )
+        out = run_pipeline(spark, sf_dir, os.path.join(SCRATCH, "gate_ladder"))
     finally:
         cleanup(spark)
         import shutil
 
-        shutil.rmtree(
-            "/root/repo/.scratch/gate_ladder", ignore_errors=True
-        )
+        shutil.rmtree(os.path.join(SCRATCH, "gate_ladder"), ignore_errors=True)
     for k, v in out.items():
         print(f"{k}: {v}")
     return out

@@ -471,35 +471,48 @@ def test_compact_bucketed_index_restores_one_file_per_bucket(
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_compacted_index_probe_still_exchange_free(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("kind", ["lsh", "lsh_ann"])
+def test_compacted_index_probe_still_exchange_free(spark, sf_dir, tmp_path, kind):
     """The compacted LSH index must still plan the incremental
     near-dup probe with NO Exchange on the index side — if the
     rewrite lost the bucket spec, the corpus index would reshuffle on
-    every probing batch."""
+    every probing batch. The append repeats neither the bucket count
+    nor relies on the original path: the stored spec and location
+    are authoritative (``write_bucketed``)."""
     from dataprocessingframework_spark.operators.dedup import (
         materialize_lsh_index,
+    )
+    from dataprocessingframework_spark.operators.similarity import (
+        materialize_lsh_ann_index,
     )
     from dataprocessingframework_spark.sources.compact import (
         compact_bucketed_index,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    half = docs.filter(F.col("doc_id") % 2 == 0)
-    rest = docs.filter(F.col("doc_id") % 2 == 1)
+    if kind == "lsh":
+        src = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        key, cols = "doc_id", ["band", "bucket"]
+
+        def build(df, **kw):
+            materialize_lsh_index(
+                df, "text", "doc_id", "t_lsh_cmp", num_hashes=8, bands=4, **kw
+            )
+    else:
+        src = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        key, cols = "vec_id", ["tbl", "bucket"]
+
+        def build(df, **kw):
+            materialize_lsh_ann_index(df, "t_lsh_cmp", **kw)
+
+    half = src.filter(F.col(key) % 2 == 0)
+    rest = src.filter(F.col(key) % 2 == 1)
     try:
-        materialize_lsh_index(
-            half, "text", "doc_id", "t_lsh_cmp",
-            num_hashes=8, bands=4, num_buckets=8,
-            path=str(tmp_path / "lshcmp"),
-        )
-        materialize_lsh_index(
-            rest, "text", "doc_id", "t_lsh_cmp", mode="append",
-            path=str(tmp_path / "lshcmp"),
-        )
+        build(half, num_buckets=8, path=str(tmp_path / "lshcmp"))
+        build(rest, mode="append", path=str(tmp_path / "lshcmp"))
         assert compact_bucketed_index(spark, "t_lsh_cmp") == 8
 
         idx = spark.table("t_lsh_cmp")
-        probe = idx.groupBy("band", "bucket").count()
+        probe = idx.groupBy(*cols).count()
         plan = probe._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
     finally:

@@ -1,6 +1,6 @@
-"""The semantic-gate, lexical near-dup and ANN top-k families of the
-query registry, checked against their DuckDB oracles in the regular
-test run.
+"""The semantic-gate, lexical near-dup, ANN top-k and streaming
+families of the query registry, checked against their DuckDB oracles in
+the regular test run.
 
 Each case runs one registered query and its oracle SQL at sf0.001 with
 the same comparison ``tools/check_correctness.py`` applies to the whole
@@ -69,6 +69,14 @@ ANN_ORACLES = [
 ]
 
 
+# the availableNow stream drivers and the bucketed writer
+STREAM_ORACLES = [
+    "stream_curation",
+    "stream_quality_gate",
+    "w_bucketed_join",
+]
+
+
 @pytest.fixture(scope="module")
 def oracle_con(sf_dir):
     con = oracle_connection(sf_dir)
@@ -97,4 +105,9 @@ def test_dedup_query_matches_oracle(spark, sf_dir, oracle_con, name):
 
 @pytest.mark.parametrize("name", ANN_ORACLES)
 def test_ann_query_matches_oracle(spark, sf_dir, oracle_con, name):
+    _check(spark, sf_dir, oracle_con, name)
+
+
+@pytest.mark.parametrize("name", STREAM_ORACLES)
+def test_stream_query_matches_oracle(spark, sf_dir, oracle_con, name):
     _check(spark, sf_dir, oracle_con, name)

@@ -1,6 +1,7 @@
 """Class-data-sharing archive of the driver JVM (``session._driver_cds``
 and ``session._build_archive``): flag composition, the skip rule, the
-archive key, temp-file handling, and one small JVM round trip."""
+archive key, temp-file handling, and one small JVM round trip; and the
+package reaching the Python workers of a ``get_spark`` session."""
 
 import os
 import subprocess
@@ -113,6 +114,7 @@ def test_get_spark_composes_cds_flags_at_launch(cds_dir, spark_home, monkeypatch
 
     monkeypatch.setattr(SparkContext, "_gateway", None)
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", fake_get_or_create)
+    monkeypatch.setattr(S, "_ship_package", lambda spark: None)  # no context to ship to
     compose = S._driver_cds
     monkeypatch.setattr(
         S,
@@ -154,3 +156,36 @@ def test_cds_archive_built_at_exit_and_mapped(cds_dir, spark_home, tmp_path, cap
     )
     assert out.returncode == 0 and "sharing" in out.stderr
     assert "[cds]" not in capfd.readouterr().out + out.stdout
+
+
+def test_get_spark_ships_package_to_workers(tmp_path):
+    """A script run from outside the checkout with PYTHONPATH unset has
+    the package on its driver ``sys.path`` only; after ``get_spark`` a
+    Python worker must import it too (cloudpickle ships closures by
+    reference to it)."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from dataprocessingframework_spark.session import get_spark
+
+spark = get_spark(master="local[1]", shuffle_partitions=1,
+                  extra_conf={{"spark.ui.enabled": "false"}})
+
+
+def probe(batches):
+    import dataprocessingframework_spark  # noqa: F401
+    yield from batches
+
+
+print(spark.range(3).mapInPandas(probe, "id long").count())
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == "3"

@@ -534,7 +534,7 @@ def test_incremental_semantic_ingest_index_backed(spark, tmp_path):
 
 
 def test_incremental_semantic_ingest_sq8_index(spark, tmp_path):
-    """r11: index_sq8=True maintains the gate index SQ8-COMPRESSED
+    """r11: rung='sq8' maintains the gate index SQ8-COMPRESSED
     (codes packed 7-per-bigint) and gates via the two-stage
     compressed path — the accepted set must equal the dir-backed
     float mode EXACTLY (the derived margin is sound for the
@@ -563,23 +563,26 @@ def test_incremental_semantic_ingest_sq8_index(spark, tmp_path):
             src, corpus, ckpt = f"{base}/src", f"{base}/corpus", f"{base}/ckpt"
             if mode == "sq8":
                 clamp_log: list = []
+                stats: dict = {}
                 kw = dict(
                     index_table="t_sem_sq8_idx",
                     index_path=f"{base}/idx",
-                    index_sq8=True,
+                    rung="sq8",
                     clamp_log=clamp_log,
+                    recommend_stats=stats,
                 )
             elif mode == "pq":
                 kw = dict(
                     index_table="t_sem_pq_idx",
                     index_path=f"{base}/idx",
-                    index_pq=True,
+                    rung="pq",
                 )
             elif mode == "prefix":
                 kw = dict(
                     index_table="t_sem_pfx_idx",
                     index_path=f"{base}/idx",
-                    index_prefix_dims=16,
+                    rung="prefix",
+                    prefix_dims=16,
                 )
             else:
                 kw = {}
@@ -616,6 +619,10 @@ def test_incremental_semantic_ingest_sq8_index(spark, tmp_path):
         assert [e["batch_id"] for e in clamp_log] == [0, 1]
         assert all(e["n_rows"] > 0 for e in clamp_log)
         assert clamp_log[0]["rows_clamped"] == 0  # bounds ARE the corpus
+        # an explicit rung still reports the bootstrap recommendation
+        assert stats["active_rung"] == "sq8"
+        assert stats["rung"] == stats["decision"]["rung"]
+        assert stats["signals"]["n_rows"] > 0
         pidx = spark.table("t_sem_pq_idx")
         assert "resid" in pidx.columns and "embedding" not in pidx.columns
         assert sorted(r.vec_id for r in pidx.collect()) == kept["pq"]
@@ -1156,7 +1163,7 @@ def test_incremental_semantic_ingest_sq8_rebuild_on_clamp_drift(
             corpus, ckpt, cents,
             threshold=0.9999, n_probe=2, src_format="parquet",
             impl="jvm", index_table="t_sq8_rebuild",
-            index_path=f"{base}/idx", index_sq8=True,
+            index_path=f"{base}/idx", rung="sq8",
             clamp_log=clamp_log, rebuild_on_clamp_frac=0.05,
         )
 
@@ -1189,7 +1196,7 @@ def test_incremental_semantic_ingest_sq8_rebuild_on_clamp_drift(
 
 
 def test_incremental_semantic_ingest_auto_rung(spark, tmp_path):
-    """r14 (VERDICT r13 item 5): auto_rung picks the index rung at
+    """r14 (VERDICT r13 item 5): rung='auto' picks the index rung at
     BOOTSTRAP from training-free corpus signals. Both corpora here
     are SQ8-hostile (outlier rows stretch the per-dim min/max grid,
     so the derived margin 2Δ/min‖v‖ eats the whole threshold): the
@@ -1249,12 +1256,14 @@ def test_incremental_semantic_ingest_auto_rung(spark, tmp_path):
                 src = f"{base}/src"
                 corpus = f"{base}/corpus"
                 ckpt = f"{base}/ckpt"
-                rung_box = {"prefix_dims": 16}
+                stats: dict = {}
                 kw = (
                     dict(
                         index_table=f"t_autorung_{variant}",
                         index_path=f"{base}/idx",
-                        auto_rung=rung_box,
+                        rung="auto",
+                        prefix_dims=16,
+                        recommend_stats=stats,
                     )
                     if mode == "auto"
                     else {}
@@ -1274,10 +1283,11 @@ def test_incremental_semantic_ingest_auto_rung(spark, tmp_path):
                 ).parquet(src)
                 run()
                 if mode == "auto":
-                    assert rung_box["rung"] == expected[variant], (
-                        variant, rung_box.get("decision"),
+                    assert stats["rung"] == expected[variant], (
+                        variant, stats.get("decision"),
                     )
-                    assert not rung_box["decision"]["viable_sq8"]
+                    assert stats["active_rung"] == expected[variant]
+                    assert not stats["decision"]["viable_sq8"]
                     idx_cols = spark.table(
                         f"t_autorung_{variant}"
                     ).columns
@@ -1289,11 +1299,11 @@ def test_incremental_semantic_ingest_auto_rung(spark, tmp_path):
                 data.filter(F.col("vec_id") >= cut).write.mode(
                     "append"
                 ).parquet(src)
-                # restart with a FRESH auto_rung box: the persisted
+                # restart with a FRESH stats dict: the persisted
                 # index's columns are the rung of record
-                fresh_box = {"prefix_dims": 16}
+                fresh_stats: dict = {}
                 if mode == "auto":
-                    kw = dict(kw, auto_rung=fresh_box)
+                    kw = dict(kw, recommend_stats=fresh_stats)
 
                 def run2():
                     return incremental_semantic_ingest(
@@ -1306,8 +1316,8 @@ def test_incremental_semantic_ingest_auto_rung(spark, tmp_path):
 
                 run2()
                 if mode == "auto":
-                    assert fresh_box["rung"] == expected[variant]
-                    assert "decision" not in fresh_box  # re-detected
+                    assert fresh_stats["rung"] == expected[variant]
+                    assert "decision" not in fresh_stats  # re-detected
                 kept[mode] = sorted(
                     r.vec_id
                     for r in read_corpus(spark, corpus).collect()
@@ -1321,8 +1331,8 @@ def test_incremental_semantic_ingest_auto_rung(spark, tmp_path):
 
 
 def test_auto_rung_validation(spark):
-    """auto_rung needs index_table + prefix_dims and is exclusive
-    with the explicit rung flags."""
+    """rung='auto' needs index_table + prefix_dims, and an unknown rung
+    is refused."""
     import pytest as _pytest
 
     from dataprocessingframework_spark.streaming import (
@@ -1334,19 +1344,16 @@ def test_auto_rung_validation(spark):
         corpus_dir="/nonexistent", checkpoint_dir="/nonexistent",
         centroids=[[1.0]],
     )
-    with _pytest.raises(ValueError, match="auto_rung requires index_table"):
-        incremental_semantic_ingest(**common, auto_rung={"prefix_dims": 8})
-    with _pytest.raises(ValueError, match="exclusive with the explicit"):
-        incremental_semantic_ingest(
-            **common, index_table="t_x", index_sq8=True,
-            auto_rung={"prefix_dims": 8},
-        )
+    with _pytest.raises(ValueError, match="'auto'.*require index_table"):
+        incremental_semantic_ingest(**common, rung="auto", prefix_dims=8)
     with _pytest.raises(ValueError, match="prefix_dims"):
-        incremental_semantic_ingest(**common, index_table="t_x", auto_rung={})
+        incremental_semantic_ingest(**common, index_table="t_x", rung="auto")
+    with _pytest.raises(ValueError, match="unknown rung"):
+        incremental_semantic_ingest(**common, index_table="t_x", rung="sq4")
 
 
 def test_auto_rung_survives_mid_stream_rebalance(spark, tmp_path):
-    """r14 interaction: with auto_rung having picked the PREFIX rung
+    """r14 interaction: with rung='auto' having picked the PREFIX rung
     at bootstrap, a mid-stream auto-rebalance (quantizer split +
     bootstrap-shaped index rebuild) must REBUILD AT THE SAME RUNG —
     the rebuilt index keeps its rest_norm column and persisted
@@ -1385,7 +1392,7 @@ def test_auto_rung_survives_mid_stream_rebalance(spark, tmp_path):
     src, corpus, ckpt = f"{base}/src", f"{base}/corpus", f"{base}/ckpt"
     cents0 = _ivf_centroids(df_of(w1, 0), "vec_id", "embedding", 8, iters=0)
     log: list = []
-    rung_box = {"prefix_dims": d_p}
+    stats: dict = {}
 
     def run():
         return incremental_semantic_ingest(
@@ -1394,7 +1401,7 @@ def test_auto_rung_survives_mid_stream_rebalance(spark, tmp_path):
             threshold=0.95, n_probe=2, src_format="parquet",
             impl="jvm",
             index_table="t_autoreb_idx", index_path=f"{base}/idx",
-            auto_rung=rung_box,
+            rung="auto", prefix_dims=d_p, recommend_stats=stats,
             rebalance_on_imbalance=2.0, rebalance_cell_rows=40,
             rebalance_rounds=4, rebalance_log=log,
         )
@@ -1402,7 +1409,7 @@ def test_auto_rung_survives_mid_stream_rebalance(spark, tmp_path):
     try:
         df_of(w1, 0).write.mode("append").parquet(src)
         run()
-        assert rung_box["rung"] == "prefix", rung_box.get("decision")
+        assert stats["rung"] == "prefix", stats.get("decision")
         assert "rest_norm" in spark.table("t_autoreb_idx").columns
 
         df_of(w2, 1000).write.mode("append").parquet(src)

@@ -46,6 +46,7 @@ from dataprocessingframework_spark.operators.similarity import (  # noqa: E402
     norm,
     semantic_dedup_gate,
 )
+from dataprocessingframework_spark.queries import SCRATCH  # noqa: E402
 from dataprocessingframework_spark.session import get_spark  # noqa: E402
 
 
@@ -158,7 +159,7 @@ def main():
         idx, _ = materialize_ivf_index(
             df, table, centroids=cents, impl="blas",
             num_buckets=16, sq8=True,
-            path=f"/root/repo/.scratch/balsoak_{tag}",
+            path=os.path.join(SCRATCH, f"balsoak_{tag}"),
         )
         bounds = load_sq8_bounds(spark, table)
         got = {
@@ -188,7 +189,7 @@ def main():
         for sfx in ("", "_centroids", "_sq8"):
             spark.sql(f"DROP TABLE IF EXISTS t_balsoak_{tag}{sfx}")
             shutil.rmtree(
-                f"/root/repo/.scratch/balsoak_{tag}{sfx}",
+                os.path.join(SCRATCH, f"balsoak_{tag}{sfx}"),
                 ignore_errors=True,
             )
 

@@ -67,6 +67,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from dataprocessingframework_spark.operators import similarity
+    from dataprocessingframework_spark.queries import SCRATCH
     from dataprocessingframework_spark.session import get_spark
     from dataprocessingframework_spark.sources.compact import (
         _table_location,
@@ -101,7 +102,7 @@ def main() -> None:
         )
         tag = uuid.uuid4().hex[:8]
         t = f"soak_pfx_{tag}"
-        path = f"/root/repo/.scratch/soak_pfx_{tag}"
+        path = os.path.join(SCRATCH, f"soak_pfx_{tag}")
         fidx, _ = similarity.materialize_ivf_index(
             corpus, f"{t}_f", centroids=cents, num_buckets=64,
             path=f"{path}_f",

@@ -83,7 +83,7 @@ def main() -> None:
     )
     tag = uuid.uuid4().hex[:8]
     table = f"soak_gate_{tag}"
-    path = f"/root/repo/.scratch/soak_gate_{tag}"
+    path = os.path.join(q.SCRATCH, f"soak_gate_{tag}")
     idx, _ = similarity.materialize_ivf_index(
         corpus, table, centroids=cents, num_buckets=64,
         path=path, sq8=True,

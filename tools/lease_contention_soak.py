@@ -48,6 +48,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from dataprocessingframework_spark.queries import SCRATCH  # noqa: E402
 from dataprocessingframework_spark.sources import shards_source  # noqa: E402
 from dataprocessingframework_spark.sources.shard_fs import (  # noqa: E402
     get_fs,
@@ -292,7 +293,7 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=24)
     ap.add_argument("--seed", type=int, default=16)
     ap.add_argument(
-        "--root", default="/root/repo/.scratch/lease_contention"
+        "--root", default=os.path.join(SCRATCH, "lease_contention")
     )
     args = ap.parse_args()
 

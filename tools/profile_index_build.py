@@ -50,7 +50,7 @@ def main() -> int:
 
     def build(tag: str):
         table = f"prof_{kind}_{tag}"
-        path = f"/root/repo/.scratch/prof_{kind}_{tag}"
+        path = os.path.join(q.SCRATCH, f"prof_{kind}_{tag}")
         t0 = time.time()
         if kind == "pq":
             similarity.materialize_pq_index(

@@ -39,6 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from dataprocessingframework_spark.queries import SCRATCH  # noqa: E402
 from dataprocessingframework_spark.sources import shards_source  # noqa: E402
 from dataprocessingframework_spark.sources.shard_fs import (  # noqa: E402
     get_fs as real_get_fs,
@@ -144,7 +145,7 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=12)
     ap.add_argument("--seed", type=int, default=14)
     ap.add_argument(
-        "--root", default="/root/repo/.scratch/compact_chaos"
+        "--root", default=os.path.join(SCRATCH, "compact_chaos")
     )
     args = ap.parse_args()
 

@@ -28,6 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from dataprocessingframework_spark.queries import SCRATCH  # noqa: E402
 from dataprocessingframework_spark.session import get_spark  # noqa: E402
 from dataprocessingframework_spark.sources.shards_source import (  # noqa: E402
     register_shards_source,
@@ -50,7 +51,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=200_000)
     ap.add_argument("--media-rows", type=int, default=20_000)
-    ap.add_argument("--workdir", default="/root/repo/.scratch/shards_io")
+    ap.add_argument("--workdir", default=os.path.join(SCRATCH, "shards_io"))
     args = ap.parse_args()
 
     spark = get_spark(app_name="shards-io-soak")

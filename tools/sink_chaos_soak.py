@@ -43,6 +43,7 @@ from pyspark.sql.types import (  # noqa: E402
     StructType,
 )
 
+from dataprocessingframework_spark.queries import SCRATCH  # noqa: E402
 from dataprocessingframework_spark.sources import (  # noqa: E402
     shards_source,
 )
@@ -225,7 +226,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--batches", type=int, default=300)
     ap.add_argument("--seed", type=int, default=14)
-    ap.add_argument("--root", default="/root/repo/.scratch/sink_chaos")
+    ap.add_argument("--root", default=os.path.join(SCRATCH, "sink_chaos"))
     args = ap.parse_args()
 
     shutil.rmtree(args.root, ignore_errors=True)
