@@ -414,39 +414,6 @@ class Dataset:
 
         write_shards(self.df, out_dir, **kwargs)
 
-    def write_shards_native(
-        self,
-        out_dir: str,
-        max_files_in_shard: int = 1000,
-        mode: str = "append",
-        name_col: str = "name",
-        content_col: str = "content",
-        archive_ext: str = "tar",
-        layout: str = "tar",
-    ) -> None:
-        """W1 through the commit-protocol DSv2 writer — same output
-        layout as :meth:`write_shards`, but speculative/retry-safe
-        (temps renamed only after every task succeeds; a failed job
-        leaves the dataset untouched). ``layout='dir'`` writes the
-        sharded-files format (W2: N.csv + loose-file folder N/)
-        through the same commit protocol. See
-        ``sources/shards_source.ShardsWriter``."""
-        from dataprocessingframework_spark.sources.shards_source import (
-            register_shards_source,
-        )
-
-        register_shards_source(self.df.sparkSession)
-        (
-            self.df.write.format("dpf_shards")
-            .option("max_files_in_shard", str(max_files_in_shard))
-            .option("name_col", name_col)
-            .option("content_col", content_col)
-            .option("archive_ext", archive_ext)
-            .option("layout", layout)
-            .mode(mode)
-            .save(out_dir)
-        )
-
     def write_sharded_files(self, out_dir: str, **kwargs) -> None:
         """W2 — see sources/writers.py."""
         from dataprocessingframework_spark.sources.writers import (

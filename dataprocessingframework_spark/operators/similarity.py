@@ -1006,10 +1006,12 @@ def _top_cells(v: Any, cmat: Any, n_probe: int) -> Any:
     """The ``n_probe`` nearest-centroid cell ids of each row of the
     float64 matrix ``v`` as an int32 (rows × n_probe) array, from one
     (rows × n_cells) matmul; ties break to the lower cell id (stable
-    argsort), matching the JVM comparator."""
+    argsort), matching the JVM comparator. ``n_probe`` clamps to
+    n_cells, as the JVM path's ``slice`` does."""
     import numpy as np
 
     sims = v @ cmat.T
+    n_probe = min(n_probe, cmat.shape[0])
     if n_probe == 1:
         return sims.argmax(axis=1).astype("int32")[:, None]
     return np.argsort(-sims, axis=1, kind="stable")[:, :n_probe].astype("int32")
@@ -1034,10 +1036,10 @@ def _assign_cells_blas(
             if len(pdf) == 0:
                 continue
             top = _top_cells(np.stack(pdf[vec_col].values).astype(np.float64), cmat, n_probe)
-            if n_probe == 1:
+            if top.shape[1] == 1:
                 out = pdf.copy()
             else:
-                out = pdf.loc[pdf.index.repeat(n_probe)].reset_index(drop=True)
+                out = pdf.loc[pdf.index.repeat(top.shape[1])].reset_index(drop=True)
             out["cell"] = top.ravel()
             yield out
 

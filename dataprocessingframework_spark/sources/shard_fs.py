@@ -595,8 +595,25 @@ def write_table(path: str, tbl, fmt: str) -> None:
             with fs.open_write(path) as fh:
                 pq.write_table(tbl, fh)
         return
+    import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.csv as pacsv
 
+    # arrow renders an integral float as '17'; write pandas' '17.0' so
+    # csv type inference (no published schema) reads the column back
+    # as floating, not integer
+    for i, f in enumerate(tbl.schema):
+        if pa.types.is_floating(f.type):
+            txt = pc.cast(tbl.column(i), pa.string())
+            tbl = tbl.set_column(
+                i,
+                f.name,
+                pc.if_else(
+                    pc.match_substring_regex(txt, "[.en]"),
+                    txt,
+                    pc.binary_join_element_wise(txt, ".0", ""),
+                ),
+            )
     if local is not None:
         pacsv.write_csv(tbl, local)
     else:

@@ -27,8 +27,8 @@ This DataSource makes the contract explicit to the engine:
   evaluation.
 - **Arrow-native reads**: each partition yields pyarrow RecordBatches
   (csv parsed by ``pyarrow.csv`` in the RFC4180 doublequote dialect
-  pandas ``to_csv`` writes — the exact dialect ``writers.write_shards``
-  produces), so rows take the vectorized path into the JVM.
+  ``ShardsWriter`` emits and pandas ``to_csv`` writes), so rows take
+  the vectorized path into the JVM.
 
 Scale posture: planning state is one small object per shard
 (#shards = rows / max_files_in_shard — metadata-sized), reads are
@@ -167,7 +167,7 @@ def read_published_schema(path: str) -> StructType | None:
     inference pass entirely (VERDICT r14 item 4) — at millions of
     shards, inference is a second full metadata scan with one task
     per file (multiLine). Every repo-owned write path keeps the file
-    current (native + legacy writers, the metadata updater, the
+    current (the batch writer, the metadata updater, the
     stream sink, compaction via the writer); a mixed-schema append
     REMOVES it, so a present file always speaks for every shard —
     the same trust-the-manifest model as the compaction manifest."""
@@ -1359,14 +1359,15 @@ class ShardsWriter(DataSourceArrowWriter):
     """``df.write.format("dpf_shards")`` — commit-protocol-correct
     shard writing.
 
-    The legacy ``writers.write_shards`` (mapInPandas) writes FINAL
-    file names directly from tasks: correct on a happy path, but a
-    speculative duplicate attempt can race the winner on the same
-    ``N.tar``, and a failed job leaves a partial dataset that a
-    subsequent shards scan happily reads. This writer speaks Spark's
-    commit protocol instead — the property that actually matters at
-    1000 executors where task retries and speculation are routine,
-    not exceptional:
+    Tasks that wrote FINAL file names directly would be correct on a
+    happy path only: a speculative duplicate attempt could race the
+    winner on the same ``N.tar``, and a failed job would leave a
+    partial dataset that a subsequent shards scan happily reads. This
+    writer speaks Spark's commit protocol instead — the property that
+    actually matters at 1000 executors where task retries and
+    speculation are routine, not exceptional. The reference-named
+    entries (``writers.write_shards``/``write_sharded_files``) are
+    thin wrappers over it:
 
     - every task attempt writes ATTEMPT-UNIQUE temp names
       (``.{job}-p{pid}-a{attempt}-s{seq}.csv.tmp`` — dot-prefixed and
@@ -1390,9 +1391,9 @@ class ShardsWriter(DataSourceArrowWriter):
     its per-batch write-ahead marker (see ``ShardsStreamWriter``).
 
     ``mode("append")`` numbers new shards after the existing maximum
-    (the same immutable-shards divergence from the reference's
-    in-place last-shard fill as ``writers.write_shards``, see
-    ``_next_shard_index``); ``mode("overwrite")`` clears existing
+    (the immutable-shards divergence from the reference's in-place
+    last-shard fill, see ``_next_shard_index_for``);
+    ``mode("overwrite")`` clears existing
     shard pairs at commit time. Shard size: one shard pair per input
     partition by default (repartition to choose), or roll within a
     task every ``max_files_in_shard`` rows.
@@ -1585,7 +1586,7 @@ class ShardsWriter(DataSourceArrowWriter):
             tmp_csv = f"{prefix}-s{seq}.{self._meta_fmt}.tmp"
             # arrow-native emit (C++) via shard_fs.write_table — csv:
             # RFC4180 doublequote, the exact dialect the reader's
-            # pyarrow parser and the legacy pandas round-trip already
+            # pyarrow parser and pandas-written shards already
             # speak; nulls write as empty (reader:
             # strings_can_be_null=True)
             write_table(
@@ -2164,10 +2165,10 @@ def update_shard_metadata_native(
 ):
     """W4 write-back through the commit protocol (r14): merge
     new/changed metadata columns into the per-shard CSVs, archives
-    untouched — the crash-safe twin of ``writers.update_shard_metadata``
-    (`processors/sharded_processor.py:58-82` semantics), and the only
-    one that runs on object-store paths (all I/O via the shard_fs
-    seam).
+    untouched (`processors/sharded_processor.py:58-82` semantics;
+    ``writers.update_shard_metadata`` is the reference's name for it).
+    Runs on posix and object-store paths alike (all I/O via the
+    shard_fs seam).
 
     Same integrity prepass (validate-all-then-modify,
     `helpers/dataframe_helper.py:139-146`): keys unique on both
@@ -2263,7 +2264,7 @@ def _update_shard_metadata_native_locked(
                 f"update columns {colliding} collide with the reader's"
                 " derived columns on this archive-backed dataset"
                 f" ({content_col!r} and {list(_META_COLS)}) — rename"
-                " them, or rewrite via write_shards_native"
+                " them, or rewrite via write_shards"
             )
     current = (
         spark.read.format("dpf_shards")
@@ -2295,7 +2296,7 @@ def _update_shard_metadata_native_locked(
     # genuinely NEW columns are NULL for non-updated rows by
     # construction. Consequence: an update cannot set an overlap cell
     # to NULL — write a sentinel and post-process, or rewrite via
-    # write_shards_native.
+    # write_shards.
     # broadcast the update side only while it is plausibly executor-
     # memory-sized: new_df can be dataset-sized (update every row),
     # and an unconditional hint there hits Spark's 8 GB broadcast hard
@@ -2697,10 +2698,14 @@ def shard_stats(
 
 
 def _next_shard_index_for(out_dir: str) -> int:
-    """max(existing numeric shard stem) + 1 — append numbering (same
-    contract as writers._next_shard_index, local to avoid an import
-    cycle; cloudpickle ships this module by value, so driver-side
-    helpers must be self-contained too).
+    """max(existing numeric shard stem) + 1 — append numbering, the
+    W1 resume support (`processors/writers/shards_writer.py:92-119`).
+    The reference re-opens the LAST shard and fills it in place before
+    starting new ones; in a distributed writer that would mean
+    concurrent mutation of a live shard, so appends diverge
+    deliberately: existing shards are immutable and new shards number
+    from max(existing)+1, at the cost of at most one under-full shard
+    per append batch.
 
     A live ``_compaction.json`` also RESERVES numbers that may not be
     on disk yet: a crashed mid-rewrite compaction leaves ``pending``

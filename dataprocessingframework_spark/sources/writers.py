@@ -1,27 +1,27 @@
-"""Shards / sharded-files writers (W1-W3).
+"""Shards / sharded-files writers (W1, W2) and the metadata write-back
+(W4): the reference's names as thin entries over the commit-protocol
+``dpf_shards`` sink (``shards_source.ShardsWriter``).
 
 Reference: `processors/writers/shards_writer.py:17-181` streams samples
-single-threaded into numbered ``N.tar`` + ``N.csv`` pairs of
-``max_files_in_shard`` rows. Spark version: compute the target shard
-count, hash-repartition, and let every task write its own shard pair in
-parallel via ``mapInPandas`` (one tar open per task, batches streamed
-through it — the same one-container-per-worker locality the reference
-gets from DataLoader workers).
+single-threaded into numbered ``N.tar`` + ``N.csv`` pairs of at most
+``max_files_in_shard`` rows. Spark version: give every row a dense
+index from one per-partition count, route each block of
+``max_files_in_shard`` consecutive indices to one task, and let the
+sink write attempt-unique temps that only ``commit()`` renames to final
+``N.csv``/``N.tar`` names — so the dataset holds exactly
+⌈n/max_files_in_shard⌉ shards, none over the cap, and a failed job
+leaves nothing behind. The sink's own per-task roll stays the hard cap
+if a recompute shifts the counts.
 
-Shard naming is deterministic from the partition id. On a real cluster
-the open() targets shared storage (the writer only needs a
-filesystem path — s3a/hdfs mounts or fsspec swap in here); nothing is
-ever collected to the driver.
+On a real cluster the targets are shared storage (posix, or an object
+store through the ``shard_fs`` seam); nothing is ever collected to the
+driver but the per-partition counts.
 """
 
 from __future__ import annotations
 
-import io
 import math
-import os
-import tarfile
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -31,72 +31,91 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from dataprocessingframework_spark.sources.shards_source import (
+    SPLIT_COLUMN,
+    _list_shards,
+    _next_shard_index_for,
+    register_shards_source,
+    update_shard_metadata_native,
+)
+from dataprocessingframework_spark.sources.shard_fs import strip_file_scheme
+
 _SUMMARY_SCHEMA = StructType(
     [
-        StructField("split_name", StringType()),
+        StructField(SPLIT_COLUMN, StringType()),
         StructField("rows", LongType()),
     ]
 )
 
+# monotonically_increasing_id(): partition index in the upper 31 bits,
+# record number within the partition in the lower 33
+_RECORD_BITS = 33
+_ROW_ID = "__dpf_row_id"
 
 
-def _next_shard_index(out_dir: str) -> int:
-    """W1 resume support (`processors/writers/shards_writer.py:92-119`):
-    the reference re-opens the LAST shard and fills it in place before
-    starting new ones. In a distributed writer in-place fill would mean
-    concurrent mutation of a live shard, so our append semantics
-    diverge deliberately: existing shards are immutable and new shards
-    number from max(existing)+1. The trade-off is at most one
-    under-full shard per append batch."""
-    mx = -1
-    if os.path.isdir(out_dir):
-        for f in os.listdir(out_dir):
-            stem = f.split(".")[0]
-            if stem.isdigit():
-                mx = max(mx, int(stem))
-    return mx + 1
-
-
-def _purge_existing_shards(out_dir: str) -> None:
-    """A non-append legacy write is an OVERWRITE: mirror the native
-    path's delete-the-old-generation-first rule so stale
-    higher-numbered shards from a previous larger run can't survive
-    under the new authoritative ``_schema.json`` (the new write
-    numbers from 0 and would otherwise leave e.g. ``7.csv`` from an
-    8-shard predecessor to be parsed with the new write's pinned
-    types instead of the inference fallback).
-
-    Like the native overwrite (``shards_source`` writer commit), a
-    leftover compaction manifest is healed-and-cleared FIRST: a
-    done-state ``_compaction.json`` surviving the purge would hide
-    the fresh shards that reuse retired numbers from every reader
-    (r16 review finding). Then numeric-stem files
-    (``N.csv``/``N.tar``) and member dirs (``N/``) go — the
-    published schema file and any foreign files are left to the
-    predrop/publish machinery."""
-    import shutil
-
-    if not os.path.isdir(out_dir):
-        return
-    from dataprocessingframework_spark.sources.shards_source import (
-        heal_compaction,
+def _write_dpf_shards(
+    df: DataFrame,
+    out_dir: str,
+    max_files_in_shard: int,
+    media_col: str | None,
+    name_col: str | None,
+    append: bool,
+    layout: str,
+) -> DataFrame:
+    spark = df.sparkSession
+    register_shards_source(spark)
+    path = strip_file_scheme(out_dir)
+    start = _next_shard_index_for(path) if append else 0
+    staged = df.withColumn(_ROW_ID, F.monotonically_increasing_id())
+    part = F.shiftright(_ROW_ID, _RECORD_BITS).cast("int")
+    counts = dict(staged.groupBy(part).count().collect())
+    if counts:
+        offsets, total = [0] * (max(counts) + 1), 0
+        for p in sorted(counts):
+            offsets[p], total = total, total + counts[p]
+        # dense index = rows in earlier partitions + record number;
+        # a recompute that shifts partitions reads null (one hash
+        # bucket, still capped by the sink's roll) instead of raising
+        dense = F.try_element_at(F.lit(offsets), part + 1) + F.col(
+            _ROW_ID
+        ).bitwiseAND((1 << _RECORD_BITS) - 1)
+        # every block but the last holds exactly max rows, so however
+        # the hash lays blocks onto partitions, rolling each partition
+        # at max rows yields exactly ⌈n/max⌉ shards
+        staged = staged.repartition(
+            math.ceil(total / max_files_in_shard),
+            F.floor(dense / max_files_in_shard),
+        )
+    writer = (
+        staged.drop(_ROW_ID)
+        .write.format("dpf_shards")
+        .option("max_files_in_shard", str(max_files_in_shard))
+        .option("layout", layout)
+        .mode("append" if append else "overwrite")
     )
-
-    heal_compaction(out_dir)
-    for f in os.listdir(out_dir):
-        stem = f.split(".")[0]
-        if not stem.isdigit():
-            continue
-        p = os.path.join(out_dir, f)
-        if os.path.isdir(p):
-            shutil.rmtree(p)
-        else:
-            os.remove(p)
-
-
-def _shard_count(df: DataFrame, max_files_in_shard: int) -> int:
-    n = df.count()
-    return max(1, math.ceil(n / max_files_in_shard))
+    if media_col is None:
+        writer = writer.option("content", "false")
+    else:
+        writer = writer.option("content_col", media_col)
+    if name_col is not None:
+        writer = writer.option("name_col", name_col)
+    writer.save(path)
+    # the summary reads back what the commit published: the shards
+    # numbered from this write's first index on
+    stems, _ = _list_shards(path, "tar", layout)
+    new = [s for s in stems if s.isdigit() and int(s) >= start]
+    if not new:
+        return spark.createDataFrame([], _SUMMARY_SCHEMA)
+    return (
+        spark.read.format("dpf_shards")
+        .schema(StructType([_SUMMARY_SCHEMA[SPLIT_COLUMN]]))
+        .option("content", "false")
+        .option("layout", layout)
+        .load(path)
+        .where(F.col(SPLIT_COLUMN).isin(new))
+        .groupBy(SPLIT_COLUMN)
+        .agg(F.count(F.lit(1)).alias("rows"))
+    )
 
 
 def write_shards(
@@ -109,198 +128,20 @@ def write_shards(
 ) -> DataFrame:
     """W1: write ``N.csv`` (+ ``N.tar`` when media present) shard pairs.
 
-    ``media_col`` holds bytes, ``name_col`` the member basename. With
-    ``media_col=None`` only metadata CSVs are written (csv-only shards).
-    ``append=True`` resumes into an existing dataset dir: new shards
-    continue numbering after the last existing shard (see
-    ``_next_shard_index`` for the deliberate divergence from the
-    reference's in-place last-shard fill). Returns the per-shard
-    summary (split_name, rows) — an action has already materialized
-    the write when this returns.
+    ``media_col`` holds bytes (null bytes write no member and re-read
+    as ``is_correct=false``), ``name_col`` the member basename. With
+    ``media_col=None`` only metadata CSVs are written (csv-only
+    shards). ``append=False`` replaces the dataset; ``append=True``
+    resumes into it: new shards continue numbering after the last
+    existing shard (see ``shards_source._next_shard_index_for`` for
+    the deliberate divergence from the reference's in-place last-shard
+    fill). Returns the per-shard summary (split_name, rows) of the
+    shards this write published — the write itself has already run
+    when this returns.
     """
-    os.makedirs(out_dir, exist_ok=True)
-    start = _next_shard_index(out_dir) if append else 0
-    num = _shard_count(df, max_files_in_shard)
-    meta_cols = [
-        c for c in df.columns if c != media_col
-    ]
-
-    def write_partition(pdfs):
-        pid = None
-        frames: list[pd.DataFrame] = []
-        tar = None
-        tar_path = None
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            if pid is None:
-                from pyspark import TaskContext
-
-                pid = start + TaskContext.get().partitionId()
-                if media_col is not None:
-                    tar_path = os.path.join(out_dir, f"{pid}.tar")
-                    tar = tarfile.open(tar_path, "w")
-            if media_col is not None:
-                for name, data in zip(pdf[name_col], pdf[media_col]):
-                    info = tarfile.TarInfo(name=str(name))
-                    payload = bytes(data)
-                    info.size = len(payload)
-                    info.mtime = 0
-                    tar.addfile(info, io.BytesIO(payload))
-            frames.append(pdf[meta_cols])
-        if pid is None:
-            return
-        if tar is not None:
-            tar.close()
-        meta = pd.concat(frames, ignore_index=True)
-        meta.to_csv(os.path.join(out_dir, f"{pid}.csv"), index=False)
-        yield pd.DataFrame({"split_name": [str(pid)], "rows": [len(meta)]})
-
-    # a schema-changing write drops the published file BEFORE the
-    # write action (mirrors the native predrop-before-renames), for
-    # AUTHORITATIVE writes too: the legacy tasks write FINAL names
-    # directly, so a crash mid-write would otherwise leave new-schema
-    # shards under the old published file forever (the force-publish
-    # below only runs on success)
-    authoritative = not append or start == 0
-    _refuse_unhealed_update_legacy(out_dir, "write_shards")
-    if not append:
-        _purge_existing_shards(out_dir)
-    _predrop_published_schema(df, out_dir, meta_cols)
-    summary = df.repartition(num).mapInPandas(write_partition, _SUMMARY_SCHEMA)
-    # cache so the caller's inspection of the summary doesn't re-write
-    summary = summary.cache()
-    summary.count()
-    # publish-authority rule (shared with the native lifecycle, see
-    # shards_source._publish_after_write): this write speaks for
-    # every shard when it created them all — a fresh write, or an
-    # append that started numbering at 0 (the dir was shardless)
-    _publish_meta_schema(df, out_dir, meta_cols, authoritative=authoritative)
-    return summary
-
-
-def _refuse_unhealed_update_legacy(out_dir: str, what: str) -> None:
-    """The 'writers refuse unhealed updates' contract covers the
-    legacy paths too: their tasks write FINAL names directly, so
-    shards landing around an outstanding update plan would be raced
-    by its heal-forward renames and misdescribed by the heal's
-    recorded-schema publish."""
-    from dataprocessingframework_spark.sources.shards_source import (
-        _refuse_unhealed_update,
-        get_fs,
+    return _write_dpf_shards(
+        df, out_dir, max_files_in_shard, media_col, name_col, append, "tar"
     )
-
-    if os.path.isdir(out_dir):
-        _refuse_unhealed_update(get_fs(out_dir), out_dir, what)
-
-
-def _predrop_published_schema(
-    df: DataFrame, out_dir: str, meta_cols: list[str]
-) -> None:
-    """Pre-write compare-and-drop for legacy appends (key-equal file
-    kept, differing or corrupt removed) — run BEFORE the tasks start
-    writing final names, so no crash point leaves new-schema shards
-    under a stale published file."""
-    from dataprocessingframework_spark.sources.shards_source import (
-        _predrop_schema_if_changed,
-    )
-
-    if os.path.isdir(out_dir):
-        meta_schema = StructType(
-            [f for f in df.schema.fields if f.name in meta_cols]
-        )
-        _predrop_schema_if_changed(out_dir, meta_schema)
-
-
-def _publish_meta_schema(
-    df: DataFrame, out_dir: str, meta_cols: list[str], authoritative: bool
-) -> None:
-    """Legacy writers keep the native lifecycle's ``_schema.json``
-    current too (see ``shards_source.read_published_schema``), so a
-    dataset written by EITHER path cold-reads without the csv
-    inference pass. Same authority rule as the native commit: an
-    authoritative write publishes unconditionally; a plain append
-    never publishes (its pre-write predrop already kept the file
-    truthful; publishing from absence is ambiguous — possibly a
-    crashed predecessor's predrop — repair via
-    ``publish_shard_schema``)."""
-    from dataprocessingframework_spark.sources.shards_source import (
-        _sync_or_drop_schema,
-    )
-
-    if authoritative:
-        meta_schema = StructType(
-            [f for f in df.schema.fields if f.name in meta_cols]
-        )
-        _sync_or_drop_schema(out_dir, meta_schema, force=True)
-
-
-def update_shard_metadata(
-    spark,
-    shard_dir: str,
-    new_df: DataFrame,
-    key_col: str,
-) -> DataFrame:
-    """W4 write-back — merge new/changed metadata columns into the
-    per-shard CSVs, leaving archives untouched
-    (`processors/sharded_processor.py:58-82` +
-    `helpers/dataframe_helper.py:95-153`).
-
-    Integrity prepass BEFORE any file is modified (the reference's
-    validate-all-then-modify discipline, `dataframe_helper.py:139-146`):
-    keys must be unique on both sides and new keys ⊆ existing keys.
-    One applyInPandas group per shard rewrites that shard's CSV.
-    """
-    from dataprocessingframework_spark.sources.reader import (
-        SPLIT_COLUMN,
-        DatasetReader,
-    )
-
-    current = DatasetReader(spark).read_metadata_shards(shard_dir).df
-    # --- integrity prepass (no writes yet)
-    n_cur, n_cur_keys = (
-        current.count(),
-        current.select(key_col).distinct().count(),
-    )
-    if n_cur != n_cur_keys:
-        raise ValueError(f"existing metadata has duplicate keys on {key_col}")
-    n_new, n_new_keys = new_df.count(), new_df.select(key_col).distinct().count()
-    if n_new != n_new_keys:
-        raise ValueError(f"update frame has duplicate keys on {key_col}")
-    unmatched = new_df.join(current, on=key_col, how="left_anti").count()
-    if unmatched:
-        raise ValueError(f"{unmatched} update keys not present in dataset")
-
-    overlap = [
-        c for c in new_df.columns if c != key_col and c in current.columns
-    ]
-    merged = (current.drop(*overlap) if overlap else current).join(
-        F.broadcast(new_df), on=key_col, how="left"
-    )
-
-    meta_cols = [c for c in merged.columns if c != SPLIT_COLUMN]
-
-    def rewrite(key, pdf):
-        split = key[0]
-        pdf[meta_cols].to_csv(
-            os.path.join(shard_dir, f"{split}.csv"), index=False
-        )
-        return pd.DataFrame({"split_name": [split], "rows": [len(pdf)]})
-
-    summary = merged.groupBy(SPLIT_COLUMN).applyInPandas(
-        rewrite, _SUMMARY_SCHEMA
-    )
-    summary = summary.cache()
-    _refuse_unhealed_update_legacy(shard_dir, "update_shard_metadata")
-    # pre-drop a differing published file BEFORE the in-place rewrite
-    # action: this legacy path writes final names directly, so a
-    # crash mid-rewrite must leave readers on the inference fallback,
-    # not a file describing neither the old nor the new schema
-    _predrop_published_schema(merged, shard_dir, meta_cols)
-    summary.count()
-    # every shard csv was rewritten onto the merged schema
-    _publish_meta_schema(merged, shard_dir, meta_cols, authoritative=True)
-    return summary
 
 
 def write_sharded_files(
@@ -313,47 +154,26 @@ def write_sharded_files(
 ) -> DataFrame:
     """W2: same as W1 but loose files in ``N/`` dirs
     (`processors/writers/sharded_files_writer.py:15-160`); ``append``
-    as in W1."""
-    os.makedirs(out_dir, exist_ok=True)
-    start = _next_shard_index(out_dir) if append else 0
-    num = _shard_count(df, max_files_in_shard)
-    meta_cols = [c for c in df.columns if c != media_col]
+    and the summary as in W1."""
+    return _write_dpf_shards(
+        df, out_dir, max_files_in_shard, media_col, name_col, append, "dir"
+    )
 
-    def write_partition(pdfs):
-        pid = None
-        frames: list[pd.DataFrame] = []
-        shard_dir = None
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            if pid is None:
-                from pyspark import TaskContext
 
-                pid = start + TaskContext.get().partitionId()
-                if media_col is not None:
-                    shard_dir = os.path.join(out_dir, str(pid))
-                    os.makedirs(shard_dir, exist_ok=True)
-            if media_col is not None:
-                for name, data in zip(pdf[name_col], pdf[media_col]):
-                    with open(os.path.join(shard_dir, str(name)), "wb") as f:
-                        f.write(bytes(data))
-            frames.append(pdf[meta_cols])
-        if pid is None:
-            return
-        meta = pd.concat(frames, ignore_index=True)
-        meta.to_csv(os.path.join(out_dir, f"{pid}.csv"), index=False)
-        yield pd.DataFrame({"split_name": [str(pid)], "rows": [len(meta)]})
-
-    authoritative = not append or start == 0
-    _refuse_unhealed_update_legacy(out_dir, "write_sharded_files")
-    if not append:
-        _purge_existing_shards(out_dir)
-    _predrop_published_schema(df, out_dir, meta_cols)
-    summary = df.repartition(num).mapInPandas(write_partition, _SUMMARY_SCHEMA)
-    summary = summary.cache()
-    summary.count()
-    _publish_meta_schema(df, out_dir, meta_cols, authoritative=authoritative)
-    return summary
+def update_shard_metadata(
+    spark,
+    shard_dir: str,
+    new_df: DataFrame,
+    key_col: str,
+) -> DataFrame:
+    """W4 write-back — merge new/changed metadata columns into the
+    per-shard CSVs, leaving archives untouched
+    (`processors/sharded_processor.py:58-82` +
+    `helpers/dataframe_helper.py:95-153`). The reference's name for
+    ``shards_source.update_shard_metadata_native``: integrity prepass
+    before any file is modified, crash-safe rename plan, returns the
+    (split_name, rows) summary."""
+    return update_shard_metadata_native(spark, shard_dir, new_df, key_col)
 
 
 def atomic_publish(

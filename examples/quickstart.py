@@ -5,9 +5,10 @@ The end-to-end walk a user of the reference framework runs first
 `examples/example_dataset/` — N.csv + N.tar shard pairs; the dedup is
 the canonical `image_phash_8` drop_duplicates of
 `DPF/pipelines/pipeline_stages.py:50-60`). Everything here is the real
-distributed path: the shard CSVs are one csv glob scan, tar bytes load
-once per (task, shard), filters run as Arrow-batched mapInPandas, and
-the dedup is a single hash-partitioned keep-first.
+distributed path: metadata and tar bytes come from one scan with one
+shard pair per task (each tar opened once), filters run as
+Arrow-batched mapInPandas, the dedup is a single hash-partitioned
+keep-first, and the write goes through the commit protocol.
 
 Run it directly (writes under a temp dir by default):
 
@@ -72,31 +73,26 @@ def run_pipeline(spark, dataset_dir: str, out_dir: str) -> dict:
         ImageInfoFilter,
         PHashFilter,
     )
-    from dataprocessingframework_spark.sources.media import load_shard_bytes
     from dataprocessingframework_spark.sources.reader import DatasetReader
     from dataprocessingframework_spark.sources.writers import write_shards
 
-    # 1. Read the shard pairs: one distributed CSV scan, csv<->tar
-    #    pairing validated, split_name + tar path columns derived.
-    reader = DatasetReader(spark)
-    ds = reader.read(
+    # 1-2. Read the shard pairs with their media bytes: one scan, one
+    #      shard pair per task (each tar opened once), csv<->tar
+    #      pairing validated, split_name derived; unreadable members
+    #      land in is_correct/error instead of failing the job.
+    ds = DatasetReader(spark).read_shards_with_bytes(
         ShardsDatasetConfig(
             path=dataset_dir,
-            name_columns=["image_name"],
             required_columns=["image_name", "caption"],
-        )
+        ),
+        name_col="image_name",
     )
     n_input = ds.count()
-
-    # 2. Attach media bytes: one tar open per (task, shard).
-    with_bytes = ds._wrap(
-        load_shard_bytes(ds.df, "image_name_tar_path", "image_name")
-    )
 
     # 3. Probe images (K1) and fingerprint them (K2) — Arrow-batched
     #    mapInPandas; failed decodes get is_correct=false, never dropped
     #    silently.
-    probed = with_bytes.apply_data_filter(ImageInfoFilter())
+    probed = ds.apply_data_filter(ImageInfoFilter())
     hashed = probed.apply_data_filter(PHashFilter())
 
     # 4. Keep correct images, dedup on the perceptual hash (keep-first
@@ -107,7 +103,9 @@ def run_pipeline(spark, dataset_dir: str, out_dir: str) -> dict:
     )
     n_kept = clean.count()
 
-    # 5. Write the curated dataset back as shard pairs.
+    # 5. Write the curated dataset back as shard pairs (commit
+    #    protocol: temps renamed to N.csv/N.tar only once every task
+    #    succeeded).
     summary = write_shards(
         clean.select(
             "image_name", "caption", "image_phash_8", "content"

@@ -75,18 +75,14 @@ def run_pipeline(spark, dataset_dir: str, out_dir: str) -> dict:
         FrameFilterAdapter,
         VideoInfoFilter,
     )
-    from dataprocessingframework_spark.sources.media import load_shard_bytes
     from dataprocessingframework_spark.sources.reader import DatasetReader
     from dataprocessingframework_spark.sources.writers import write_shards
 
-    ds = DatasetReader(spark).read(
-        ShardsDatasetConfig(path=dataset_dir, name_columns=["video_name"])
+    ds = DatasetReader(spark).read_shards_with_bytes(
+        ShardsDatasetConfig(path=dataset_dir), name_col="video_name"
     )
     n_input = ds.count()
-    with_bytes = ds._wrap(
-        load_shard_bytes(ds.df, "video_name_tar_path", "video_name")
-    )
-    probed = with_bytes.apply_data_filter(VideoInfoFilter())
+    probed = ds.apply_data_filter(VideoInfoFilter())
     hashed = probed.apply_data_filter(
         FrameFilterAdapter(PHashFilter(), position=0.5)
     )

@@ -445,6 +445,37 @@ def test_ivf_topk_reuses_supplied_centroids(spark):
     )
 
 
+def test_ivf_topk_n_probe_above_n_cells_blas_matches_jvm(spark):
+    """``n_probe > n_cells`` probes every cell once on both impls: the
+    'blas' assignment clamps like the JVM path's ``slice`` instead of
+    repeating each row n_probe times against n_cells cell ids."""
+    import numpy as np
+
+    from dataprocessingframework_spark.operators.similarity import (
+        _ivf_centroids,
+        ivf_topk,
+    )
+
+    rng = np.random.RandomState(5)
+    vecs = rng.randn(12, 4)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in vecs[i]]) for i in range(12)],
+        schema="vec_id long, embedding array<float>",
+    )
+    qs = df.filter("vec_id < 3")
+    cents = _ivf_centroids(df, "vec_id", "embedding", 2, 1, impl="blas")
+    def rows(n_probe, impl):
+        out = ivf_topk(
+            df, qs, k=2, n_cells=2, n_probe=n_probe, impl=impl,
+            centroids=cents,
+        )
+        return sorted((r.q_id, r.nbr_id, round(r.cos, 6)) for r in out.collect())
+
+    jvm = rows(4, "jvm")
+    assert rows(4, "blas") == jvm and len(jvm) == 6
+    assert rows(2, "blas") == jvm
+
+
 @pytest.mark.parametrize(
     "cols, kwargs, match",
     [

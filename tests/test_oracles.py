@@ -1,4 +1,4 @@
-"""The semantic-gate, lexical near-dup, ANN top-k and streaming
+"""The semantic-gate, lexical near-dup, ANN top-k, streaming and shards
 families of the query registry, checked against their DuckDB oracles in
 the regular test run.
 
@@ -77,6 +77,20 @@ STREAM_ORACLES = [
 ]
 
 
+# the shards writers, the commit-protocol sink and its lifecycle ops
+SHARDS_ORACLES = [
+    "w1_roundtrip_shards",
+    "w_shards_native_roundtrip",
+    "w_shardedfiles_native_roundtrip",
+    "w_shards_objectstore_roundtrip",
+    "w_shards_parquet_meta_roundtrip",
+    "w_shards_meta_jvm",
+    "w_shard_stats",
+    "w_shards_compact",
+    "w_update_metadata_native",
+]
+
+
 @pytest.fixture(scope="module")
 def oracle_con(sf_dir):
     con = oracle_connection(sf_dir)
@@ -110,4 +124,9 @@ def test_ann_query_matches_oracle(spark, sf_dir, oracle_con, name):
 
 @pytest.mark.parametrize("name", STREAM_ORACLES)
 def test_stream_query_matches_oracle(spark, sf_dir, oracle_con, name):
+    _check(spark, sf_dir, oracle_con, name)
+
+
+@pytest.mark.parametrize("name", SHARDS_ORACLES)
+def test_shards_query_matches_oracle(spark, sf_dir, oracle_con, name):
     _check(spark, sf_dir, oracle_con, name)

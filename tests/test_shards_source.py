@@ -673,18 +673,107 @@ def test_overwrite_heals_leftover_compaction_manifest(spark, tmp_path):
     assert spark.read.format("dpf_shards").load(out).count() == 6
 
 
-def test_dataset_write_shards_native(spark, tmp_path):
-    """The Dataset-level convenience routes through the DSv2 writer
-    with the same layout contract as write_shards."""
+def test_dataset_write_shards(spark, tmp_path):
+    """The Dataset-level entry routes through the commit-protocol
+    writer with the same layout contract as write_shards."""
     from dataprocessingframework_spark.dataset import Dataset
 
     out = str(tmp_path / "native_ds")
     ds = Dataset(_mk_media_df(spark, 12).repartition(1))
-    ds.write_shards_native(out, max_files_in_shard=6)
+    ds.write_shards(
+        out, max_files_in_shard=6, media_col="content", name_col="name"
+    )
     assert sorted(f for f in os.listdir(out) if f.endswith(".csv")) == [
         "0.csv", "1.csv",
     ]
     assert spark.read.format("dpf_shards").load(out).count() == 12
+
+
+def _write_via(entry, df, out, **kwargs):
+    from dataprocessingframework_spark.dataset import Dataset
+    from dataprocessingframework_spark.sources import writers
+
+    owner, name = entry.split(".")
+    if owner == "Dataset":
+        getattr(Dataset(df), name)(out, **kwargs)
+    else:
+        getattr(writers, name)(df, out, **kwargs)
+
+
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "writers.write_shards",
+        "writers.write_sharded_files",
+        "Dataset.write_shards",
+        "Dataset.write_sharded_files",
+    ],
+)
+def test_public_write_names_cap_shards_and_survive_null_media(
+    spark, tmp_path, entry
+):
+    """Every public write name keeps DPF's layout — exactly
+    ⌈n/max_files_in_shard⌉ shards, none over the cap, even when the
+    input partitions do not divide evenly — and the crash contract: a
+    null media value writes no member (re-read as is_correct=false)
+    instead of failing a task that already wrote final names, so no
+    archive is left without its csv."""
+    import csv
+
+    from dataprocessingframework_spark.configs import (
+        ShardedFilesDatasetConfig,
+    )
+
+    dir_layout = entry.endswith("sharded_files")
+    kw = {"media_col": "data", "name_col": "name"}
+
+    def shard_rows(out):
+        rows = {}
+        for f in os.listdir(out):
+            if f.endswith(".csv"):
+                with open(os.path.join(out, f), newline="") as fh:
+                    rows[f[:-4]] = sum(1 for _ in csv.reader(fh)) - 1
+        return rows
+
+    big = spark.range(0, 1000, 1, 3).selectExpr(
+        "concat('f', id, '.bin') AS name",
+        "id",
+        "cast(concat('x', id) AS binary) AS data",
+    )
+    out = str(tmp_path / "cap")
+    _write_via(entry, big, out, max_files_in_shard=50, **kw)
+    rows = shard_rows(out)
+    assert len(rows) == 20 and sum(rows.values()) == 1000
+    assert max(rows.values()) <= 50, sorted(rows.values())
+
+    nulls = spark.range(0, 40, 1, 2).selectExpr(
+        "concat('f', id, '.bin') AS name",
+        "id",
+        "CASE WHEN id = 7 THEN NULL"
+        " ELSE cast(concat('x', id) AS binary) END AS data",
+    )
+    out = str(tmp_path / "nulls")
+    _write_via(entry, nulls, out, max_files_in_shard=6, **kw)
+    rows = shard_rows(out)
+    assert len(rows) == 7 and max(rows.values()) <= 6
+    archives = {
+        f.split(".")[0]
+        for f in os.listdir(out)
+        if f.split(".")[0].isdigit() and not f.endswith(".csv")
+    }
+    assert archives <= set(rows), "archive without its csv"
+    assert not [f for f in os.listdir(out) if f.startswith(".")]
+    rd = DatasetReader(spark)
+    back = (
+        rd.read_sharded_files_with_bytes(ShardedFilesDatasetConfig(path=out))
+        if dir_layout
+        else rd.read_shards_with_bytes(ShardsDatasetConfig(path=out))
+    ).df
+    assert back.count() == 40
+    bad = back.where("NOT is_correct").collect()
+    assert [r.id for r in bad] == [7]
+    good = back.where("is_correct").collect()
+    assert all(bytes(r.content) == f"x{r.id}".encode() for r in good)
 
 
 def test_dsv2_writer_randomized_roundtrip_invariants(spark, tmp_path):
@@ -1353,7 +1442,7 @@ def test_schema_file_lifecycle_append_overwrite_and_legacy(
     """_schema.json stays truthful across the write paths: same-schema
     append keeps it, a MIXED-schema append deletes it (inference is
     then the only honest source), overwrite republishes, and the
-    legacy mapInPandas writer maintains it too."""
+    reference-named ``writers.write_shards`` entry maintains it too."""
     import json
 
     from dataprocessingframework_spark.sources.shards_source import (
@@ -1395,7 +1484,7 @@ def test_schema_file_lifecycle_append_overwrite_and_legacy(
         fh.write("{not json")
     assert read_published_schema(out) is None
 
-    # legacy writer publishes too
+    # the reference-named entry publishes too
     legacy = str(tmp_path / "legacy")
     write_shards(
         _mk_media_df(spark, 6),

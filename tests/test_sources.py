@@ -199,7 +199,7 @@ def test_write_shards_append_resumes_numbering(spark, tmp_path):
     """W1 resume (`processors/writers/shards_writer.py:92-119`):
     append=True continues shard numbering after the existing max;
     existing shards are immutable (deliberate divergence from the
-    reference's in-place last-shard fill — see _next_shard_index)."""
+    reference's in-place last-shard fill — see _next_shard_index_for)."""
     import os
 
     from dataprocessingframework_spark.sources.writers import write_shards
@@ -226,7 +226,7 @@ def test_write_shards_append_resumes_numbering(spark, tmp_path):
 def test_write_shards_overwrite_purges_stale_higher_shards(
     spark, tmp_path
 ):
-    """Non-append legacy writes are OVERWRITES (ADVICE r15): a smaller
+    """Non-append writes are OVERWRITES (ADVICE r15): a smaller
     re-write into a populated dir must not leave higher-numbered
     shards from the previous larger run alive under the new
     force-published authoritative ``_schema.json`` — readers would

@@ -90,8 +90,9 @@ The first walkthrough a user of the reference framework runs
 dataset (`N.csv` + `N.tar` pairs), inspect it, deduplicate on an
 image perceptual hash, edit metadata columns, and write the curated
 result back as shards. Here every stage is the distributed Spark
-path — the shard CSVs are one glob scan, tar bytes load once per
-(task, shard), and the dedup is one hash-partitioned keep-first.
+path — metadata and tar bytes come from one scan with one shard pair
+per task, the dedup is one hash-partitioned keep-first, and the write
+goes through the commit protocol.
 """),
     code(SETUP),
     md("## Build and read the example dataset"),
@@ -105,8 +106,8 @@ dataset_dir = quickstart.build_example_dataset(
 from dataprocessingframework_spark.configs import ShardsDatasetConfig
 from dataprocessingframework_spark.sources.reader import DatasetReader
 
-ds = DatasetReader(spark).read(
-    ShardsDatasetConfig(path=dataset_dir, name_columns=["image_name"])
+ds = DatasetReader(spark).read_shards_with_bytes(
+    ShardsDatasetConfig(path=dataset_dir), name_col="image_name"
 )
 ds.df.select("image_name", "caption", "split_name").show(truncate=False)
 '''),
@@ -119,8 +120,8 @@ profile_table(ds.df.select("image_name", "caption")).show(truncate=False)
     md("""
 ## Removing duplicates
 
-Attach media bytes (one tar open per task and shard), probe with the
-image-info filter, fingerprint with the perceptual hash
+Probe the media bytes with the image-info filter, fingerprint with
+the perceptual hash
 (Arrow-batched `mapInPandas`), then keep the first row per
 `image_phash_8` — the reference's canonical dedup
 (`pipelines/pipeline_stages.py:50-60`) as a single-shuffle
@@ -131,13 +132,9 @@ from dataprocessingframework_spark.filters.kernels import (
     ImageInfoFilter,
     PHashFilter,
 )
-from dataprocessingframework_spark.sources.media import load_shard_bytes
 
-with_bytes = ds._wrap(
-    load_shard_bytes(ds.df, "image_name_tar_path", "image_name")
-)
 hashed = (
-    with_bytes.apply_data_filter(ImageInfoFilter())
+    ds.apply_data_filter(ImageInfoFilter())
     .apply_data_filter(PHashFilter())
 )
 clean = hashed.filter("img_is_correct = true").drop_duplicates_keep_first(
@@ -314,14 +311,10 @@ dataset_dir = video_curation.build_example_dataset(
 )
 
 from dataprocessingframework_spark.configs import ShardsDatasetConfig
-from dataprocessingframework_spark.sources.media import load_shard_bytes
 from dataprocessingframework_spark.sources.reader import DatasetReader
 
-ds = DatasetReader(spark).read(
-    ShardsDatasetConfig(path=dataset_dir, name_columns=["video_name"])
-)
-with_bytes = ds._wrap(
-    load_shard_bytes(ds.df, "video_name_tar_path", "video_name")
+with_bytes = DatasetReader(spark).read_shards_with_bytes(
+    ShardsDatasetConfig(path=dataset_dir), name_col="video_name"
 )
 '''),
     md("## Probe container info (K3)"),
